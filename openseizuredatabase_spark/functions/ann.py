@@ -14,8 +14,6 @@ Three tiers, ordered by scale:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,6 +23,7 @@ from pyspark.ml.functions import array_to_vector
 
 from openseizuredatabase_spark.functions.literal import literal_df
 from openseizuredatabase_spark.functions.vectors import cosine
+from openseizuredatabase_spark.sources.width import spread_cpu_dense
 
 
 def build_ivf(
@@ -117,43 +116,6 @@ def _np_length_groups(pdf, vec_field):
         yield int(L), mat, idx
 
 
-def _spread_cpu_dense(df, spark, split_bytes: int = 262_144):
-    """Widen a too-narrow scan feeding CPU-dense vectorized map passes
-    (Lloyd rounds, PQ encode) — guide §2.5 input parallelism.
-
-    Unlike ``tables.spread_small_scan`` (which jumps straight to the
-    full core count for map work whose per-row cost dwarfs task
-    overhead), the width here scales with the measured scan BYTES at a
-    CPU-dense split size: the numpy passes run several times per call
-    (one per Lloyd round + the final assignment), so 32 near-empty
-    Arrow tasks per pass cost more than they parallelize on a
-    row-thousands local table (measured: blanket full-width spread
-    added 0.5-1.4 s to v8/v10/v18/t24 at sf0.1), while a
-    row-hundreds-of-thousands stress table needs the width (measured:
-    v8 37 s -> 18 s at x100 where ONE 2.9 MB file fed every pass).
-    A lake-scale scan already plans >= a full-width split count and is
-    left untouched."""
-    target = spark.sparkContext.defaultParallelism
-    try:
-        nbytes = sum(
-            os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
-            for p in df.inputFiles()
-        )
-    except Exception:
-        return df
-    max_pb = int(
-        str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        ).rstrip("b")
-    )
-    if nbytes >= target * max_pb:
-        return df  # the scan itself is already cluster-wide
-    want = int(min(target, nbytes // split_bytes))
-    if want <= 1:
-        return df
-    return df.repartition(want)
-
-
 def kmeans_exact(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -208,14 +170,9 @@ def kmeans_exact(
         ).alias("__v"),
     ).filter(F.size("__v") > 0)
     # every Lloyd round and the final assignment are CPU-dense numpy
-    # map passes over vecs — if the source scan is narrower than the
-    # cores (one small parquet file locally / in the replica stress),
-    # the whole clustering runs single-task at ANY core count
-    # (round-12, guide §2.5: measured on the x100 replica — one 2.9 MB
-    # file, v8 37 s at 8 AND 32 cores). Width scales with measured
-    # scan bytes (no-op at lake scale); results are layout-invariant
-    # by the operator's integer-arithmetic contract.
-    vecs = _spread_cpu_dense(vecs, spark)
+    # map passes over vecs: widen a narrow source scan (results are
+    # layout-invariant by the integer-arithmetic contract)
+    vecs = spread_cpu_dense(vecs, spark)
     # vecs feeds the seed collect, every Lloyd round and the final
     # assignment; pin it so each pass reuses one materialized scan
     vecs = vecs.localCheckpoint(eager=False)
@@ -473,12 +430,9 @@ def pq_train_encode(
         ).filter(F.size("__v") > 0)
 
     # vecs feeds the final encode (and, default path, every Lloyd
-    # round); pin it so each pass reuses one materialized scan. The
-    # spread mirrors kmeans_exact: the encode/training passes are
-    # CPU-dense numpy map work that otherwise runs at the width of a
-    # small source scan (guide §2.5; no-op at lake scale,
-    # layout-invariant results by the integer contract).
-    vecs = _spread_cpu_dense(to_vecs(emb), spark).localCheckpoint(
+    # round); pin it so each pass reuses one materialized scan, widened
+    # as in kmeans_exact for the CPU-dense encode/training passes.
+    vecs = spread_cpu_dense(to_vecs(emb), spark).localCheckpoint(
         eager=False
     )
     if train_df is None:
@@ -487,7 +441,7 @@ def pq_train_encode(
         # production scale path (the t24 sampled-train discipline):
         # codebook training is the n·k_sub·d term — bound it to a
         # sample; the full corpus pays only the single encode pass below
-        vt = _spread_cpu_dense(to_vecs(train_df), spark).localCheckpoint(
+        vt = spread_cpu_dense(to_vecs(train_df), spark).localCheckpoint(
             eager=False
         )
 

@@ -71,3 +71,14 @@ def literal_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.sql(
         "SELECT * FROM VALUES " + ", ".join(rendered) + f" AS t({names})"
     )
+
+
+def rows_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-held result rows as a DataFrame: a ``literal_df`` VALUES
+    relation up to 20k rows (no job), ``createDataFrame`` above that,
+    where parse and plan time of the SQL text would grow with every
+    row, and for no rows."""
+    rows = list(rows)
+    if 0 < len(rows) <= 20_000:
+        return literal_df(spark, rows, ddl)
+    return spark.createDataFrame(rows, ddl)

@@ -24,7 +24,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from openseizuredatabase_spark.functions.hashing import md5_long, seeded_md5_long
+from openseizuredatabase_spark.functions.literal import rows_frame
 from openseizuredatabase_spark.functions.text import fingerprint, tokens
+from openseizuredatabase_spark.sources.width import rows_width
 
 
 def bucket_start_epoch(ts: Column, bucket_secs: int) -> Column:
@@ -527,21 +529,10 @@ def _driver_cc_labels(edge_rows) -> dict:
 
 
 def _labels_frame(spark, labels: dict, id_ddl: str) -> DataFrame:
-    """(id, comp) frame from a driver-held label dict. Small label sets
-    render as a VALUES LocalRelation (functions/literal.py — no RDD
-    job, broadcasts as a literal); larger ones (only reachable near the
-    collect cap, e.g. replica stress runs) take the regular
-    createDataFrame path, whose one parallelize job is noise at that
-    size."""
-    from openseizuredatabase_spark.functions.literal import literal_df
-
-    rows = sorted(labels.items())
-    ddl = f"id {id_ddl}, comp {id_ddl}"
-    if not rows:
-        return spark.createDataFrame([], ddl)
-    if len(rows) <= 20_000:
-        return literal_df(spark, rows, ddl)
-    return spark.createDataFrame(rows, ddl)
+    """(id, comp) frame from a driver-held label dict."""
+    return rows_frame(
+        spark, sorted(labels.items()), f"id {id_ddl}, comp {id_ddl}"
+    )
 
 
 def connected_components(
@@ -619,10 +610,7 @@ def connected_components(
     )
     # materialize the cache once up front (concurrent AQE stage jobs
     # otherwise race on the uncomputed blocks) and size the loop from
-    # the measured edge count — the integer_pagerank width rule
-    sess_w = int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    # the measured edge count by the rows rule (sources/width.py)
     n_edges = edges.count()
     if n_edges <= _CC_DRIVER_EDGE_CAP:
         # the symmetrized distinct edge list mentions every node on the
@@ -635,7 +623,7 @@ def connected_components(
             labels,
             pairs.schema[id_a].dataType.simpleString(),
         )
-    loop_w = max(1, min(sess_w, n_edges // 50_000))
+    loop_w = rows_width(pairs.sparkSession, n_edges)
     edges = edges.coalesce(loop_w)
     labels = (
         edges.select("src").distinct().withColumn("comp", F.col("src"))
@@ -741,17 +729,9 @@ def _cc_star_contraction(
     n_prev, chk_prev = census(e)
     if n_prev <= _CC_DRIVER_EDGE_CAP:
         return driver_finish(e)
-    # scale-adaptive loop width (the integer_pagerank pattern): the
-    # census already measured the edge count, so derive how many
-    # partitions the per-round window/distinct passes deserve — a tiny
-    # graph runs each round in one task instead of a session-wide
-    # shuffle, a lake-scale graph keeps full parallelism. coalesce on
-    # a pinned frame is narrow (no shuffle).
-    sess_w = int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    loop_w = lambda n: max(1, min(sess_w, n // 50_000))
-    e = e.coalesce(loop_w(n_prev))
+    # loop width by the rows rule from the census count; coalesce on a
+    # pinned frame is narrow (no shuffle)
+    e = e.coalesce(rows_width(pairs.sparkSession, n_prev))
     for _ in range(max_iter):
         # large-star: symmetric neighborhoods; every strictly-larger
         # neighbor of u attaches to min(N(u) ∪ {u})
@@ -799,7 +779,7 @@ def _cc_star_contraction(
             # contraction brought the edge set under the cap: finish on
             # the driver instead of paying the remaining rounds
             return driver_finish(e2)
-        e2 = e2.coalesce(loop_w(n_now))
+        e2 = e2.coalesce(rows_width(pairs.sparkSession, n_now))
         if n_now == n_prev and chk_now == chk_prev:
             # count+checksum equal is necessary, not sufficient —
             # confirm exact edge-set equality (both already canonical

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openseizuredatabase_spark.sources.width import rows_width
+
 
 def integer_pagerank(
     edges: DataFrame,
@@ -46,11 +48,8 @@ def integer_pagerank(
     # shingle pair join); wout, the join below, and every power
     # iteration all re-execute it unless it is pinned ONCE up front
     # (the t41 lesson, SCALE.md session 4b). Checkpointing pins the
-    # pre-AQE shuffle partitioning, so re-derive the loop parallelism
-    # from the materialized edge count (what AQE's coalescer would have
-    # done inside a single job): tiny graphs run the per-iteration
-    # joins in one task instead of a full-width shuffle per round, big
-    # graphs keep the cluster-wide layout.
+    # pre-AQE shuffle partitioning, so re-derive the loop width from
+    # the materialized edge count by the rows rule (sources/width.py).
     from openseizuredatabase_spark.lineage import pin
 
     # lazy pin whose first action IS the width census (one
@@ -58,9 +57,7 @@ def integer_pagerank(
     # round-12, the CC census pattern)
     edges = pin(edges)
     spark = edges.sparkSession
-    n_edges = edges.count()
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_part = max(1, min(width, n_edges // 50_000))
+    n_part = rows_width(spark, edges.count())
     edges = edges.coalesce(n_part)
     wout = edges.groupBy("u").agg(F.sum("w").cast("long").alias("wu"))
     e = edges.join(wout, "u")
@@ -131,15 +128,10 @@ def hits_scores(
 
     # lazy pin whose first action IS the width census (one
     # materialization job instead of eager-checkpoint + count = two —
-    # round-12, the CC census pattern); integer_pagerank's width rule:
-    # loop parallelism from the measured edge count, so small graphs
-    # run each half-step in one task and big graphs keep the
-    # session-wide layout
+    # round-12, the CC census pattern); loop width by the rows rule
     edges = pin(edges)
     spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_part = max(1, min(width, edges.count() // 50_000))
-    edges = edges.coalesce(n_part)
+    edges = edges.coalesce(rows_width(spark, edges.count()))
 
     def renorm(raw: DataFrame, col: str) -> DataFrame:
         m = raw.agg(F.max(col).alias("m"))

@@ -38,11 +38,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import spread_small_scan
 
 
 @dataclass

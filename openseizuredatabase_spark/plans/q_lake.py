@@ -28,11 +28,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import rows_width
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -2384,14 +2381,11 @@ def d15_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
     )
     base = tempfile.mkdtemp(prefix="d15_lake_")
-    # write width from footer metadata (a local read, no job): the
+    # write width by the rows rule over footer metadata (no job): the
     # one-file-per-leaf invariant only needs each partition VALUE to
-    # land in one task, which any hash width preserves — so a small
-    # input writes through a few tasks instead of a session-wide
-    # exchange, and a lake-scale input keeps the cluster width
+    # land in one task, which any hash width preserves
     n_rows, _ = tables.table_meta(sf_dir, "events", spark)
-    sess_w = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    w = max(1, min(sess_w, n_rows // 50_000))
+    w = rows_width(spark, n_rows)
     (
         ev.filter(F.col("event_id") % 2 == 0)
         .repartition(w, F.col("d"))

@@ -29,11 +29,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import cores
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -56,7 +53,7 @@ def _gen_spread(ids: DataFrame) -> DataFrame:
     otherwise runs the whole fixture codec path — JPEG/PNG/GIF/WAV
     encode, container mux, decode, per-frame hashing — in ONE task.
     The exchange ships a few hundred id rows (free at any scale); on a
-    cluster the width is defaultParallelism, not a local constant.
+    cluster the width is the core count, not a local constant.
 
     Boundary (measured in the round-11 final-window A/B): only worth it
     where the per-item codec chain is heavy (the JPEG/video family —
@@ -64,9 +61,7 @@ def _gen_spread(ids: DataFrame) -> DataFrame:
     (WAV / single-image decode: m23/m34/m36/m41/m47) the extra exchange
     plus 32-way Python-worker fan-out COST 0.4-1.3 s — those call sites
     stay on the plain 1-task chain."""
-    return ids.repartition(
-        ids.sparkSession.sparkContext.defaultParallelism
-    )
+    return ids.repartition(cores(ids.sparkSession))
 
 
 

@@ -29,11 +29,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import cores, rows_width, session_width, stream_width
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -736,61 +733,6 @@ def a5_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_ann.py.
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_width(spark: SparkSession, sf_dir: str, table: str = "events"):
-    """Scale the streaming state-store partition count to the stream's
-    measured input size for the duration of one availableNow run.
-
-    A stateful streaming operator keeps one state store per shuffle
-    partition and commits every store every micro-batch; with the
-    session's cluster-wide width, a small replay pays 32 state commits
-    x N operators per batch of almost pure file latency (measured on
-    s23: 58-95 s of summed commit time per batch against ~66k state
-    rows). The width is derived from the input's parquet row-count
-    metadata — the same measured-size rule as integer_pagerank — so a
-    lake-scale stream keeps the session width (conf-driven on a real
-    cluster) and a small replay collapses to a handful of stores. The
-    session conf is restored on exit; state partition count affects
-    layout only, never result membership (the oracle re-verifies).
-    """
-    import pyarrow.parquet as pq
-
-    from openseizuredatabase_spark.sources.tables import local_parquet_files
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    files = local_parquet_files(src)
-    if files is None:
-        # non-local URI (object store / HDFS): no local footer to read,
-        # and serial driver-side remote footer reads would be their own
-        # bottleneck — keep the session width, which on a real cluster
-        # is the conf-driven production value (round-12, guide §6)
-        yield
-        return
-    # bounded footer sample: the width decision only needs the row
-    # count's magnitude, so cap the serial driver-side reads and
-    # extrapolate by file count (width-only — never feeds semantics)
-    cap = 64
-    if len(files) > cap:
-        step = len(files) / cap
-        sample = [files[int(i * step)] for i in range(cap)]
-        n = int(
-            sum(pq.ParquetFile(f).metadata.num_rows for f in sample)
-            * (len(files) / cap)
-        )
-    else:
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    sess = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    w = max(1, min(int(sess), n // 50_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess)
-
-
 def _stream_events(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
     """readStream over the events parquet with ``ts`` normalized to
     TimestampType, whatever the writer's physical encoding.
@@ -899,7 +841,7 @@ def s10_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _stream_events(spark, sf_dir, "s10_events_")
     out = session_clusters(stream, "ts", ["user_id"], gap="30 minutes")
     name = f"s10_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -1159,7 +1101,7 @@ def s11_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _stream_events(spark, sf_dir, "s11_events_")
     out = windowed_counts(stream, "ts", ["event_type"], window_duration="1 day")
     name = f"s11_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -1199,7 +1141,7 @@ def s13_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _stream_events(spark, sf_dir, "s13_events_")
     out = streaming_distinct(stream, "ts", ["user_id", "event_type"])
     name = f"s13_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -1346,7 +1288,7 @@ def s12_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
     )
     name = f"s12_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -1548,7 +1490,7 @@ def s15_streaming_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         OsdSettings(sample_period=5, warn_time=5, alarm_time=10),
     )
     name = f"s15_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -1798,7 +1740,7 @@ def s16_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("err_ts") - F.unix_micros("clk_ts")).alias("gap_us"),
     )
     name = f"s16_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -2269,7 +2211,7 @@ def s17_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", ["event_type"], window_duration="2 days", slide="1 day"
     )
     name = f"s17_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -2342,7 +2284,7 @@ def s20_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"s20_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -2435,7 +2377,7 @@ def s22_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
     )
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             stream.writeStream.foreachBatch(upsert)
             .option(
@@ -2613,7 +2555,7 @@ def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, dim, "ts", "user_id", ["segment"], window_duration="1 day"
     )
     name = f"s18_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -2948,7 +2890,7 @@ def s19_streaming_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_purchases"))
     )
     name = f"s19_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             joined.writeStream.outputMode("complete")
             .format("memory")
@@ -3230,9 +3172,7 @@ def j12_lev_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the CPU-dense pair-verify join across cores (see
     # q_shared._ham_candidates — byte-based AQE coalescing otherwise
     # runs the whole levenshtein verify stage on one task)
-    k = k.repartition(
-        spark.sparkContext.defaultParallelism, "blk", "cls", "val"
-    )
+    k = k.repartition(cores(spark), "blk", "cls", "val")
     ka, kb = k.alias("ka"), k.alias("kb")
     cand = (
         ka.join(
@@ -3529,8 +3469,7 @@ def _copart_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         .select("e.u", "e.v")
         .distinct()
     )
-    sess_w = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = edges.coalesce(max(1, min(sess_w, edges.count() // 50_000)))
+    edges = edges.coalesce(rows_width(spark, edges.count()))
     return li, edges
 
 
@@ -4476,7 +4415,7 @@ def s23_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="leftOuter",
     )
     name = f"s23_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             j.writeStream.outputMode("append")
             .format("memory")
@@ -4554,8 +4493,7 @@ def j19_butterfly_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_edges = e.count()  # the pin's materialization action
-    sess_w = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = e.repartition(sess_w, "p")
+    e = e.repartition(session_width(spark), "p")
     deg = e.groupBy("p").agg(F.count(F.lit(1)).alias("d"))
     a, b = e.alias("a"), e.alias("b")
     pairs = (
@@ -5054,7 +4992,7 @@ def s25_streaming_merge_grouping(
         )
     )
     name = f"s25_{uuid.uuid4().hex[:8]}"
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")

@@ -25,11 +25,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import cores
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -282,9 +279,7 @@ def _ham_candidates(c: DataFrame, max_dist: int) -> DataFrame:
     block key anyway, so the plan shape is unchanged — only the
     partition COUNT is pinned to parallelism instead of bytes."""
     k = _pigeonhole_keys(c)
-    k = k.repartition(
-        c.sparkSession.sparkContext.defaultParallelism, "blk", "cls", "val"
-    )
+    k = k.repartition(cores(c.sparkSession), "blk", "cls", "val")
     ka, kb = k.alias("ka"), k.alias("kb")
     cand = (
         ka.join(

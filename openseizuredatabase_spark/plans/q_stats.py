@@ -18,7 +18,7 @@ from openseizuredatabase_spark.operators import filters as filter_ops
 from openseizuredatabase_spark.operators import joins as join_ops
 from openseizuredatabase_spark.operators import splits as split_ops
 from openseizuredatabase_spark.operators import windows as window_ops
-from openseizuredatabase_spark.functions.literal import literal_df
+from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
 from openseizuredatabase_spark.functions import text as text_fns
 from openseizuredatabase_spark.functions.text import bpe_token_count_sql
 from openseizuredatabase_spark.functions.hashing import (
@@ -29,11 +29,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import stream_width
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -604,9 +601,7 @@ def s24_streaming_osd_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         OsdSettings(sample_period=5.0, warn_time=5.0, alarm_time=10.0),
     )
     name = f"s24_{uuid.uuid4().hex[:8]}"
-    from openseizuredatabase_spark.plans.q_relational import _stream_width
-
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -1440,8 +1435,6 @@ def n10_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled relational plan below is unchanged.
     n_cells = wl.count()
     if 0 < n_cells <= 100_000:
-        from openseizuredatabase_spark.functions.literal import literal_df
-
         wlc = [(r["win_t"], r["lose_t"], r["n"]) for r in wl.collect()]
         opp_d: dict = {}
         wins_d: dict = {}
@@ -1462,7 +1455,7 @@ def n10_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             p_d = {
                 i: max((n_wins[i] * s) // sm_d[i], 1) for i in nodes
             }
-        return literal_df(
+        return rows_frame(
             spark,
             [(i, n_wins[i], n_games[i], p_d[i]) for i in nodes],
             "event_type string, n_wins long, n_games long, "

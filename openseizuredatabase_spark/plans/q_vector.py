@@ -29,11 +29,8 @@ from openseizuredatabase_spark.functions.hashing import (
 )
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
-from openseizuredatabase_spark.sources.tables import (
-    load_table,
-    spread_small_scan,
-    table_meta,
-)
+from openseizuredatabase_spark.sources.tables import load_table, table_meta
+from openseizuredatabase_spark.sources.width import rows_width
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -1528,14 +1525,9 @@ def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale re-deriving it means five parquet scans, and locally the
     # lazily-shared subtree makes AQE's CONCURRENT stage jobs race on
     # the same uncomputed blocks. One eager materialization, then the
-    # measured count drives a scale-adaptive layout (the
-    # integer_pagerank pattern: tiny inputs collapse to one partition,
-    # lake-scale inputs keep the cluster-wide width).
+    # rows rule sizes the layout from the measured count.
     pc = pc.localCheckpoint(eager=True)
-    n_pts = pc.count()
-    sess_w = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    w_pts = max(1, min(sess_w, n_pts // 50_000))
-    pc = pc.coalesce(w_pts)
+    pc = pc.coalesce(rows_width(spark, pc.count()))
     # a 4-row constant: a LocalRelation literal, NOT createDataFrame —
     # the RDD path schedules one Python-worker task per core to ship
     # four integers (measured 0.6 s of pure scheduling at sf0.1)
@@ -1584,8 +1576,7 @@ def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage was "slow" on wait, not compute)
         .localCheckpoint(eager=True)
     )
-    w_half = max(1, min(sess_w, half.count() // 50_000))
-    half = half.coalesce(w_half)
+    half = half.coalesce(rows_width(spark, half.count()))
     # nbr is now a cheap narrow union over the cached half + pc — no
     # checkpoint needed: each consumer re-reads cache, not the join
     nbr = half.unionByName(

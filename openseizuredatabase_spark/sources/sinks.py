@@ -15,6 +15,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openseizuredatabase_spark.sources.width import sink_width
+
 
 def write_events_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S4 at scale: NDJSON parts (line-delimited, splittable on re-read).
@@ -52,7 +54,7 @@ def write_csv_index(
     """
     out = (
         df.select(*columns)
-        .repartitionByRange(max(df.sparkSession.sparkContext.defaultParallelism // 2, 1), F.col(order_by))
+        .repartitionByRange(sink_width(df.sparkSession), F.col(order_by))
         .sortWithinPartitions(order_by)
     )
     out.write.mode(mode).option("header", True).option("quoteAll", True).csv(path)

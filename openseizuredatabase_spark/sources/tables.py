@@ -205,39 +205,3 @@ def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         out[name] = df
     return out
 
-
-def spread_small_scan(
-    df: DataFrame, spark: SparkSession, approx_bytes: int | None = None
-) -> DataFrame:
-    """Spread a too-few-partition scan across cores before CPU-heavy map
-    work (tokenization, hashing, multi-format parsing).
-
-    Real lakes scan into many partitions (many files / row groups) and
-    this is a no-op. The local test data is one single-row-group file per
-    table, so Spark plans a 1-partition scan and the whole map side would
-    run on one core; a round-robin repartition of a few MB is orders of
-    magnitude cheaper than serializing the map stage. At 100 TB the
-    condition never fires — no extra exchange appears in the plan.
-
-    The decision comes from source SIZE (``approx_bytes`` from footer
-    metadata via ``table_meta``, else the plan's input-file listing) vs
-    ``spark.sql.files.maxPartitionBytes`` — never from ``df.rdd``, which
-    forces a full physical planning + RDD conversion per call (the round-2
-    uniform bench regression).
-    """
-    target = spark.sparkContext.defaultParallelism
-    want = min(4, target)
-    if approx_bytes is None:
-        try:
-            approx_bytes = sum(os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
-                               for p in df.inputFiles())
-        except Exception:
-            return df.repartition(target)
-    max_pb = int(
-        str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")).rstrip("b")
-    )
-    # a scan of N bytes plans roughly ceil(N / maxPartitionBytes) splits;
-    # below `want` splits the map side would underuse the cores
-    if approx_bytes >= want * max_pb:
-        return df
-    return df.repartition(target)

@@ -1,0 +1,128 @@
+"""Partition-width decisions, in one place.
+
+No other module reads ``spark.sql.shuffle.partitions``,
+``spark.sql.files.maxPartitionBytes`` or the core count. The rows rule
+(``rows_width``) sizes loops, census coalesces, writes and streaming
+state stores by measured rows; the map-spread rules
+(``spread_small_scan``, ``spread_cpu_dense``) widen scans narrower than
+the cores before CPU-heavy map work. Widths change layout only, never
+result membership; the oracle sweep re-verifies every query under them.
+"""
+
+from __future__ import annotations
+
+import os
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+from openseizuredatabase_spark.sources.tables import local_parquet_files
+
+ROWS_PER_PARTITION = 50_000
+CPU_DENSE_SPLIT_BYTES = 262_144
+SAMPLE_FILES = 64
+
+
+def session_width(spark: SparkSession) -> int:
+    """The session's shuffle width as the plans have always read it: the
+    explicitly set conf, else 32. (The typed getter would give Spark's
+    200 on a session that never set the conf.)"""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def cores(spark: SparkSession) -> int:
+    return spark.sparkContext.defaultParallelism
+
+
+def sink_width(spark: SparkSession) -> int:
+    """Range-partition width for sorted file sinks: half the cores."""
+    return max(cores(spark) // 2, 1)
+
+
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` through the typed getter,
+    which accepts size strings such as ``"64MB"`` or ``"1m"``."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def rows_width(spark: SparkSession, n_rows: int) -> int:
+    return max(1, min(session_width(spark), n_rows // ROWS_PER_PARTITION))
+
+
+def _sampled_sum(paths: list[str], measure) -> int:
+    """Sum ``measure`` over at most ``SAMPLE_FILES`` evenly spaced paths,
+    extrapolated by file count: a width only needs the magnitude, and
+    the probe runs serially on the driver."""
+    if len(paths) <= SAMPLE_FILES:
+        return sum(measure(p) for p in paths)
+    step = len(paths) / SAMPLE_FILES
+    sample = [paths[int(i * step)] for i in range(SAMPLE_FILES)]
+    return int(sum(measure(p) for p in sample) * (len(paths) / SAMPLE_FILES))
+
+
+def scan_bytes(df: DataFrame) -> int | None:
+    """Approximate input bytes of ``df``'s scan, or None when its files
+    are not local (object store, HDFS) or cannot be sized."""
+    paths = [p[len("file:"):] if p.startswith("file:") else p for p in df.inputFiles()]
+    try:
+        return _sampled_sum(paths, os.path.getsize)
+    except OSError:
+        return None
+
+
+def spread_small_scan(df: DataFrame, spark: SparkSession, nbytes: int) -> DataFrame:
+    """Round-robin a scan of ``nbytes`` (footer metadata, see
+    ``tables.table_meta``) to full core width when it would plan fewer
+    than 4 splits, before CPU-heavy map work (tokenization, hashing,
+    multi-format parsing). A local one-row-group table otherwise runs
+    the whole map side on one core; a lake-scale scan is left as is.
+    Never size from ``df.rdd``: it forces a full physical planning and
+    RDD conversion per call."""
+    target = cores(spark)
+    if nbytes >= min(4, target) * max_partition_bytes(spark):
+        return df
+    return df.repartition(target)
+
+
+def spread_cpu_dense(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """Widen a narrow scan feeding CPU-dense vectorized map passes (Lloyd
+    rounds, PQ encode) to one partition per 256 KB of scanned bytes, up
+    to the cores. Measured: a blanket full-width spread added 0.5-1.4 s
+    to v8/v10/v18/t24 at sf0.1 (near-empty Arrow tasks on every pass),
+    while v8 at x100, where one 2.9 MB file fed every pass, went from
+    37 s to 18 s. A scan that already plans a full-width split count is
+    left as is."""
+    nbytes = scan_bytes(df)
+    if nbytes is None:
+        return df
+    target = cores(spark)
+    if nbytes >= target * max_partition_bytes(spark):
+        return df
+    want = min(target, nbytes // CPU_DENSE_SPLIT_BYTES)
+    return df.repartition(want) if want > 1 else df
+
+
+@contextmanager
+def stream_width(spark: SparkSession, sf_dir: str, table: str = "events"):
+    """Set the shuffle width, and so the streaming state-store count, by
+    the rows rule over ``table``'s parquet footers for the duration of
+    one availableNow run; the session conf is restored on exit.
+
+    Every stateful operator commits one store per shuffle partition per
+    micro-batch: at the session width a small replay paid 32 commits x
+    N operators of pure file latency per batch (s23: 58-95 s of summed
+    commit time against ~66k state rows). A non-local table keeps the
+    session width, the conf-driven production value."""
+    import pyarrow.parquet as pq
+
+    files = local_parquet_files(os.path.join(sf_dir, f"{table}.parquet"))
+    if files is None:
+        yield
+        return
+    n = _sampled_sum(files, lambda f: pq.ParquetFile(f).metadata.num_rows)
+    sess = spark.conf.get("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", str(rows_width(spark, n)))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", sess)

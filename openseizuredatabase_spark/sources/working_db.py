@@ -44,6 +44,8 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from openseizuredatabase_spark.sources.width import sink_width
+
 #: reference normalize_datetime's strptime cascade (osdb_sqlite.py:72-80),
 #: first match wins; Java pattern equivalents.
 _DT_FORMATS = (
@@ -488,8 +490,7 @@ class OsdWorkingLake:
         obs = Observation()
         out = out.observe(obs, F.count(F.lit(1)).alias("n"))
         ordered = out.repartitionByRange(
-            max(out.sparkSession.sparkContext.defaultParallelism // 2, 1),
-            F.col("dataTime"),
+            sink_width(out.sparkSession), F.col("dataTime")
         ).sortWithinPartitions("dataTime")
         if pretty:
             export_small_json(ordered, output_path, pretty=True)

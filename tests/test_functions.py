@@ -166,3 +166,16 @@ def test_normalize_text_ftfy_lite(spark):
     df = spark.createDataFrame([Row(s=messy)])
     out = df.select(normalize_text(F.col("s")).alias("t")).head()["t"]
     assert out == "'a' \"b\" c-d\nef..."
+
+
+def test_rows_frame_above_literal_cap_equals_literal_path(spark):
+    from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
+
+    rows = [(i, f"n{i}", i / 7) for i in range(20_001)]
+    ddl = "id long, name string, x double"
+    big = rows_frame(spark, rows, ddl)
+    lit = literal_df(spark, rows, ddl)
+    # nullability may differ (a VALUES column is non-nullable); names,
+    # types and rows may not
+    assert big.dtypes == lit.dtypes
+    assert sorted(big.collect()) == sorted(lit.collect())

@@ -1,12 +1,12 @@
 """Object-store-safe width probes (round-12).
 
-The footer-metadata probes (tables.table_meta, q_relational._stream_width)
+The footer-metadata probes (tables.table_meta, width.stream_width)
 read local parquet footers to derive scale-adaptive widths. On a real
 lake the inputs are object-store/HDFS URIs where ``os.path`` calls
 silently mis-probe — these tests pin the guarded fallback:
 
 * ``local_parquet_files`` detects non-local URIs and returns None;
-* ``_stream_width`` keeps the session width (no conf change) for them;
+* ``stream_width`` keeps the session width (no conf change) for them;
 * ``table_meta`` raises without a session and takes the distributed
   probe (exact count + Hadoop content summary) with one.
 """
@@ -17,8 +17,8 @@ import os
 
 import pytest
 
-from openseizuredatabase_spark.plans.q_relational import _stream_width
 from openseizuredatabase_spark.sources import tables
+from openseizuredatabase_spark.sources.width import stream_width
 
 
 @pytest.mark.parametrize(
@@ -71,7 +71,7 @@ def test_table_meta_distributed_probe_matches_footers(
 
 def test_stream_width_non_local_keeps_session_width(spark):
     before = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    with _stream_width(spark, "s3://bucket/lake"):
+    with stream_width(spark, "s3://bucket/lake"):
         inside = spark.conf.get("spark.sql.shuffle.partitions", "32")
         assert inside == before
     assert spark.conf.get("spark.sql.shuffle.partitions", "32") == before
@@ -79,7 +79,7 @@ def test_stream_width_non_local_keeps_session_width(spark):
 
 def test_stream_width_local_still_derives_from_rows(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    with _stream_width(spark, sf_dir):
+    with stream_width(spark, sf_dir):
         inside = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # sf0.001 events is tiny: the derived width must collapse to 1
         assert inside == 1
