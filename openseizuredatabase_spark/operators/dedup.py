@@ -475,17 +475,16 @@ def winnow_fingerprints(
     )
 
 
-# Fixed cap for the driver-side component FINISHER: when a measured
-# edge count is at or below this bound the remaining rounds collapse to
-# one bounded collect + an exact union-find on the driver. Two longs
-# per row -> <= ~16 MB at the cap — the same metadata-bounded-collect
-# class as the driver-held k-means codebooks (functions/ann.py): the
-# collect can never exceed the constant cap, REGARDLESS of input scale,
-# because the gate reads a count that was already measured for the
-# width rule. On a lake-scale raw graph the gate simply never fires and
-# the distributed loop runs; in the star-contraction loop the edge set
-# shrinks geometrically per round (Kiveris et al. 2014, Lemma 4), so
-# the finisher replaces only the last O(log n) latency-bound rounds.
+# Fixed cap for the driver-side component finisher: at or below this
+# many canonical edges, connected_components collects the edge list and
+# labels it with one exact union-find on the driver. Two ids per row ->
+# <= ~16 MB at the cap — the same metadata-bounded-collect class as the
+# driver-held k-means codebooks (functions/ann.py): the collect can
+# never exceed the constant cap, REGARDLESS of input scale, because the
+# gate reads an edge count the operator has already measured. Above the
+# cap the star-contraction loop runs; its edge set shrinks geometrically
+# per round (Kiveris et al. 2014, Lemma 4), so the same finisher
+# replaces its last latency-bound rounds.
 _CC_DRIVER_EDGE_CAP = 1_000_000
 
 
@@ -495,11 +494,10 @@ def _driver_cc_labels(edge_rows) -> dict:
 
     The minimum is taken under Python's native ordering, which matches
     Spark's for the id types the operators use (integers exactly;
-    strings compare code-point-wise = UTF8 binary collation). Both
-    distributed variants converge to the identical component-min
-    labeling, so the finisher is a pure latency optimization
-    (equivalence pinned by tests/test_operators.py and the
-    t10/t54/p2/p7/v15 oracles).
+    strings compare code-point-wise = UTF8 binary collation), so these
+    labels equal the ones the star-contraction loop converges to
+    (pinned by tests/test_operators.py and the t10/t54/p2/p7/v15
+    oracles with the loop forced).
     """
     parent: dict = {}
 
@@ -535,170 +533,50 @@ def _labels_frame(spark, labels: dict, id_ddl: str) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    path_halving: bool = False,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-cluster consolidation: connected components over a
-    candidate-pair graph (the step after exact/MinHash/LSH/Jaccard pair
-    generation — near-dup groups collapse to one canonical id, the min
-    of the component).
+    candidate-pair graph ``(id_a, id_b)`` — the step after
+    exact/MinHash/LSH/Jaccard pair generation. Returns ``(id, comp)``
+    for every id in a pair, self-loop-only ids included, where ``comp``
+    is the component's minimum id (the canonical doc).
 
-    Two interchangeable algorithms, both returning the identical
-    (id, comp = component min) frame:
+    The pairs become one canonical edge frame ``(u, v) = (greatest,
+    least)``, distinct and pinned once. When its measured count is at
+    most ``_CC_DRIVER_EDGE_CAP``, one bounded collect and the driver
+    union-find (:func:`_driver_cc_labels`) label it; self-loops stay in
+    the frame, so self-loop-only ids are labelled without a node join.
 
-    * ``path_halving=False`` — min-label propagation (hook rounds):
-      every vertex starts as its own label; each round takes the min
-      over itself and its neighbors; converges in O(min-label
-      eccentricity) rounds — dup clusters are near-cliques, so 2-3
-      rounds in practice. Round-11 shape: the hook is ONE aggregation
-      (labels ∪ neighbor-messages, groupBy(src), with the self row's
-      previous comp pulled from the same buffer via a flag — was
-      join + groupBy + second join), the materialization is a lazy
-      lineage pin whose first action IS the convergence count (one job
-      per round, was an eager-checkpoint job plus a count job), and the
-      loop exits on hook-stability (stable ⇒ for every edge u–v
-      comp[u] <= comp[v] and vice versa ⇒ comp constant per component).
+    Above the cap, large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) rewrites
+    the non-loop edges until the edge set is a fixpoint: stars rooted at
+    each component's minimum. It terminates in O(log² n) rounds on any
+    shape, long chains included. Each phase is ONE windowed pass keyed
+    on the node (the neighborhood min rides ``min(v) over (partition by
+    u)``), and each round is one pin plus one census job. Equal census
+    (count, checksum) gates the exact ``exceptAll`` stability check; a
+    count at or under the cap hands the remaining rounds to the same
+    driver finisher. Ids that drop out of the edge set are isolated and
+    label themselves.
 
-    * ``path_halving=True`` — two-phase star contraction (the
-      large-star/small-star MapReduce algorithm, Kiveris et al. 2014):
-      alternate "attach strictly-larger neighbors to the neighborhood
-      min" and "attach not-larger neighbors + self to the neighborhood
-      min" edge rewrites until the edge set is a fixpoint, at which
-      point the edges form stars rooted at each component's minimum.
-      O(log n) rounds on ANY shape — the long-chain regime (geometric
-      eps-graphs: v15's DBSCAN components) where hook rounds need
-      O(spatial diameter / eps) hops. Measured on v15's sf0.1 graph
-      (1.8k nodes, 13k edges): 6 rounds vs 16 hook rounds, and the old
-      16-round schedule cost 12-17 s of almost pure per-job latency.
-
-    Every per-round frame is pinned with :func:`lineage.pin` (NOT a
-    plain localCheckpoint): preserved origin statistics SQUARE through
-    each round's join and compound across checkpoints into
-    million-digit BigIntegers whose Toom-Cook multiplications dominate
-    driver planning (59 s/round by round 9, found via driver thread
-    dumps). The driver sees only scalar convergence counts, never data.
-
-    Round-12 finisher (guide §1.2 — the round cost IS the cost on
-    small graphs): once the measured edge count is at or below the
-    FIXED cap ``_CC_DRIVER_EDGE_CAP``, the labels come from a bounded
-    driver-side union-find over the collected edge list instead of
-    0.3-0.65 s of per-round shuffle+count job latency per remaining
-    round. The gate reads counts the loops already measure for their
-    width rules, so it costs no extra job; at lake scale it never
-    fires for the raw graph and (in the star variant) replaces only
-    the last contraction rounds.
+    Every round's frame is pinned with :func:`lineage.pin`, not a plain
+    localCheckpoint, so carried plan statistics cannot compound across
+    rounds into BigIntegers that dominate driver planning. The driver
+    sees only scalar censuses and, at or under the cap, the bounded
+    edge list.
     """
     from openseizuredatabase_spark.lineage import pin
 
-    if path_halving:
-        return _cc_star_contraction(pairs, id_a, id_b, max_iter)
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    edges = (
-        edges.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .persist()
-    )
-    # materialize the cache once up front (concurrent AQE stage jobs
-    # otherwise race on the uncomputed blocks) and size the loop from
-    # the measured edge count by the rows rule (sources/width.py)
-    n_edges = edges.count()
-    if n_edges <= _CC_DRIVER_EDGE_CAP:
-        # the symmetrized distinct edge list mentions every node on the
-        # src side, so the union-find labels cover exactly the node set
-        # the distributed loop would label (edges.select("src").distinct())
-        labels = _driver_cc_labels((r[0], r[1]) for r in edges.collect())
-        edges.unpersist()
-        return _labels_frame(
-            pairs.sparkSession,
-            labels,
-            pairs.schema[id_a].dataType.simpleString(),
-        )
-    loop_w = rows_width(pairs.sparkSession, n_edges)
-    edges = edges.coalesce(loop_w)
-    labels = (
-        edges.select("src").distinct().withColumn("comp", F.col("src"))
-    )
-    for _ in range(max_iter):
-        # hook: min over {self comp} ∪ {neighbor comps} in ONE groupBy;
-        # the self row rides the union with a flag so the same buffer
-        # yields the previous comp (for the convergence test) for free
-        msgs = edges.join(
-            labels.select(
-                F.col("src").alias("dst"), F.col("comp").alias("nc")
-            ),
-            "dst",
-        ).select("src", F.col("nc").alias("comp"), F.lit(False).alias("s"))
-        hooked = (
-            labels.select("src", "comp", F.lit(True).alias("s"))
-            .unionByName(msgs)
-            .groupBy("src")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.min(F.when(F.col("s"), F.col("comp"))).alias("old"),
-            )
-        )
-        cur = pin(hooked)
-        changed = cur.filter(F.col("comp") < F.col("old")).count()
-        labels = cur.select("src", "comp").coalesce(loop_w)
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("src").alias("id"), "comp")
-
-
-def _cc_star_contraction(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
-    """Large-star/small-star contraction (see connected_components).
-
-    Scale notes: each phase is ONE windowed pass keyed on the node —
-    the neighborhood min rides ``min(v) over (partition by u)`` so the
-    phase's input is referenced exactly once (round-11; the previous
-    groupBy + re-join referenced it twice, which forced an extra pin +
-    materialization job per phase — guide §2.4 "two operations keyed
-    the same way share one exchange"). The window ships the same bytes
-    the join side already shipped (all edges hashed by u); hub skew
-    still shrinks geometrically per the paper's Lemma 4. One pin + one
-    count job per ROUND. Convergence is edge-set stability; the cheap
-    necessary test (edge COUNT unchanged) gates the exact multiset
-    compare, so early rounds pay one scalar count, not an exceptAll.
-    """
-    from pyspark.sql import Window
-
-    from openseizuredatabase_spark.lineage import pin
-
+    spark = pairs.sparkSession
+    id_ddl = pairs.schema["id_a"].dataType.simpleString()
     wl = Window.partitionBy("u")
 
-    raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    nodes = pin(
-        raw.select(F.col("u").alias("id"))
-        .unionByName(raw.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    # canonical undirected form (larger, smaller); self-loops carry no
-    # connectivity (their nodes still appear via `nodes`)
-    e = pin(
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-    )
+    def finish(ef: DataFrame) -> DataFrame:
+        labels = _driver_cc_labels((r[0], r[1]) for r in ef.collect())
+        return _labels_frame(spark, labels, id_ddl)
+
     def census(df: DataFrame):
         # one job yields both convergence signals: the edge count and
-        # an order-free set checksum (sum of a 64-bit hash) — equal
-        # (n, chk) is a near-certain stability signal that gates the
-        # exact exceptAll confirmation
+        # an order-free set checksum (sum of a 64-bit hash)
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
             # pmod keeps each term < 2^31 so the long sum cannot
@@ -709,30 +587,25 @@ def _cc_star_contraction(
         ).collect()[0]
         return r["n"], r["chk"]
 
-    id_ddl = pairs.schema[id_a].dataType.simpleString()
-
-    def driver_finish(ef: DataFrame) -> DataFrame:
-        # round-12 finisher (see connected_components): the census just
-        # measured the edge count at or under the fixed cap, so the
-        # remaining O(log n) latency-bound rounds collapse to one
-        # bounded collect + exact union-find; isolated nodes (self-loop
-        # only) keep their own id via the left join, exactly as the
-        # distributed exit path below
-        labels = _driver_cc_labels((r[0], r[1]) for r in ef.collect())
-        if not labels:
-            return nodes.select("id", F.col("id").alias("comp"))
-        lf = _labels_frame(pairs.sparkSession, labels, id_ddl)
-        return nodes.join(lf, "id", "left").select(
-            "id", F.coalesce("comp", F.col("id")).alias("comp")
-        )
-
+    edges = pin(
+        pairs.select(
+            F.greatest("id_a", "id_b").alias("u"),
+            F.least("id_a", "id_b").alias("v"),
+        ).distinct()
+    )
+    if edges.count() <= _CC_DRIVER_EDGE_CAP:
+        return finish(edges)
+    nodes = (
+        edges.select(F.col("u").alias("id"))
+        .unionByName(edges.select(F.col("v").alias("id")))
+        .distinct()
+    )
+    e = edges.filter(F.col("u") != F.col("v"))
     n_prev, chk_prev = census(e)
-    if n_prev <= _CC_DRIVER_EDGE_CAP:
-        return driver_finish(e)
     # loop width by the rows rule from the census count; coalesce on a
     # pinned frame is narrow (no shuffle)
-    e = e.coalesce(rows_width(pairs.sparkSession, n_prev))
-    for _ in range(max_iter):
+    e = e.coalesce(rows_width(spark, n_prev))
+    while True:
         # large-star: symmetric neighborhoods; every strictly-larger
         # neighbor of u attaches to min(N(u) ∪ {u})
         sym = e.select("u", "v").unionByName(
@@ -776,20 +649,21 @@ def _cc_star_contraction(
         e2 = pin(ss)
         n_now, chk_now = census(e2)
         if n_now <= _CC_DRIVER_EDGE_CAP:
-            # contraction brought the edge set under the cap: finish on
-            # the driver instead of paying the remaining rounds
-            return driver_finish(e2)
-        e2 = e2.coalesce(rows_width(pairs.sparkSession, n_now))
-        if n_now == n_prev and chk_now == chk_prev:
-            # count+checksum equal is necessary, not sufficient —
-            # confirm exact edge-set equality (both already canonical
-            # (larger, smaller))
-            if e2.exceptAll(e).count() == 0:
-                e = e2
-                break
-        e = e2
-        n_prev, chk_prev = n_now, chk_now
-    roots = e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
+            roots = finish(e2)
+            break
+        e2 = e2.coalesce(rows_width(spark, n_now))
+        # count+checksum equal is necessary, not sufficient — confirm
+        # exact edge-set equality (both already canonical)
+        if (
+            n_now == n_prev
+            and chk_now == chk_prev
+            and e2.exceptAll(e).count() == 0
+        ):
+            roots = e2.select(
+                F.col("u").alias("id"), F.col("v").alias("comp")
+            )
+            break
+        e, n_prev, chk_prev = e2, n_now, chk_now
     return nodes.join(roots, "id", "left").select(
         "id", F.coalesce("comp", F.col("id")).alias("comp")
     )

@@ -507,16 +507,16 @@ def _t10_oracle() -> str:
     "t10_dup_components",
     _t10_oracle(),
     "Duplicate-cluster consolidation: connected components over the LSH "
-    "candidate-pair graph (t7) via min-label propagation — one join + "
-    "one agg per round on uniform id keys, converges in O(cluster "
-    "eccentricity) rounds (near-clique dup groups: 2-3), driver sees "
-    "only scalar convergence counts. Canonical doc = component min id. "
+    "candidate-pair graph (t7) via dedup.connected_components — a "
+    "driver union-find over the canonical edge list up to a fixed edge "
+    "cap, star contraction in O(log² n) rounds above it. Canonical "
+    "doc = component min id. "
     "Oracle: DuckDB recursive-CTE transitive closure over the identical "
     "pair SQL, min-reachable per vertex.",
 )
 def t10_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = QUERIES["t7_lsh_candidate_pairs"].fn(spark, sf_dir)
-    cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
+    cc = dedup_ops.connected_components(pairs)
     return cc.groupBy("comp").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum(F.col("id") % 1000000007).alias("id_sum_b"),
@@ -561,15 +561,15 @@ def _p2_oracle() -> str:
     "components → keep each cluster's min-id canonical doc): the "
     "summary reports per-source survivors. Every stage is the "
     "already-scale-audited operator — candidate generation is a "
-    "band-hash equi-join (never O(n²)), consolidation is min-label "
-    "propagation with bounded rounds, and removal is one left join "
+    "band-hash equi-join (never O(n²)), consolidation is t10's "
+    "connected components, and removal is one left join "
     "against the (small) removed-id set. The oracle replays the chain "
     "through the recursive-CTE transitive closure.",
 )
 def p2_neardup_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents")
     pairs = QUERIES["t7_lsh_candidate_pairs"].fn(spark, sf_dir)
-    cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
+    cc = dedup_ops.connected_components(pairs)
     removed = cc.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias("doc_id"), F.lit(1).alias("__rm")
     )
@@ -2881,14 +2881,15 @@ def _p7_oracle() -> str:
     "Canonical-representative selection — the keep-the-best-copy step "
     "that turns near-dup clusters into a dedup decision a pretraining "
     "corpus actually ships: connected components over the LSH "
-    "candidate graph (t10's min-label propagation), each member "
+    "candidate graph (as t10), each member "
     "scored by the oracled quality model (t2), argmax(quality, tie → "
     "lowest id) picked per cluster by ONE window, and tokens_saved "
     "counts what dropping the other members reclaims. Composition of "
     "two independently-oracled operators; the oracle replays the "
     "recursive-CTE closure + the same window, so the driver hash pins "
-    "the selection policy end to end. Scale: components converge in "
-    "O(cluster diameter) rounds (near-clique dup groups: 2-3); the "
+    "the selection policy end to end. Scale: components take one "
+    "driver union-find up to the edge cap, O(log² n) star-contraction "
+    "rounds above it; the "
     "quality join and window both key on uniform ids; nothing is "
     "quadratic in corpus size. (The naive alternative — keep minimum "
     "id, as t10's 'canonical = min id' note — discards the BEST copy "
@@ -2897,7 +2898,7 @@ def _p7_oracle() -> str:
 )
 def p7_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = QUERIES["t7_lsh_candidate_pairs"].fn(spark, sf_dir)
-    cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
+    cc = dedup_ops.connected_components(pairs)
     qual = t2_quality_score(spark, sf_dir).select(
         "doc_id", "n_tokens", "quality"
     )
@@ -5065,15 +5066,15 @@ def _t54_oracle() -> str:
     "pipelines run after pair generation (pairs alone over-delete "
     "under the naive 'drop id_b' rule when dups chain A-B-C): t7's "
     "MinHash-LSH candidate pairs feed connected components "
-    "(dedup.connected_components min-label propagation; dup clusters "
-    "are near-cliques so 2-3 broadcast-free rounds converge, "
-    "localCheckpoint truncating the iterative lineage), then each "
+    "(dedup.connected_components: a driver union-find over the "
+    "canonical edge list up to a fixed edge cap, star contraction "
+    "above it), then each "
     "cluster rolls up to a card with its keep-best representative "
     "(longest text, ties to lowest id — p7's keep-best rule applied "
     "per component). The oracle replays the closure as a recursive "
     "reachability CTE + min-label GROUP BY, so component MEMBERSHIP "
     "itself is value-hash gated, not just counts. Scale: pair volume "
-    "is LSH-bounded (band buckets), label propagation shuffles "
+    "is LSH-bounded (band buckets), star contraction shuffles "
     "uniformly distributed ids, and the rollup rides the component "
     "key — no stage is quadratic in corpus size.",
 )

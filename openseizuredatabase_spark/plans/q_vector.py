@@ -1484,8 +1484,9 @@ def _v15_oracle() -> str:
     "never-O(n^2) rule as v3's buckets and j10's pigeonholes), and "
     "the grid guarantees candidate completeness since an eps-ball "
     "cannot leave adjacent cells. Distances are exact micro-unit "
-    "integers; cores, core-core edges, and min-label components "
-    "(dedup.connected_components, localCheckpoint-truncated rounds) "
+    "integers; cores, core-core edges, and components "
+    "(dedup.connected_components: driver union-find up to a fixed "
+    "edge cap, star contraction above it) "
     "are all integer decisions, so the full cluster assignment is "
     "value-hash oracled against a recursive-CTE closure over the "
     "naive quadratic join — the oracle deliberately takes the "
@@ -1603,9 +1604,7 @@ def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"))
         .distinct()
     )
-    cc = dedup_ops.connected_components(
-        eg, "id_a", "id_b", path_halving=True
-    )
+    cc = dedup_ops.connected_components(eg)
     singles = core.join(
         cc.select(F.col("id").alias("vec_id")), "vec_id", "left_anti"
     ).select(F.col("vec_id").alias("id"), F.col("vec_id").alias("comp"))

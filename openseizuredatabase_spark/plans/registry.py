@@ -5,8 +5,7 @@ The query definitions live in per-family modules (plans/q_relational.py,
 q_lake.py, q_window.py, q_ml.py, q_text.py, q_vector.py); importing them
 registers each into the shared QUERIES dict (plans/_core.py).  This
 module keeps the driver-window signature shards and the explicit window
-ordering, and re-exports every family-module name so legacy imports
-(`from ...plans.registry import <fn>`) keep working.
+ordering.
 """
 
 from __future__ import annotations
@@ -30,14 +29,6 @@ from openseizuredatabase_spark.plans import (  # noqa: F401
     q_text,
     q_vector,
 )
-
-# Re-export every public and helper name from the family modules so
-# existing imports (tests, tools) resolve unchanged after the split.
-for _mod in (q_shared, q_relational, q_lake, q_window, q_ml, q_stats, q_text, q_vector):
-    for _k, _v in vars(_mod).items():
-        if not _k.startswith('__') and _k not in globals():
-            globals()[_k] = _v
-del _mod, _k, _v
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75

@@ -71,7 +71,7 @@ def _ref_gbt(rows, rounds=2):
 
 
 def test_m27_matches_numpy_reference(spark, tmp_path):
-    from openseizuredatabase_spark.plans.registry import m27_gbt_stumps
+    from openseizuredatabase_spark.plans.q_ml import m27_gbt_stumps
 
     base = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
     rows = []

@@ -143,7 +143,7 @@ def test_j10_best_match_is_minimal_distance(spark):
 def test_j10_pigeonhole_candidates_are_complete(spark):
     """The 3-class interleaved blocking must surface EVERY same-nation
     pair at Hamming <= 2 — compared against the O(block²) brute join."""
-    from openseizuredatabase_spark.plans.registry import (
+    from openseizuredatabase_spark.plans.q_shared import (
         _ham18,
         _ham_candidates,
     )

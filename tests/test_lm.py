@@ -284,7 +284,7 @@ def test_t44_relational_merges_match_reference(spark, tmp_path):
     sequential reference — including overlapping-candidate chains
     ((a,a)-shaped pairs), which is where the parity rule earns its
     keep."""
-    from openseizuredatabase_spark.plans.registry import (
+    from openseizuredatabase_spark.plans.q_text import (
         t44_bpe_merge_rounds,
     )
 

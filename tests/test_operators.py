@@ -324,73 +324,95 @@ def test_connected_components_long_path_converges(spark):
     assert len(got) == 12
 
 
-def test_connected_components_path_halving_matches(spark):
-    """Pointer-jump variant must produce identical components on the
-    shapes that stress it: a long chain (log-round convergence is the
-    point), a clique, and an isolated pair."""
-    from openseizuredatabase_spark.operators.dedup import connected_components
+def _cc_labels(pairs):
+    cc = dedup_ops.connected_components(pairs)
+    return {r["id"]: r["comp"] for r in cc.collect()}
 
+
+def test_connected_components_long_path_forced_loop(spark, monkeypatch):
+    """The finisher and the star-contraction loop (forced by a cap of
+    -1) must both return the exact union-find labels on a long path —
+    deeper than any fixed round budget a loop could stop at — plus a
+    triangle with a reversed duplicate, a pair in both orientations and
+    a self-loop-only node."""
     edges = (
-        [(i, i + 1) for i in range(100, 115)]  # 16-node path
-        + [(1, 2), (2, 3), (1, 3)]  # triangle
-        + [(50, 51)]
-    )
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    plain = {
-        r["id"]: r["comp"]
-        for r in connected_components(pairs, max_iter=30).collect()
-    }
-    halved = {
-        r["id"]: r["comp"]
-        for r in connected_components(
-            pairs, max_iter=30, path_halving=True
-        ).collect()
-    }
-    assert plain == halved
-    assert {halved[i] for i in range(100, 116)} == {100}
-    assert {halved[i] for i in (1, 2, 3)} == {1}
-
-
-def test_connected_components_driver_finisher_matches_distributed(spark):
-    """The round-12 driver-side union-find finisher (fires whenever the
-    measured edge count is at or below _CC_DRIVER_EDGE_CAP) must return
-    exactly the labels the distributed loops produce — both variants,
-    on a shape mix that stresses them: a long chain, a clique,
-    self-loops, duplicate/reversed edges, and an isolated pair."""
-    from openseizuredatabase_spark.operators import dedup
-
-    edges = (
-        [(i, i + 1) for i in range(200, 217)]  # 18-node path
+        [(i, i + 1) for i in range(300, 340)]  # 41-node path
         + [(1, 2), (2, 3), (1, 3), (3, 1)]  # triangle + reversed dup
         + [(50, 51), (51, 50)]  # pair, both orientations
         + [(77, 77)]  # self-loop only: isolated node
-        + [(216, 200)]  # cycle-closing edge
     )
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    want = dedup_ops._driver_cc_labels(edges)
+    assert len(want) == 41 + 3 + 2 + 1
+    assert _cc_labels(pairs) == want
+    monkeypatch.setattr(dedup_ops, "_CC_DRIVER_EDGE_CAP", -1)
+    assert _cc_labels(pairs) == want
 
-    def labels(**kw):
-        return {
-            r["id"]: r["comp"]
-            for r in dedup.connected_components(
-                pairs, max_iter=30, **kw
-            ).collect()
-        }
 
-    cap = dedup._CC_DRIVER_EDGE_CAP
-    try:
-        via_driver_hook = labels()
-        via_driver_star = labels(path_halving=True)
-        dedup._CC_DRIVER_EDGE_CAP = -1  # force the distributed loops
-        via_dist_hook = labels()
-        via_dist_star = labels(path_halving=True)
-    finally:
-        dedup._CC_DRIVER_EDGE_CAP = cap
-    assert via_driver_hook == via_dist_hook
-    assert via_driver_star == via_dist_star
-    assert via_driver_hook == via_driver_star
-    assert {via_driver_hook[i] for i in range(200, 217)} == {200}
-    assert via_driver_hook[77] == 77
-    assert {via_driver_hook[i] for i in (50, 51)} == {50}
+def test_connected_components_driver_finisher_matches_distributed(
+    spark, monkeypatch
+):
+    """The driver union-find finisher (at or under _CC_DRIVER_EDGE_CAP)
+    and the distributed star-contraction loop must return identical
+    labels — node set, self-loop-only nodes and string ids included —
+    on a cycle, a clique with duplicates, a pair whose string and
+    numeric minima differ, and an isolated node."""
+    edges = (
+        [(i, i + 1) for i in range(200, 217)]  # 18-node path
+        + [(216, 200)]  # cycle-closing edge
+        + [(1, 2), (2, 3), (1, 3), (3, 1)]  # triangle + reversed dup
+        + [(50, 51), (51, 50)]  # pair, both orientations
+        + [(9, 10)]  # numeric min 9, code-point min "d10"
+        + [(77, 77)]  # self-loop only: isolated node
+    )
+    int_pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    str_pairs = spark.createDataFrame(
+        [(f"d{a}", f"d{b}") for a, b in edges], "id_a string, id_b string"
+    )
+    via_driver = _cc_labels(int_pairs)
+    via_driver_str = _cc_labels(str_pairs)
+    monkeypatch.setattr(dedup_ops, "_CC_DRIVER_EDGE_CAP", -1)
+    assert _cc_labels(int_pairs) == via_driver
+    assert _cc_labels(str_pairs) == via_driver_str
+    assert {via_driver[i] for i in range(200, 217)} == {200}
+    assert via_driver[77] == 77
+    assert {via_driver[i] for i in (50, 51)} == {50}
+    assert via_driver[10] == 9
+    assert via_driver_str["d9"] == "d10"
+    assert via_driver_str["d216"] == "d200"
+    assert via_driver_str["d77"] == "d77"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "t10_dup_components",
+        "p2_neardup_removal",
+        "p7_canonical_docs",
+        "t54_dup_clusters",
+        "v15_dbscan_grid",
+    ],
+)
+def test_connected_components_callers_forced_loop_match_oracle(
+    spark, sf_dir, monkeypatch, name
+):
+    """Every connected-components caller, with the star-contraction
+    loop forced (cap -1), still matches its DuckDB oracle at sf0.01,
+    where v15's DBSCAN components are long eps-chains."""
+    import os
+
+    from openseizuredatabase_spark.plans.oracle_check import (
+        _duckdb_conn,
+        compare_query,
+    )
+    from openseizuredatabase_spark.plans.registry import QUERIES
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf01):
+        pytest.skip("sf0.01 lake not generated")
+    monkeypatch.setattr(dedup_ops, "_CC_DRIVER_EDGE_CAP", -1)
+    ok, msg = compare_query(spark, _duckdb_conn(sf01), QUERIES[name], sf01)
+    assert ok, msg
 
 
 def test_driver_cc_labels_string_ids_and_empty():

@@ -7,6 +7,7 @@ order-local ones (gap repair, sessionization, recurrence).
 """
 
 import datetime as dt
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -183,12 +184,12 @@ def test_jaccard_pairs_match_bruteforce(spark, docs):
         ),
         min_size=1,
         max_size=40,
-    )
+    ),
+    # the default cap takes the driver finisher; -1 forces the loop
+    cap=st.sampled_from([dedup_ops._CC_DRIVER_EDGE_CAP, -1]),
 )
 @settings(**SPARK_SETTINGS)
-def test_connected_components_matches_union_find(spark, edges):
-    from openseizuredatabase_spark.operators.dedup import connected_components
-
+def test_connected_components_matches_union_find(spark, edges, cap):
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
@@ -209,7 +210,11 @@ def test_connected_components_matches_union_find(spark, edges):
     expected = {v: find(v) for v in parent}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["comp"] for r in connected_components(df).collect()}
+    with mock.patch.object(dedup_ops, "_CC_DRIVER_EDGE_CAP", cap):
+        got = {
+            r["id"]: r["comp"]
+            for r in dedup_ops.connected_components(df).collect()
+        }
     assert got == expected
 
 
