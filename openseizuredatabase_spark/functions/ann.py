@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.functions import array_to_vector
 
-from openseizuredatabase_spark.functions.literal import literal_df
+from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
 from openseizuredatabase_spark.functions.vectors import cosine
+from openseizuredatabase_spark.lineage import bounded_collect
 from openseizuredatabase_spark.sources.width import spread_cpu_dense
 
 
@@ -116,6 +117,71 @@ def _np_length_groups(pdf, vec_field):
         yield int(L), mat, idx
 
 
+# Row cap for training k-means on the driver: at or under this many
+# vectors, kmeans_exact collects the pinned quantized vectors once and
+# runs every Lloyd round and the final assignment in the driver process.
+# Measured crossover (tools/kmeans_crossover.py: synthetic 64-dim
+# embeddings, k=8, iters=2, local[4] on a 4-core host, 4 GB driver
+# heap; build plus one action, median of 3), driver vs distributed
+# seconds: 2k 1.1 vs 2.6, 20k 2.5 vs 3.1, 60k 6.0 vs 6.6, 100k 11.0 vs
+# 10.4, 200k 18.8 vs 19.9, 600k 59.9 vs 45.2. The driver path wins up
+# to 60k, ties within noise to 200k and loses beyond, while its peak
+# RSS (Python plus JVM) is always higher: 2.4 vs 1.6 GB at 60k, 3.6 vs
+# 2.0 GB at 200k, 6.7 vs 4.0 GB at 600k. Above the cap the failed
+# gate costs about 0.7 s at 600k: its collect fills the pin the
+# distributed rounds then read.
+_KMEANS_DRIVER_ROW_CAP = 60_000
+
+
+def _np_partial_sums(groups, book):
+    """Per-(cid, dim) member sums and counts of one batch against
+    ``book``: ``(cid, dim, s, n)`` rows, ``s`` an exact Python int.
+    ``groups`` comes from :func:`_np_length_groups`."""
+    out = []
+    if not book:
+        return out
+    for L, mat, _ in groups:
+        win = _np_argmin_cid(mat, book)
+        for j, (cid, _cw) in enumerate(book):
+            sel = win == j
+            m = int(sel.sum())
+            if m:
+                sums = mat[sel].sum(axis=0).tolist()
+                out.extend((cid, d, sums[d], m) for d in range(L))
+    return out
+
+
+def _book_from_sums(rows):
+    """The updated codebook from per-(cid, dim) partial sums and counts
+    ``(cid, dim, s, n)``, totalled here as Python ints, which are exact
+    at any magnitude; Python ``//`` is floor division == the portable
+    (s - (((s%n)+n)%n)) / n."""
+    tot: dict = {}
+    for cid, d, s, n in rows:
+        t = tot.setdefault(cid, {}).setdefault(d, [0, 0])
+        t[0] += s
+        t[1] += n
+    book = []
+    for cid in sorted(tot):
+        arr = np.empty(len(tot[cid]), dtype=np.int64)
+        for d, (s, n) in tot[cid].items():
+            arr[d] = s // n
+        book.append((cid, arr))
+    return book
+
+
+def _np_assign(pdf, groups, book, id_col):
+    """(ids, cids): each vector's nearest codeword in ``book``."""
+    ids, cids = [], []
+    if not book:
+        return ids, cids
+    for _L, mat, idx in groups:
+        win = _np_argmin_cid(mat, book)
+        ids.extend(pdf[id_col].to_numpy()[idx].tolist())
+        cids.extend(book[j][0] for j in win)
+    return ids, cids
+
+
 def kmeans_exact(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -125,35 +191,37 @@ def kmeans_exact(
     quant: int = 1000,
     eager_assign: bool = True,
 ):
-    """Deterministic distributed Lloyd iterations in pure relational ops
-    — the IVF coarse quantizer (build_ivf's role) with CROSS-ENGINE
-    EXACT semantics, so the clustering itself is oracle-checkable
-    (MLlib KMeans is seeded but float-iteration/engine specific).
+    """Deterministic Lloyd iterations with CROSS-ENGINE EXACT semantics
+    — the IVF coarse quantizer (build_ivf's role), so the clustering
+    itself is oracle-checkable (MLlib KMeans is seeded but
+    float-iteration/engine specific).
 
     Every quantity is integer: coordinates quantize to ``quant`` units,
     distances are integer sums of squares, tie-breaks go to the lowest
     centroid id, and centroid updates use portable floor division
     (s - ((s%n)+n)%n) / n — identical in Spark and ANSI SQL, unlike
     `div`-vs-`//` truncate/floor divergence on negatives. Bit-equal
-    assignments on any engine, any partition layout.
-
-    Scale shape per iteration (round-11, guide §2.4 "remove shuffles" +
-    §4.2 "vectorized native code inside the Python boundary"): the
-    codebook is k·dim integers — metadata-sized — and lives on the
-    DRIVER between rounds (the same bounded-collect class as the
-    centroid-probe lookups; never data-sized). Assignment is ONE
-    vectorized numpy pass (mapInPandas) against the closure-shipped
-    codebook — zero shuffles, no ×k candidate explosion, no row_number
-    sort (the historical shape shuffled n·k distance rows into a window
-    sort per round) — which emits per-batch partial (cid, dim) sums, so
-    the centroid update is one tiny aggregation whose shuffle carries
-    ≤ k·dim rows per input partition. One Spark job per Lloyd round.
-    Exact equivalence with the historical join-on-dim + row_number
-    shape is argued in :func:`_np_argmin_cid` (int64 arithmetic,
-    inner-join dim overlap, lowest-cid ties) plus portable Python floor
-    division for the update (s // n == (s - (((s%n)+n)%n)) / n for the
-    positive counts n); pinned by tests/test_ann.py and the v5/v7/v10
+    assignments on any engine, any partition layout. Exact equivalence
+    with the historical join-on-dim + row_number shape is argued in
+    :func:`_np_argmin_cid` (int64 arithmetic, inner-join dim overlap,
+    lowest-cid ties); pinned by tests/test_ann.py and the v5/v7/v10
     oracle twins.
+
+    Scale shape: the seeds are the vectors with ids 1..k, and the
+    codebook (k·dim integers) always lives on the driver between rounds.
+    The quantized vectors are widened and pinned once, and one bounded
+    collect of them (:func:`lineage.bounded_collect`, at most
+    ``_KMEANS_DRIVER_ROW_CAP`` + 1 rows through Arrow) decides where the
+    rounds run. At or under the cap, that collect is the last Spark job:
+    every Lloyd round and the final assignment run on the driver with
+    the same numpy kernels the workers use, the length groups built
+    once, and the assignment comes back as a driver-held literal frame.
+    Above the cap the collect has already filled the pin, and the
+    rounds stay distributed: per round one vectorized ``mapInPandas``
+    argmin pass against the closure-shipped codebook that emits
+    per-batch partial (cid, dim) sums, plus one aggregation whose
+    shuffle carries at most k·dim rows per input partition; then a
+    final ``mapInPandas`` assignment pass.
 
     Returns (assignments (id, cid), centroids (cid, dim, c)).
     """
@@ -162,6 +230,7 @@ def kmeans_exact(
 
     spark = emb.sparkSession
     id_type = emb.schema[id_col].dataType
+    id_ddl = id_type.simpleString()
     vecs = emb.select(
         F.col(id_col),
         F.transform(
@@ -169,13 +238,50 @@ def kmeans_exact(
             lambda x: F.round(x * quant, 0).cast("long"),
         ).alias("__v"),
     ).filter(F.size("__v") > 0)
-    # every Lloyd round and the final assignment are CPU-dense numpy
-    # map passes over vecs: widen a narrow source scan (results are
-    # layout-invariant by the integer-arithmetic contract)
+
+    def cents_frame(book):
+        # the codebook is driver-held k·dim rows — a VALUES
+        # LocalRelation (no RDD job, folds/broadcasts as a literal);
+        # with no seeds it is empty, which VALUES cannot express
+        rows = [
+            (cid, d, c) for cid, cw in book for d, c in enumerate(cw.tolist())
+        ]
+        ddl = f"cid {id_ddl}, dim int, c long"
+        if not rows:
+            return rows_frame(spark, rows, ddl)
+        return literal_df(spark, rows, ddl)
+
+    # on the distributed path every Lloyd round and the final assignment
+    # are CPU-dense numpy map passes over vecs: widen a narrow source
+    # scan (results are layout-invariant by the integer-arithmetic
+    # contract)
     vecs = spread_cpu_dense(vecs, spark)
-    # vecs feeds the seed collect, every Lloyd round and the final
-    # assignment; pin it so each pass reuses one materialized scan
+    # vecs feeds the gate, every Lloyd round and the final assignment;
+    # pin it so each pass reuses one materialized scan. The gate is the
+    # first action: above the cap it has already computed the pinned
+    # scan, so the failed gate costs only the cap + 1 shipped rows
     vecs = vecs.localCheckpoint(eager=False)
+    tbl = bounded_collect(vecs, _KMEANS_DRIVER_ROW_CAP)
+    if tbl is not None:
+        pdf = tbl.to_pandas()
+        # seed codebook: the vectors with ids 1..k
+        idv, vs = pdf[id_col].to_numpy(), pdf["__v"].to_numpy()
+        book = sorted(
+            (idv[i].item(), np.asarray(vs[i], dtype=np.int64))
+            for i in np.nonzero((idv >= 1) & (idv <= k))[0]
+        )
+        groups = list(_np_length_groups(pdf, "__v"))
+        abook = book
+        for _ in range(iters):
+            abook = book
+            book = _book_from_sums(_np_partial_sums(groups, book))
+        # the last training assignment, as in the distributed path below
+        a_ids, a_cids = _np_assign(pdf, groups, abook, id_col)
+        assign = rows_frame(
+            spark, zip(a_ids, a_cids), f"{id_col} {id_ddl}, cid {id_ddl}"
+        )
+        return assign, cents_frame(book)
+
     # seed codebook: the vectors with ids 1..k (bounded: ≤ k rows)
     book = sorted(
         (r[0], np.asarray(r[1], dtype=np.int64))
@@ -197,23 +303,9 @@ def kmeans_exact(
 
         def partial_sums(it):
             for pdf in it:
-                out_cid, out_dim, out_s, out_n = [], [], [], []
-                for L, mat, _ in _np_length_groups(pdf, "__v"):
-                    if not bk:
-                        continue
-                    win = _np_argmin_cid(mat, bk)
-                    for j, (cid, _cw) in enumerate(bk):
-                        sel = win == j
-                        m = int(sel.sum())
-                        if not m:
-                            continue
-                        sums = mat[sel].sum(axis=0)
-                        out_cid.extend([cid] * L)
-                        out_dim.extend(range(L))
-                        out_s.extend(sums.tolist())
-                        out_n.extend([m] * L)
                 yield pd.DataFrame(
-                    {"cid": out_cid, "dim": out_dim, "s": out_s, "n": out_n}
+                    _np_partial_sums(_np_length_groups(pdf, "__v"), bk),
+                    columns=["cid", "dim", "s", "n"],
                 )
 
         upd = (
@@ -222,19 +314,7 @@ def kmeans_exact(
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
         )
-        # rebuild the driver codebook; Python // is floor division ==
-        # the portable (s - (((s%n)+n)%n)) / n, and Python ints are
-        # exact at any magnitude
-        by_cid: dict = {}
-        for r in upd:
-            by_cid.setdefault(r["cid"], {})[r["dim"]] = r["s"] // r["n"]
-        book = []
-        for cid in sorted(by_cid):
-            dims = by_cid[cid]
-            arr = np.empty(len(dims), dtype=np.int64)
-            for d, c in dims.items():
-                arr[d] = c
-            book.append((cid, arr))
+        book = _book_from_sums(upd)
     # the returned assignment is the LAST TRAINING assignment — argmin
     # against the book that ENTERED the final round (pre-update), the
     # historical loop's exact semantics; the returned centroids are the
@@ -243,13 +323,9 @@ def kmeans_exact(
 
     def assign_codes(it):
         for pdf in it:
-            ids, cids = [], []
-            for _L, mat, idx in _np_length_groups(pdf, "__v"):
-                if not fbook:
-                    continue
-                win = _np_argmin_cid(mat, fbook)
-                ids.extend(pdf[id_col].to_numpy()[idx].tolist())
-                cids.extend(fbook[j][0] for j in win)
+            ids, cids = _np_assign(
+                pdf, _np_length_groups(pdf, "__v"), fbook, id_col
+            )
             yield pd.DataFrame({id_col: ids, "cid": cids})
 
     out_schema = T.StructType(
@@ -269,18 +345,7 @@ def kmeans_exact(
     assign = vecs.mapInPandas(assign_codes, schema=out_schema).localCheckpoint(
         eager=eager_assign
     )
-    # the codebook is driver-held k·dim rows — render it as a VALUES
-    # LocalRelation (no RDD job, folds/broadcasts as a literal)
-    cents = literal_df(
-        spark,
-        [
-            (cid, d, int(cw[d]))
-            for cid, cw in book
-            for d in range(cw.shape[0])
-        ],
-        f"cid {id_type.simpleString()}, dim int, c long",
-    )
-    return assign, cents
+    return assign, cents_frame(book)
 
 
 def ivf_probe_exact(

@@ -53,3 +53,17 @@ def pin(df: DataFrame) -> DataFrame:
         rdd, df._jdf.schema(), False
     )
     return DataFrame(jdf, spark)
+
+
+def bounded_collect(df: DataFrame, max_rows: int):
+    """``df``'s rows as a ``pyarrow.Table`` when it holds at most
+    ``max_rows`` rows, else ``None`` — one ``limit(max_rows + 1)`` job,
+    so the driver never holds more than the cap plus one row whatever
+    the input's size, and no separate count job runs. ``max_rows=-1``
+    always answers ``None``.
+
+    Arrow keeps the worker-side shape: ``to_pandas()`` gives the batch a
+    ``mapInPandas`` function sees, ``column(c).to_pylist()`` exact Python
+    values (ints, strings) as ``collect()`` would."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return tbl if tbl.num_rows <= max_rows else None

@@ -480,9 +480,9 @@ def winnow_fingerprints(
 # labels it with one exact union-find on the driver. Two ids per row ->
 # <= ~16 MB at the cap — the same metadata-bounded-collect class as the
 # driver-held k-means codebooks (functions/ann.py): the collect can
-# never exceed the constant cap, REGARDLESS of input scale, because the
-# gate reads an edge count the operator has already measured. Above the
-# cap the star-contraction loop runs; its edge set shrinks geometrically
+# never exceed the constant cap plus one row, REGARDLESS of input scale,
+# because it is a lineage.bounded_collect. Above the cap the
+# star-contraction loop runs; its edge set shrinks geometrically
 # per round (Kiveris et al. 2014, Lemma 4), so the same finisher
 # replaces its last latency-bound rounds.
 _CC_DRIVER_EDGE_CAP = 1_000_000
@@ -541,10 +541,12 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     is the component's minimum id (the canonical doc).
 
     The pairs become one canonical edge frame ``(u, v) = (greatest,
-    least)``, distinct and pinned once. When its measured count is at
-    most ``_CC_DRIVER_EDGE_CAP``, one bounded collect and the driver
-    union-find (:func:`_driver_cc_labels`) label it; self-loops stay in
-    the frame, so self-loop-only ids are labelled without a node join.
+    least)``, distinct and pinned once. When it holds at most
+    ``_CC_DRIVER_EDGE_CAP`` edges, one bounded collect
+    (:func:`lineage.bounded_collect`, no separate count job) and the
+    driver union-find (:func:`_driver_cc_labels`) label it; self-loops
+    stay in the frame, so self-loop-only ids are labelled without a node
+    join.
 
     Above the cap, large-star/small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014) rewrites
@@ -564,14 +566,16 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     sees only scalar censuses and, at or under the cap, the bounded
     edge list.
     """
-    from openseizuredatabase_spark.lineage import pin
+    from openseizuredatabase_spark.lineage import bounded_collect, pin
 
     spark = pairs.sparkSession
     id_ddl = pairs.schema["id_a"].dataType.simpleString()
     wl = Window.partitionBy("u")
 
-    def finish(ef: DataFrame) -> DataFrame:
-        labels = _driver_cc_labels((r[0], r[1]) for r in ef.collect())
+    def finish(tbl) -> DataFrame:
+        labels = _driver_cc_labels(
+            zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist())
+        )
         return _labels_frame(spark, labels, id_ddl)
 
     def census(df: DataFrame):
@@ -593,8 +597,9 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             F.least("id_a", "id_b").alias("v"),
         ).distinct()
     )
-    if edges.count() <= _CC_DRIVER_EDGE_CAP:
-        return finish(edges)
+    tbl = bounded_collect(edges, _CC_DRIVER_EDGE_CAP)
+    if tbl is not None:
+        return finish(tbl)
     nodes = (
         edges.select(F.col("u").alias("id"))
         .unionByName(edges.select(F.col("v").alias("id")))
@@ -649,7 +654,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         e2 = pin(ss)
         n_now, chk_now = census(e2)
         if n_now <= _CC_DRIVER_EDGE_CAP:
-            roots = finish(e2)
+            roots = finish(e2.toArrow())
             break
         e2 = e2.coalesce(rows_width(spark, n_now))
         # count+checksum equal is necessary, not sufficient — confirm

@@ -348,15 +348,19 @@ def v6_ivf_probe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "v5_kmeans_exact",
     _v5_oracle(),
-    "Deterministic distributed KMeans (2 Lloyd rounds) — the IVF coarse "
-    "quantizer (functions/ann.build_ivf's role) re-expressed with "
-    "CROSS-ENGINE EXACT integer semantics: quantized coordinates, "
-    "integer squared distances, lowest-id tie-breaks, portable "
-    "floor-division centroid updates. MLlib KMeans is float/engine-"
-    "specific (v4 stays rows-only); this variant makes the clustering "
-    "itself value-hash-checkable. Per round: broadcast k x dim "
-    "centroids, one map-side join, two partial-combined aggregations — "
-    "the classic distributed Lloyd step, nothing driver-side.",
+    "Deterministic KMeans (2 Lloyd rounds) — the IVF coarse quantizer "
+    "(functions/ann.build_ivf's role) re-expressed with CROSS-ENGINE "
+    "EXACT integer semantics: quantized coordinates, integer squared "
+    "distances, lowest-id tie-breaks, portable floor-division centroid "
+    "updates. MLlib KMeans is float/engine-specific (v4 stays "
+    "rows-only); this variant makes the clustering itself "
+    "value-hash-checkable. The k x dim codebook lives on the driver. "
+    "The quantized vectors are pinned once; up to "
+    "ann._KMEANS_DRIVER_ROW_CAP of them, one bounded Arrow collect "
+    "brings them to the driver, which runs the rounds and the "
+    "assignment and returns a literal frame. Above it, each round is "
+    "one vectorized mapInPandas argmin pass emitting partial sums plus "
+    "one small aggregation, and a final mapInPandas pass assigns.",
 )
 def v5_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openseizuredatabase_spark.functions.ann import kmeans_exact

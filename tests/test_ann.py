@@ -1,5 +1,7 @@
 """IVF ANN tests: determinism, pruning, recall vs brute force."""
 
+import collections
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -82,6 +84,90 @@ def test_kmeans_exact_invariants(spark, sf_dir):
     c = cents.collect()
     dims = {r["dim"] for r in c}
     assert len(dims) == 64 and all(isinstance(r["c"], int) for r in c)
+
+
+def _kmeans_both_paths(spark, monkeypatch, rows, **kw):
+    """kmeans_exact's (assign, cents) rows on the driver path (default
+    cap) and the distributed path (cap -1); they must be equal."""
+    from openseizuredatabase_spark.functions import ann
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = []
+    for cap in (ann._KMEANS_DRIVER_ROW_CAP, -1):
+        monkeypatch.setattr(ann, "_KMEANS_DRIVER_ROW_CAP", cap)
+        assign, cents = ann.kmeans_exact(emb, **kw)
+        out.append(
+            (
+                sorted(map(tuple, assign.collect())),
+                sorted(map(tuple, cents.collect())),
+            )
+        )
+    assert out[0] == out[1]
+    return out[0]
+
+
+def test_kmeans_exact_driver_path_matches_distributed(spark, monkeypatch):
+    """The driver path (at or under _KMEANS_DRIVER_ROW_CAP) and the
+    distributed Lloyd rounds give the same assignments and centroids on
+    ragged vectors, on a corpus with no seed ids, and on exact ties."""
+    # ragged: odd ids are 3-dim near +10, even ids 5-dim near -10, so
+    # the codebook keeps centroids of both lengths
+    ragged = []
+    for i in range(1, 25):
+        base, dim = (10.0, 3) if i % 2 else (-10.0, 5)
+        ragged.append((i, [base + (i * 7 + d) % 5 for d in range(dim)]))
+    assign, cents = _kmeans_both_paths(
+        spark, monkeypatch, ragged, k=3, iters=2, quant=10
+    )
+    assert len(assign) == 24
+    assert collections.Counter(c[0] for c in cents) == {1: 3, 2: 5, 3: 3}
+    # no id in 1..k: no seeds, so nothing is assigned and no centroid
+    unseeded = [(i, [float(i), 1.0]) for i in range(10, 20)]
+    assert _kmeans_both_paths(
+        spark, monkeypatch, unseeded, k=3, iters=2, quant=10
+    ) == ([], [])
+    # ties: ids 3 and 4 are each equidistant from seeds 1 and 2; the
+    # lowest cid wins
+    ties = [(1, [0.0, 0.0]), (2, [2.0, 0.0]), (3, [1.0, 0.0]), (4, [1.0, 1.0])]
+    assign, _ = _kmeans_both_paths(
+        spark, monkeypatch, ties, k=2, iters=1, quant=1
+    )
+    assert assign == [(1, 1), (2, 2), (3, 1), (4, 1)]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "v5_kmeans_exact",
+        "v6_ivf_probe_exact",
+        "v7_hierarchical_assign",
+        "v10_ivf_pq",
+        "v19_hier_assign_scaled",
+        "v20_ivf_partition_pruning",
+        "t24_semantic_dedup",
+        "t24_semdedup_scaled",
+    ],
+)
+def test_kmeans_callers_forced_distributed_match_oracle(
+    spark, sf_dir, monkeypatch, name
+):
+    """Every kmeans_exact caller, with the distributed Lloyd rounds
+    forced (cap -1), still matches its DuckDB oracle at sf0.01."""
+    import os
+
+    from openseizuredatabase_spark.functions import ann
+    from openseizuredatabase_spark.plans.oracle_check import (
+        _duckdb_conn,
+        compare_query,
+    )
+    from openseizuredatabase_spark.plans.registry import QUERIES
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf01):
+        pytest.skip("sf0.01 lake not generated")
+    monkeypatch.setattr(ann, "_KMEANS_DRIVER_ROW_CAP", -1)
+    ok, msg = compare_query(spark, _duckdb_conn(sf01), QUERIES[name], sf01)
+    assert ok, msg
 
 
 def test_ivf_probe_exact_matches_bruteforce_when_probing_all(spark, sf_dir):

@@ -15,6 +15,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from openseizuredatabase_spark.detection.osd_alg import OsdSettings, alarm_recurrence
+from openseizuredatabase_spark.functions import ann
 from openseizuredatabase_spark.operators import dedup as dedup_ops
 from openseizuredatabase_spark.operators import windows as window_ops
 
@@ -396,17 +397,19 @@ def test_bucketed_range_join_matches_bruteforce(spark, ivs, pts, bucket):
     assert got == want
 
 
-@given(seed=st.integers(min_value=0, max_value=2**31 - 1))
+@given(
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+    # the default cap trains on the driver; -1 forces the Lloyd rounds
+    cap=st.sampled_from([ann._KMEANS_DRIVER_ROW_CAP, -1]),
+)
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-def test_kmeans_exact_assignment_is_nearest_centroid(spark, seed):
+def test_kmeans_exact_assignment_is_nearest_centroid(spark, seed, cap):
     """After the final Lloyd round every vector sits with its nearest
     final-round-input centroid (integer distances, lowest-cid ties) —
     the invariant brute-forced here from the returned artifacts."""
     import numpy as np
     from pyspark.sql import Row
-
-    from openseizuredatabase_spark.functions.ann import kmeans_exact
 
     rng = np.random.default_rng(seed)
     n, d, k = 30, 4, 3
@@ -417,8 +420,9 @@ def test_kmeans_exact_assignment_is_nearest_centroid(spark, seed):
             for i in range(n)
         ]
     )
-    assign, cents = kmeans_exact(df, k=k, iters=1, quant=1000)
-    got = {r["vec_id"]: r["cid"] for r in assign.collect()}
+    with mock.patch.object(ann, "_KMEANS_DRIVER_ROW_CAP", cap):
+        assign, cents = ann.kmeans_exact(df, k=k, iters=1, quant=1000)
+        got = {r["vec_id"]: r["cid"] for r in assign.collect()}
     # iters=1: assignment is against the INITIAL centroids (ids 1..k)
     q = np.round(vecs.astype(np.float64) * 1000)
     init = {cid: q[cid - 1] for cid in range(1, k + 1)}

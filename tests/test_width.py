@@ -10,6 +10,7 @@ from contextlib import contextmanager
 import pytest
 
 import openseizuredatabase_spark
+from openseizuredatabase_spark.functions import ann
 from openseizuredatabase_spark.plans.oracle_check import _duckdb_conn, compare_query
 from openseizuredatabase_spark.plans.registry import QUERIES
 from openseizuredatabase_spark.sources import width
@@ -105,7 +106,11 @@ def con(sf_dir):
 @pytest.mark.parametrize(
     "name", ["v5_kmeans_exact", "t5_ngram_jaccard", "s17_streaming_sliding"]
 )
-def test_size_string_max_partition_bytes(spark, con, sf_dir, value, name):
+def test_size_string_max_partition_bytes(
+    spark, con, sf_dir, monkeypatch, value, name
+):
+    # v5's mapInPandas Lloyd rounds run only on the distributed path
+    monkeypatch.setattr(ann, "_KMEANS_DRIVER_ROW_CAP", -1)
     with _conf(spark, "spark.sql.files.maxPartitionBytes", value):
         ok, msg = compare_query(spark, con, QUERIES[name], sf_dir)
     assert ok, f"{name} with maxPartitionBytes={value}: {msg}"
