@@ -120,9 +120,9 @@ def _np_length_groups(pdf, vec_field):
 # Row cap for training k-means on the driver: at or under this many
 # vectors, kmeans_exact collects the pinned quantized vectors once and
 # runs every Lloyd round and the final assignment in the driver process.
-# Measured crossover (tools/kmeans_crossover.py: synthetic 64-dim
-# embeddings, k=8, iters=2, local[4] on a 4-core host, 4 GB driver
-# heap; build plus one action, median of 3), driver vs distributed
+# Measured crossover (tools/gate_crossover.py --gate kmeans: synthetic
+# 64-dim embeddings, k=8, iters=2, local[4] on a 4-core host, 4 GB
+# driver heap; build plus one action, median of 3), driver vs distributed
 # seconds: 2k 1.1 vs 2.6, 20k 2.5 vs 3.1, 60k 6.0 vs 6.6, 100k 11.0 vs
 # 10.4, 200k 18.8 vs 19.9, 600k 59.9 vs 45.2. The driver path wins up
 # to 60k, ties within noise to 200k and loses beyond, while its peak

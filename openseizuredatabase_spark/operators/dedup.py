@@ -475,17 +475,33 @@ def winnow_fingerprints(
     )
 
 
-# Fixed cap for the driver-side component finisher: at or below this
+# Fixed cap for the driver-side component finisher: at or under this
 # many canonical edges, connected_components collects the edge list and
-# labels it with one exact union-find on the driver. Two ids per row ->
-# <= ~16 MB at the cap — the same metadata-bounded-collect class as the
-# driver-held k-means codebooks (functions/ann.py): the collect can
-# never exceed the constant cap plus one row, REGARDLESS of input scale,
-# because it is a lineage.bounded_collect. Above the cap the
-# star-contraction loop runs; its edge set shrinks geometrically
-# per round (Kiveris et al. 2014, Lemma 4), so the same finisher
-# replaces its last latency-bound rounds.
-_CC_DRIVER_EDGE_CAP = 1_000_000
+# labels it with one exact union-find on the driver. v15's grid DBSCAN
+# (plans/q_vector.py) shares the cap for its points and its grid
+# candidate pairs, so -1 forces both distributed paths at once. The
+# collect can never exceed the cap plus one row, REGARDLESS of input
+# scale, because it is a lineage.bounded_collect. Above the cap the
+# star-contraction loop runs; its edge set shrinks geometrically per
+# round (Kiveris et al. 2014, Lemma 4), so the same finisher replaces
+# its last latency-bound rounds.
+# Measured (tools/gate_crossover.py, local[4] on a 4-core host, 4 GB
+# driver heap, build plus one action, median of 2), seconds driver vs
+# distributed:
+# - cc, chain / forest: 10k 1.2 vs 6.6 / 1.3 vs 4.7, 100k 1.9 vs 13.6 /
+#   2.0 vs 5.1, 300k 3.8 vs 21.8 / 4.3 vs 10.1, 1M 12.1 vs 45.5 / 12.5
+#   vs 30.3, 2M 26.7 vs 94.4 / 25.3 vs 36.5, forest 3M 42.5 vs 67.3;
+# - dbscan, uniform points at the sf0.1 density (grid candidate pairs):
+#   2k (32k) 0.4 vs 7.6, 20k (336k) 0.9 vs 10.2, 60k (1.0M) 0.9 vs
+#   12.2, 200k (3.4M) 2.9 vs 28.0, 1M (17M, one rep) 13.5 vs 88.2.
+# Neither gate crosses over in the measured range: the driver wins
+# everywhere and its peak RSS (Python plus JVM) stays below the
+# distributed run's (2M edges 3.3-3.6 vs 5.0 GB; 1M points 2.9 vs
+# 5.2 GB), but its driver cost grows superlinearly (forest 1M -> 3M
+# 12.5 -> 42.5 s, Python RSS 0.4 -> 1.0 GB) while the distributed
+# rounds flatten. The cap is the largest size measured on both graph
+# shapes, 2M edges, where the driver path still wins.
+_CC_DRIVER_EDGE_CAP = 2_000_000
 
 
 def _driver_cc_labels(edge_rows) -> dict:

@@ -19,6 +19,7 @@ from openseizuredatabase_spark.operators import joins as join_ops
 from openseizuredatabase_spark.operators import splits as split_ops
 from openseizuredatabase_spark.operators import windows as window_ops
 from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
+from openseizuredatabase_spark.lineage import bounded_collect
 from openseizuredatabase_spark.functions import text as text_fns
 from openseizuredatabase_spark.functions.text import bpe_token_count_sql
 from openseizuredatabase_spark.functions.hashing import (
@@ -1314,6 +1315,12 @@ def n9_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BT_SCALE = 100_000_000  # keeps W·SCALE and g·SCALE < 2^53 at 100x
+# Cell cap for n10's driver MM rounds: at or under this many
+# (winner, loser) duel cells, one bounded collect brings the matrix to
+# the driver; above it the unrolled relational plan runs. Not a
+# measured crossover: the matrix has k² cells for a vocabulary of k
+# event types (the lakes have 5), so the cap only bounds driver memory.
+_BT_DRIVER_CELL_CAP = 100_000
 
 
 def _bt_oracle(iters: int = 3) -> str:
@@ -1433,9 +1440,9 @@ def n10_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operands, and Python ints are exact at any magnitude), returning
     # a VALUES literal. Beyond the cap — or on an empty duel set — the
     # unrolled relational plan below is unchanged.
-    n_cells = wl.count()
-    if 0 < n_cells <= 100_000:
-        wlc = [(r["win_t"], r["lose_t"], r["n"]) for r in wl.collect()]
+    tbl = bounded_collect(wl, _BT_DRIVER_CELL_CAP)
+    if tbl is not None and tbl.num_rows > 0:
+        wlc = zip(*(tbl.column(c).to_pylist() for c in ("win_t", "lose_t", "n")))
         opp_d: dict = {}
         wins_d: dict = {}
         for w_t, l_t, n in wlc:

@@ -18,7 +18,8 @@ from openseizuredatabase_spark.operators import filters as filter_ops
 from openseizuredatabase_spark.operators import joins as join_ops
 from openseizuredatabase_spark.operators import splits as split_ops
 from openseizuredatabase_spark.operators import windows as window_ops
-from openseizuredatabase_spark.functions.literal import literal_df
+from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
+from openseizuredatabase_spark.lineage import bounded_collect
 from openseizuredatabase_spark.functions import text as text_fns
 from openseizuredatabase_spark.functions.text import bpe_token_count_sql
 from openseizuredatabase_spark.functions.hashing import (
@@ -1418,6 +1419,9 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _V15_EPS6 = 20000  # eps = 0.02 in micro-units
 _V15_MINPTS = 4
+# the 4 lexicographically forward grid offsets (dx, dy): with same-cell
+# pairs, each unordered pair of neighbouring cells is searched once
+_V15_FORWARD = ((0, 1), (1, -1), (1, 0), (1, 1))
 
 
 def _v15_oracle() -> str:
@@ -1483,23 +1487,28 @@ def _v15_oracle() -> str:
     "family's answer to what v5's k-means cannot do: arbitrary-shape "
     "clusters and an explicit outlier verdict; eps=0.02, minPts=4 "
     "including self). Scale design: the eps-neighborhood graph comes "
-    "from cell-size-eps grid blocking — each point joins only its "
-    "3x3 neighboring cells via a 9-offset EQUI-join (the same "
+    "from cell-size-eps grid blocking — each point is tested only "
+    "against its own cell and the 4 forward neighbor cells (the same "
     "never-O(n^2) rule as v3's buckets and j10's pigeonholes), and "
     "the grid guarantees candidate completeness since an eps-ball "
     "cannot leave adjacent cells. Distances are exact micro-unit "
-    "integers; cores, core-core edges, and components "
-    "(dedup.connected_components: driver union-find up to a fixed "
-    "edge cap, star contraction above it) "
-    "are all integer decisions, so the full cluster assignment is "
-    "value-hash oracled against a recursive-CTE closure over the "
-    "naive quadratic join — the oracle deliberately takes the "
-    "rewrite's replaced plan. Border points adopt the min cluster "
-    "among their core neighbors; noise is reported as cluster -1.",
+    "integers; cores, core-core edges and components are all integer "
+    "decisions, so the full cluster assignment is value-hash oracled "
+    "against a recursive-CTE closure over the naive quadratic join — "
+    "the oracle deliberately takes the rewrite's replaced plan. "
+    "Border points adopt the min cluster among their core neighbors; "
+    "noise is reported as cluster -1. Two paths, one cap: the pinned "
+    "points are collected once under dedup's connected-components "
+    "edge cap, and when the grid's candidate pairs (counted from the "
+    "cell sizes) also fit under it, the whole clustering runs on the "
+    "driver — vectorized pair expansion per cell pair, the same "
+    "union-find as the components finisher — and returns a literal. "
+    "Otherwise the distributed plan runs: a blocked equi-join over "
+    "the 5 offsets, then dedup.connected_components (driver "
+    "union-find up to the same cap, star contraction above it). The "
+    "cap at -1 forces both distributed steps.",
 )
 def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eps6 = _V15_EPS6
-    e2 = eps6 * eps6
     p = _ts(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.round(F.element_at("embedding", 1).cast("double") * 1000000, 0)
@@ -1509,6 +1518,123 @@ def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
+    return _v15_dbscan(p)
+
+
+def _np_ranges(starts, lens):
+    """The concatenated ranges ``starts[i] .. starts[i] + lens[i] - 1``."""
+    import numpy as np
+
+    ends = np.cumsum(lens)
+    return np.arange(ends[-1] if len(ends) else 0) + np.repeat(
+        starts - (ends - lens), lens
+    )
+
+
+def _v15_cells(cx, cy):
+    """Grid blocking of the collected points, vectorised: the point
+    order sorted by cell, each cell's start and size in that order, and
+    the (cell, neighbour cell) index pairs over the 4 forward offsets —
+    the cells the distributed join pairs, found by ``searchsorted``."""
+    import numpy as np
+
+    ux, ix = np.unique(cx, return_inverse=True)
+    uy, iy = np.unique(cy, return_inverse=True)
+    ny = len(uy)
+    key = ix * ny + iy
+    order = np.argsort(key, kind="stable")
+    cells, start, size = np.unique(
+        key[order], return_index=True, return_counts=True
+    )
+    gx, gy = ux[cells // ny], uy[cells % ny]
+
+    def find(sorted_vals, want):
+        # index of each wanted value in sorted_vals, -1 where absent
+        j = np.minimum(np.searchsorted(sorted_vals, want), len(sorted_vals) - 1)
+        return np.where(sorted_vals[j] == want, j, -1)
+
+    src, dst = [], []
+    for dx, dy in _V15_FORWARD:
+        jx, jy = find(ux, gx + dx), find(uy, gy + dy)
+        ok = (jx >= 0) & (jy >= 0)
+        j = find(cells, jx * ny + jy)
+        ok &= j >= 0
+        src.append(np.nonzero(ok)[0])
+        dst.append(j[ok])
+    return order, start, size, np.concatenate(src), np.concatenate(dst)
+
+
+def _v15_candidates(size, src, dst) -> int:
+    """Grid candidate pairs from ``_v15_cells``: same-cell pairs once,
+    plus every pair across a cell and a forward neighbour cell."""
+    return int((size * (size - 1) // 2).sum() + (size[src] * size[dst]).sum())
+
+
+def _v15_driver_rows(tbl, cap: int):
+    """v15's result rows from the collected points ``tbl`` (vec_id, x,
+    y, cx, cy), or ``None`` when the grid's candidate pairs exceed
+    ``cap``. The candidate set is the distributed join's — same-cell
+    pairs once, plus each cell against its 4 forward cells — counted
+    from the cell sizes before any pair is built."""
+    import numpy as np
+
+    cols = [tbl.column(c) for c in ("vec_id", "x", "y", "cx", "cy")]
+    if any(c.null_count for c in cols):
+        return None
+    ids, x, y, cx, cy = (c.to_numpy() for c in cols)
+    n = len(ids)
+    order, start, size, src, dst = _v15_cells(cx, cy)
+    if _v15_candidates(size, src, dst) > cap:
+        return None
+    # forward pairs: every point of a cell against every point of its
+    # forward cell, expanded with repeat (positions in `order`)
+    a_pos = _np_ranges(start[src], size[src])
+    nb = np.repeat(size[dst], size[src])
+    pa = np.repeat(a_pos, nb)
+    pb = _np_ranges(np.repeat(start[dst], size[src]), nb)
+    # same-cell pairs: each position against the later ones in its cell
+    rem = np.repeat(start + size, size) - np.arange(n) - 1
+    pa = np.concatenate([pa, np.repeat(np.arange(n), rem)])
+    pb = np.concatenate([pb, _np_ranges(np.arange(n) + 1, rem)])
+    a, b = order[pa], order[pb]
+    ddx, ddy = x[a] - x[b], y[a] - y[b]
+    near = ddx * ddx + ddy * ddy <= _V15_EPS6 * _V15_EPS6
+    a, b = a[near], b[near]
+    # degree counts the point itself
+    deg = 1 + np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+    core = deg >= _V15_MINPTS
+    both = core[a] & core[b]
+    labels = dedup_ops._driver_cc_labels(
+        zip(ids[a[both]].tolist(), ids[b[both]].tolist())
+    )
+    # a core with no core neighbour is its own cluster
+    comp = ids.copy()
+    core_idx = np.nonzero(core)[0]
+    comp[core_idx] = [labels.get(i, i) for i in ids[core_idx].tolist()]
+    # a border point takes the min component among its core neighbours
+    ab, ba = core[b] & ~core[a], core[a] & ~core[b]
+    bpt = np.concatenate([a[ab], b[ba]])
+    bcomp = np.concatenate([comp[b[ab]], comp[a[ba]]])
+    border = np.full(n, np.iinfo(np.int64).max)
+    np.minimum.at(border, bpt, bcomp)
+    border = border[np.unique(bpt)]
+    clusters, n_core = np.unique(comp[core_idx], return_counts=True)
+    n_border = np.zeros(len(clusters), dtype=np.int64)
+    bc, bn = np.unique(border, return_counts=True)
+    n_border[np.searchsorted(clusters, bc)] = bn
+    rows = list(
+        zip(clusters.tolist(), n_core.tolist(), n_border.tolist(),
+            (n_core + n_border).tolist())
+    )
+    rows.append((-1, 0, 0, n - len(core_idx) - len(border)))
+    return rows
+
+
+def _v15_dbscan(p: DataFrame) -> DataFrame:
+    """Grid-blocked DBSCAN over integer points ``p`` (vec_id, x, y)."""
+    spark = p.sparkSession
+    eps6 = _V15_EPS6
+    e2 = eps6 * eps6
     cell = lambda c: F.floor(F.col(c).cast("double") / float(eps6)).cast(
         "long"
     )
@@ -1527,18 +1653,35 @@ def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of 9n, half the distance tests, same nbr frame.
     # the point table is consumed by FIVE plan branches (three join
     # sides, the self-edge branch, and the noise anti-join); at any
-    # scale re-deriving it means five parquet scans, and locally the
-    # lazily-shared subtree makes AQE's CONCURRENT stage jobs race on
-    # the same uncomputed blocks. One eager materialization, then the
-    # rows rule sizes the layout from the measured count.
-    pc = pc.localCheckpoint(eager=True)
-    pc = pc.coalesce(rows_width(spark, pc.count()))
+    # scale re-deriving it means five parquet scans. It is pinned, and
+    # the gate's bounded collect is its first action: at or under the
+    # connected-components edge cap in points AND in grid candidate
+    # pairs the whole clustering runs on the driver, and otherwise the
+    # collect has already computed the pin the joins below read, so
+    # AQE's concurrent stage jobs never race on uncomputed blocks
+    pc = pc.localCheckpoint(eager=False)
+    cap = dedup_ops._CC_DRIVER_EDGE_CAP
+    tbl = bounded_collect(pc, cap)
+    if tbl is not None:
+        rows = _v15_driver_rows(tbl, cap)
+        if rows is not None:
+            return rows_frame(
+                spark, rows,
+                "cluster long, n_core long, n_border long, n_total long",
+            )
+    # the rows rule sizes the layout from the measured count
+    n = tbl.num_rows if tbl is not None else pc.count()
+    pc = pc.coalesce(rows_width(spark, n))
     # a 4-row constant: a LocalRelation literal, NOT createDataFrame —
     # the RDD path schedules one Python-worker task per core to ship
     # four integers (measured 0.6 s of pure scheduling at sf0.1)
     offs = spark.sql(
-        "SELECT * FROM VALUES (CAST(0 AS LONG), CAST(1 AS LONG)), "
-        "(1, -1), (1, 0), (1, 1) AS t(dx, dy)"
+        "SELECT * FROM VALUES "
+        + ", ".join(
+            f"(CAST({dx} AS LONG), CAST({dy} AS LONG))"
+            for dx, dy in _V15_FORWARD
+        )
+        + " AS t(dx, dy)"
     )
     a = pc.crossJoin(F.broadcast(offs)).select(
         F.col("vec_id").alias("ia"),

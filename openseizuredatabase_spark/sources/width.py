@@ -106,7 +106,8 @@ def spread_cpu_dense(df: DataFrame, spark: SparkSession) -> DataFrame:
 def stream_width(spark: SparkSession, sf_dir: str, table: str = "events"):
     """Set the shuffle width, and so the streaming state-store count, by
     the rows rule over ``table``'s parquet footers for the duration of
-    one availableNow run; the session conf is restored on exit.
+    one availableNow run; the session conf is restored on exit, unset
+    again if it was unset on entry.
 
     Every stateful operator commits one store per shuffle partition per
     micro-batch: at the session width a small replay paid 32 commits x
@@ -120,9 +121,15 @@ def stream_width(spark: SparkSession, sf_dir: str, table: str = "events"):
         yield
         return
     n = _sampled_sum(files, lambda f: pq.ParquetFile(f).metadata.num_rows)
-    sess = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", str(rows_width(spark, n)))
+    key = "spark.sql.shuffle.partitions"
+    # None when the conf was never set: a vanilla session gets it unset
+    # again, not an explicit "32"
+    sess = spark.conf.get(key, None)
+    spark.conf.set(key, str(rows_width(spark, n)))
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess)
+        if sess is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, sess)

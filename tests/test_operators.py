@@ -398,7 +398,10 @@ def test_connected_components_callers_forced_loop_match_oracle(
 ):
     """Every connected-components caller, with the star-contraction
     loop forced (cap -1), still matches its DuckDB oracle at sf0.01,
-    where v15's DBSCAN components are long eps-chains."""
+    where v15's DBSCAN components are long eps-chains. v15 shares the
+    cap: at -1 it also takes its distributed DBSCAN, the one path that
+    calls connected_components (spied, so a split of the cap cannot
+    drop this coverage unnoticed)."""
     import os
 
     from openseizuredatabase_spark.plans.oracle_check import (
@@ -411,8 +414,17 @@ def test_connected_components_callers_forced_loop_match_oracle(
     if not os.path.isdir(sf01):
         pytest.skip("sf0.01 lake not generated")
     monkeypatch.setattr(dedup_ops, "_CC_DRIVER_EDGE_CAP", -1)
+    calls = []
+    real = dedup_ops.connected_components
+
+    def spy(pairs):
+        calls.append(pairs)
+        return real(pairs)
+
+    monkeypatch.setattr(dedup_ops, "connected_components", spy)
     ok, msg = compare_query(spark, _duckdb_conn(sf01), QUERIES[name], sf01)
     assert ok, msg
+    assert calls, f"{name} did not call connected_components"
 
 
 def test_driver_cc_labels_string_ids_and_empty():

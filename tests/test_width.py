@@ -114,3 +114,11 @@ def test_size_string_max_partition_bytes(
     with _conf(spark, "spark.sql.files.maxPartitionBytes", value):
         ok, msg = compare_query(spark, con, QUERIES[name], sf_dir)
     assert ok, f"{name} with maxPartitionBytes={value}: {msg}"
+
+
+def test_stream_width_leaves_an_unset_conf_unset(spark, sf_dir):
+    key = "spark.sql.shuffle.partitions"
+    with _conf(spark, key, None):
+        with width.stream_width(spark, sf_dir):
+            assert spark.conf.get(key, None) is not None
+        assert spark.conf.get(key, None) is None
