@@ -367,6 +367,7 @@ def main() -> int:
     except ValueError:
         sf = -1.0
 
+    from openseizuredatabase_spark.lineage import drop_persisted
     from openseizuredatabase_spark.plans.registry import QUERIES
     from openseizuredatabase_spark.session import get_spark
 
@@ -417,16 +418,6 @@ def main() -> int:
         spark.sparkContext.setJobDescription(None)
         return {"cpu_s": cpu_s, "shuffle_s": shuf_s}
 
-    def drop_persisted() -> None:
-        # per-QUERY hygiene, BLOCKING and outside every timed window:
-        # dead localCheckpoint blocks otherwise wait for an async GC
-        # cycle and accumulate across the ~180-query session (the 100x
-        # stress OOM). Per-PASS non-blocking unpersist was tried and
-        # rejected: the async block-removal churn lands inside the NEXT
-        # pass's timed window and inflated every query ~35%.
-        for r in spark.sparkContext._jsc.getPersistentRDDs().values():
-            r.unpersist()
-
     canaries = [canary()]  # before the core tier
     core_timings: dict[str, float] = {}
     core_passes: dict[str, list[float]] = {}
@@ -443,7 +434,11 @@ def main() -> int:
         core_spread[name] = round(
             (max(passes) - min(passes)) / max(min(passes), 1e-9), 3
         )
-        drop_persisted()
+        # per-QUERY hygiene, blocking and outside every timed window:
+        # dead pinned blocks otherwise wait for an async GC cycle and
+        # accumulate across the ~180-query session (the 100x stress
+        # OOM), and non-blocking removal lands in the next timed window
+        drop_persisted(spark)
 
     canaries.append(canary())  # between the tiers
     slow_set = set(SLOW_EXT)
@@ -455,7 +450,7 @@ def main() -> int:
             ext_timings[name] = round(
                 min(run_once(name) for _ in range(passes)), 3
             )
-            drop_persisted()
+            drop_persisted(spark)
 
     canaries.append(canary())  # after the extended tier
     can_cpu = round(min(c["cpu_s"] for c in canaries), 3)

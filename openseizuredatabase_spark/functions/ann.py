@@ -23,7 +23,7 @@ from pyspark.ml.functions import array_to_vector
 
 from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
 from openseizuredatabase_spark.functions.vectors import cosine
-from openseizuredatabase_spark.lineage import bounded_collect
+from openseizuredatabase_spark.lineage import bounded_collect, pin
 from openseizuredatabase_spark.sources.width import spread_cpu_dense
 
 
@@ -189,7 +189,6 @@ def kmeans_exact(
     k: int = 8,
     iters: int = 2,
     quant: int = 1000,
-    eager_assign: bool = True,
 ):
     """Deterministic Lloyd iterations with CROSS-ENGINE EXACT semantics
     — the IVF coarse quantizer (build_ivf's role), so the clustering
@@ -260,7 +259,7 @@ def kmeans_exact(
     # pin it so each pass reuses one materialized scan. The gate is the
     # first action: above the cap it has already computed the pinned
     # scan, so the failed gate costs only the cap + 1 shipped rows
-    vecs = vecs.localCheckpoint(eager=False)
+    vecs = pin(vecs)
     tbl = bounded_collect(vecs, _KMEANS_DRIVER_ROW_CAP)
     if tbl is not None:
         pdf = tbl.to_pandas()
@@ -331,20 +330,13 @@ def kmeans_exact(
     out_schema = T.StructType(
         [T.StructField(id_col, id_type), T.StructField("cid", id_type)]
     )
-    # assign is one (id, cid) row per vector — the narrow proxy frame.
-    # The PQ/IVF callers reference it from CONCURRENT consumer subtrees
-    # in one plan, and a lazy pin lets AQE's concurrent stage jobs race
-    # each other for the uncomputed cache blocks (measured on v15:
-    # tasks blocked on another stage's locks, 10x run-time vs CPU) —
-    # they keep the eager default. A single-consumer caller
-    # (semantic_dedup: one join feeds one applyInPandas chain) passes
-    # eager_assign=False and skips the standalone materialization job —
-    # the round-11 eager default cost t24 a driver-confirmed ~0.8 s for
-    # a pin only the multi-consumer plans need (round-12, guide §5
-    # persist-only-when-reused).
-    assign = vecs.mapInPandas(assign_codes, schema=out_schema).localCheckpoint(
-        eager=eager_assign
-    )
+    # assign is one (id, cid) row per vector — the narrow proxy frame
+    # the PQ/IVF callers read from several consumer subtrees. The pin
+    # is lazy: with the k-means cap at -1 on Spark 4.1.2 (sf0.1,
+    # local[4]) an eager one cost v5 and v6 one job each (12 → 11)
+    # and was no faster; a caller that discards the assignment
+    # (ivf_two_level) never materializes it
+    assign = pin(vecs.mapInPandas(assign_codes, schema=out_schema))
     return assign, cents_frame(book)
 
 
@@ -497,18 +489,14 @@ def pq_train_encode(
     # vecs feeds the final encode (and, default path, every Lloyd
     # round); pin it so each pass reuses one materialized scan, widened
     # as in kmeans_exact for the CPU-dense encode/training passes.
-    vecs = spread_cpu_dense(to_vecs(emb), spark).localCheckpoint(
-        eager=False
-    )
+    vecs = pin(spread_cpu_dense(to_vecs(emb), spark))
     if train_df is None:
         vt = vecs
     else:
         # production scale path (the t24 sampled-train discipline):
         # codebook training is the n·k_sub·d term — bound it to a
         # sample; the full corpus pays only the single encode pass below
-        vt = spread_cpu_dense(to_vecs(train_df), spark).localCheckpoint(
-            eager=False
-        )
+        vt = pin(spread_cpu_dense(to_vecs(train_df), spark))
 
     def split_subs(v: np.ndarray):
         # dense subspace slices of a quantized vector; ragged tails
@@ -626,11 +614,8 @@ def pq_train_encode(
     )
     # the codes frame is consumed by the ADC scorer AND by candidate
     # filters (v8/v10 reference it more than once); pin the narrow
-    # (id, sub, cid) result EAGERLY so the encode pass runs once and
-    # concurrent AQE stage jobs never race for its blocks
-    assign = vecs.mapInPandas(encode, schema=codes_schema).localCheckpoint(
-        eager=True
-    )
+    # (id, sub, cid) result so the encode pass runs once
+    assign = pin(vecs.mapInPandas(encode, schema=codes_schema))
     # driver-held codebooks: a VALUES LocalRelation, not an RDD
     cents = literal_df(
         spark,
@@ -756,14 +741,12 @@ def ivf_pq_topk(
         quant=quant,
         dim=dim,
     )
-    cand = (
+    # cand gates the codes scan AND re-attaches coarse_cid to the final
+    # top-k: two consumers, one narrow frame — pin it
+    cand = pin(
         assign.join(F.broadcast(probe), "cid")
         .filter(F.col(id_col) != 0)
         .withColumnRenamed("cid", "coarse_cid")
-        # cand gates the codes scan AND re-attaches coarse_cid to the
-        # final top-k: two consumers, one narrow frame — pin it
-        # (eager: no cache-lock races between concurrent consumers)
-        .localCheckpoint(eager=True)
     )
     qdims = emb.filter(F.col(id_col) == 0).select(
         F.posexplode(
@@ -838,9 +821,6 @@ def semantic_dedup(
     import pandas as pd
 
     if assign is None:
-        # lazy assign pin: this is the single-consumer path (one join
-        # below), so the eager materialization job the concurrent
-        # PQ/IVF consumers need would be a pure extra job here
         assign, _ = kmeans_exact(
             emb,
             vec_col=vec_col,
@@ -848,7 +828,6 @@ def semantic_dedup(
             k=k,
             iters=iters,
             quant=quant,
-            eager_assign=False,
         )
     qv = F.transform(
         F.col(vec_col).cast("array<double>"),
@@ -932,9 +911,7 @@ def hierarchical_assign(
     from pyspark.sql import Window
 
     # the flat assignment is DISCARDED (only the trained centroids are
-    # used); eager_assign=False means the never-consumed assign pin
-    # never materializes — the eager default ran a full numpy
-    # assignment pass over the training frame for nothing (round-12)
+    # used); its lazy pin never materializes
     _, cents = kmeans_exact(
         train_df if train_df is not None else emb,
         vec_col=vec_col,
@@ -942,7 +919,6 @@ def hierarchical_assign(
         k=k,
         iters=iters,
         quant=quant,
-        eager_assign=False,
     )
     q = emb.select(
         F.col(id_col),

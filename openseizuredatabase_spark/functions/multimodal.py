@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from openseizuredatabase_spark.lineage import pin
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -635,7 +637,7 @@ def dhash_near_dup_pairs(
     # decoded TWICE per query. Materialize the narrow fingerprint frame
     # once (guide §8: decide with small rows — (id, h0, h1) is the
     # lightweight proxy; the heavy pixel work must run exactly once).
-    hashes = hashes.select(id_col, "h0", "h1").localCheckpoint(eager=True)
+    hashes = pin(hashes.select(id_col, "h0", "h1"))
     b = hashes.select(
         F.col(id_col),
         "h0",
@@ -747,7 +749,7 @@ def fingerprint_match_pairs(
     # sides used to each run their own distinct over the full decode
     # lineage (WAV decode + per-segment FFT), decoding the corpus twice
     # (guide §8 — the landmark codes are the lightweight proxy).
-    d = fps.select(id_col, "code").distinct().localCheckpoint(eager=True)
+    d = pin(fps.select(id_col, "code").distinct())
     left = d.select(
         F.col(id_col).alias("id_a"), F.col("code").alias("code")
     )

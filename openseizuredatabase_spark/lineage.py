@@ -1,58 +1,99 @@
-"""Lineage pinning for iterative DataFrame algorithms.
+"""The engine's one materialization rule.
 
-``pin`` is ``DataFrame.localCheckpoint(eager=False)`` plus one crucial
-difference: the returned frame does NOT carry the origin plan's
-statistics.
+Every intermediate frame the package reuses — a loop's per-round state,
+a narrow proxy read by several branches, an expensive decode read twice
+— is materialized with :func:`pin`, and nothing else in the package
+calls ``localCheckpoint``, ``persist`` or ``cache``
+(``tests/test_lineage.py`` scans the sources for it).
 
-Why that matters: ``Dataset.localCheckpoint`` wraps the checkpointed RDD
-in a ``LogicalRDD`` that preserves the child plan's estimated
-``sizeInBytes`` (a ``BigInt``). Join size estimation multiplies the two
-sides' estimates, so a loop of the shape
+``pin(df, eager=False)`` is ``df.localCheckpoint(eager)`` with one
+statistics rule: the pinned frame keeps the size estimate the
+checkpoint carries when that estimate is at most
+``spark.sql.defaultSizeInBytes``; otherwise it is rebuilt without
+statistics and the planner falls back to that default.
 
-    labels = step(labels).localCheckpoint()      # step contains a join
+Why both halves matter:
 
-SQUARES the carried estimate every round. The number itself compounds
-across checkpoints — after N rounds the estimate is a
-``~2^N``-digit ``BigInteger``, and Catalyst's size arithmetic
-(``BigInteger.multiply`` → Toom-Cook) starts costing SECONDS of driver
-CPU per planning pass. Measured on the v15 DBSCAN component loop: round
-9's planning took 59 s and rounds grew ~2.5× each — a pure
-driver-side statistics artifact while the actual data was 2k rows
-(diagnosed per guide §7.3 with driver thread dumps:
-``java.math.BigInteger.multiplyToomCook3`` burning a whole core).
+* ``Dataset.localCheckpoint`` wraps the checkpointed RDD in a
+  ``LogicalRDD`` that keeps the origin plan's estimated ``sizeInBytes``
+  (a ``BigInt``). Join estimation multiplies the two sides' estimates,
+  so a loop of the shape ``labels = step(labels).localCheckpoint()``
+  (``step`` contains a join) SQUARES the carried estimate every round:
+  after N rounds it is a ~2^N-digit ``BigInteger`` and Catalyst's size
+  arithmetic (``BigInteger.multiplyToomCook3``, seen in driver thread
+  dumps) costs seconds per planning pass. On the v15 DBSCAN component
+  loop round 9's planning took 59 s. In a 24-round self-join loop on
+  Spark 4.1.2 the raw estimate grew from 22 to 169, 1,344 and 10,745
+  bits by round 9, and py4j raised ``ValueError`` converting it to a
+  Python ``int`` — so :func:`pin` reads it as JVM-formatted digits.
+  Above the default the estimate carries no information the default
+  does not (the default is the planner's "unknown, huge"), so resetting
+  it loses nothing and keeps every round's planning cost constant.
+* Dropping EVERY estimate (this module's earlier rule) also drops the
+  static broadcast of small pinned frames: routing the raw checkpoints
+  through it slowed p10, t18, t35 and t45 by 20–30 % at sf0.1 and
+  added jobs and stages to a19, t5 and t42. Keeping the small estimates
+  plans those joins exactly as the raw checkpoints did, and re-enables
+  the static broadcast at the former stat-dropping sites (j13: 20 → 14
+  jobs; t36: 19 → 14).
 
-``pin`` rebuilds the frame from the checkpointed RDD via
-``internalCreateDataFrame``, whose ``LogicalRDD`` has no origin stats —
-the estimate resets to ``spark.sql.defaultSizeInBytes`` every round, so
-planning cost stays constant regardless of iteration count. The cost:
-a pinned frame is never auto-broadcast from STATIC estimates (the
-default is conservative-huge). Inside the iterative operators every
-deliberately-broadcast side already carries an explicit
-``F.broadcast``/hint, and AQE still converts shuffle joins to broadcast
-at runtime from REAL sizes, so nothing regresses at any scale.
+Lazy (the default) versus eager: a lazy pin computes and stores its
+blocks in the first action that reads it, inside that action's own
+job; an eager pin runs one extra job at call time. Use eager only
+where a lazy pin is measured to re-run stages AND be slower. No site
+is: on Spark 4.1.2 (sf0.1, ``local[4]``) the twelve formerly eager
+pins, kept for an AQE cache-lock race seen on an older Spark, ran
+fewer jobs lazily at equal or lower median time — m46–m54's media
+fingerprints one job fewer each; with the caps at -1, v5/v6/v8 one
+fewer, v10 three and v15's distributed DBSCAN two or three.
 
-The materialization semantics are identical to a lazy localCheckpoint:
-nothing runs at call time; the first action computes and persists the
-RDD (including ``Dataset.localCheckpoint``'s defensive per-row copy —
-building from ``queryExecution.toRdd`` directly would capture Spark's
-REUSED UnsafeRow buffers and corrupt the persisted blocks).
+:func:`drop_persisted` is the between-query counterpart: a long-lived
+harness session frees completed queries' pinned blocks with it, and it
+blocks until they are gone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
-def pin(df: DataFrame) -> DataFrame:
-    """Truncate ``df``'s lineage (lazy local checkpoint) and DROP the
-    origin plan's statistics so iterative loops can't compound them."""
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)`` whose size estimate is kept when it
+    is at most ``spark.sql.defaultSizeInBytes`` and reset to that
+    default otherwise, so iterative loops cannot compound it."""
     spark = df.sparkSession
-    jdf_ck = df._jdf.localCheckpoint(False)
-    rdd = jdf_ck.queryExecution().toRdd()
+    ck = df.localCheckpoint(eager)
+    limit = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    digits = size_digits(ck)
+    if len(digits) <= len(str(limit)) and int(digits) <= limit:
+        return ck
+    # rebuild from the checkpointed RDD: its LogicalRDD has no origin
+    # stats. The RDD is Dataset.localCheckpoint's defensively copied one
+    # — building from the origin's queryExecution.toRdd would capture
+    # Spark's REUSED UnsafeRow buffers and corrupt the persisted blocks
     jdf = spark._jsparkSession.internalCreateDataFrame(
-        rdd, df._jdf.schema(), False
+        ck._jdf.queryExecution().toRdd(), df._jdf.schema(), False
     )
     return DataFrame(jdf, spark)
+
+
+def size_digits(df: DataFrame) -> str:
+    """The decimal digits of ``df``'s planner size estimate, formatted on
+    the JVM. ``stats().sizeInBytes()`` would hand the ``BigInt`` to
+    Python through ``int(str)``, which refuses more than 4,300 digits —
+    a compounded loop estimate passes that within ten rounds."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return stats.productIterator().take(1).mkString()  # sizeInBytes
+
+
+def drop_persisted(spark: SparkSession) -> None:
+    """Unpersist every persisted RDD of ``spark``'s context and wait for
+    the blocks to go. ``JavaRDD.unpersist()`` without an argument does
+    not wait (``RDD.unpersist``'s ``blocking`` defaults to false in
+    Spark 4.1.2), which lands the block removal in the next timed
+    window."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
 
 
 def bounded_collect(df: DataFrame, max_rows: int):

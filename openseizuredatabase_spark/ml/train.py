@@ -22,6 +22,7 @@ from typing import Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.ml.inference import (
     MLPModel,
     iter_training_batches,
@@ -169,9 +170,9 @@ def fit_tree(
         .alias(f"b{i}")
         for i, c in enumerate(feature_cols)
     ]
-    binned = df.select(
-        F.col(label_col).cast("double").alias("y"), *bin_cols
-    ).localCheckpoint(eager=False)
+    binned = pin(
+        df.select(F.col(label_col).cast("double").alias("y"), *bin_cols)
+    )
 
     feat = [-1]
     thr = [0.0]
@@ -254,9 +255,7 @@ def fit_tree(
                 F.col("node") == node,
                 F.when(F.col(f"b{f}") <= b, li).otherwise(ri),
             ).otherwise(node_col)
-        frontier = frontier.withColumn("node", node_col).localCheckpoint(
-            eager=False
-        )
+        frontier = pin(frontier.withColumn("node", node_col))
         open_nodes = next_open
     if open_nodes:  # leaves created at the final level: fill their values
         vals = (

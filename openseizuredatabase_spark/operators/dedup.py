@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from openseizuredatabase_spark.functions.hashing import md5_long, seeded_md5_long
 from openseizuredatabase_spark.functions.literal import rows_frame
 from openseizuredatabase_spark.functions.text import fingerprint, tokens
+from openseizuredatabase_spark.lineage import bounded_collect, pin
 from openseizuredatabase_spark.sources.width import rows_width
 
 
@@ -371,12 +372,12 @@ def jaccard_candidate_pairs(
     )
     # `out` feeds three consumers (pairs + both size sides); collect_list
     # upstream is order-nondeterministic, which bars ReuseExchange from
-    # collapsing the shared subtree — a lazy localCheckpoint materializes
+    # collapsing the shared subtree — a lazy pin materializes
     # the (small: df-capped pairs + one row per doc) frame once instead
     # of running scan+tokenize+window-agg per branch. Tradeoff:
     # checkpointed blocks skip lineage recovery; for a deterministic
     # batch pipeline a lost executor means re-running the query.
-    out = out.localCheckpoint(eager=False)
+    out = pin(out)
     common = out.filter(F.col("id_b").isNotNull())
     sizes = out.filter(F.col("id_b").isNull()).select(
         F.col("id_a").alias(id_col), F.col("n_common").alias("n_sh")
@@ -582,7 +583,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     sees only scalar censuses and, at or under the cap, the bounded
     edge list.
     """
-    from openseizuredatabase_spark.lineage import bounded_collect, pin
 
     spark = pairs.sparkSession
     id_ddl = pairs.schema["id_a"].dataType.simpleString()

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.width import rows_width
 
 
@@ -50,8 +51,6 @@ def integer_pagerank(
     # (the t41 lesson, SCALE.md session 4b). Checkpointing pins the
     # pre-AQE shuffle partitioning, so re-derive the loop width from
     # the materialized edge count by the rows rule (sources/width.py).
-    from openseizuredatabase_spark.lineage import pin
-
     # lazy pin whose first action IS the width census (one
     # materialization job instead of eager-checkpoint + count = two —
     # round-12, the CC census pattern)
@@ -90,7 +89,7 @@ def integer_pagerank(
         # Catalyst run all rounds as ONE unrolled job; a big graph still
         # truncates to keep task lineage and plan size bounded.
         if n_part > 1 or iters > 6:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks)
     return (
         ranks.join(nodes, "node")
         .select("node", F.col("wu").alias("w_out"), F.col("r").alias("rank_micro"))
@@ -124,8 +123,6 @@ def hits_scores(
     i.e. max node degree · scale² < 9.2e18 → degree < 9e6 at the
     default micro scale; drop ``scale`` to 1e4 for hotter graphs (the
     lm.py gradient-bound discipline)."""
-    from openseizuredatabase_spark.lineage import pin
-
     # lazy pin whose first action IS the width census (one
     # materialization job instead of eager-checkpoint + count = two —
     # round-12, the CC census pattern); loop width by the rows rule
@@ -151,13 +148,13 @@ def hits_scores(
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum(F.col("h") * F.col("w")).cast("long").alias("a"))
         )
-        auths = renorm(a_raw, "a").localCheckpoint(eager=False)
+        auths = pin(renorm(a_raw, "a"))
         h_raw = (
             edges.join(auths, edges["v"] == auths["node"])
             .groupBy(F.col("u").alias("node"))
             .agg(F.sum(F.col("a") * F.col("w")).cast("long").alias("h"))
         )
-        hubs = renorm(h_raw, "h").localCheckpoint(eager=False)
+        hubs = pin(renorm(h_raw, "h"))
     return hubs.select(
         F.lit("hub").alias("role"), "node", F.col("h").alias("score_micro")
     ).unionByName(

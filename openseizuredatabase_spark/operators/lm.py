@@ -16,7 +16,7 @@ Scale shapes:
   O(1) buffers) + a 1-row argmax fetch (the algorithm's inherent sync
   point) + an Arrow-batched merge apply (greedy left-to-right pair
   substitution is sequential PER WORD — words are short, batches are
-  vectorized). The vocab frame is localCheckpoint'd per round to stop
+  vectorized). The vocab frame is pinned per round to stop
   lineage growth across iterations.
 * The bigram LM is two aggregations (bigram counts, unigram counts) and
   scoring is an equi-join of the document bigrams against the model on
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openseizuredatabase_spark.functions.text import tokens
+from openseizuredatabase_spark.lineage import pin
 
 
 # ---------------------------------------------------------------------------
@@ -126,9 +127,12 @@ def train_bpe(
                 ]
                 yield pdf
 
-        sym_vocab = sym_vocab.mapInPandas(
-            apply_merge, "word string, freq long, syms array<string>"
-        ).localCheckpoint(eager=False)  # truncate per-round lineage
+        # truncate per-round lineage
+        sym_vocab = pin(
+            sym_vocab.mapInPandas(
+                apply_merge, "word string, freq long, syms array<string>"
+            )
+        )
     return merges
 
 
@@ -205,15 +209,14 @@ def bigram_doc_scores(
     token occurrences including each doc's final token, which bigram
     first-positions miss.
     """
-    dbc = (
+    # consumed by the model aggregation AND the scoring join; lazy
+    # (not eager) measured 1.8 s faster at sf0.1 — the defensive
+    # per-row copy of an eager materialization costs more than the
+    # shared recompute it saves on this string-heavy frame
+    dbc = pin(
         doc_bigrams(docs, id_col, text_col)
         .groupBy(id_col, "a", "b")
         .agg(F.count(F.lit(1)).alias("n"))
-        # consumed by the model aggregation AND the scoring join; lazy
-        # (not eager) measured 1.8 s faster at sf0.1 — the defensive
-        # per-row copy of an eager materialization costs more than the
-        # shared recompute it saves on this string-heavy frame
-        .localCheckpoint(eager=False)
     )
     bigram_counts = dbc.groupBy("a", "b").agg(
         F.sum("n").alias("c_ab")
@@ -322,10 +325,9 @@ def kneser_ney_model(
     # aggregated (a, b, c_ab) table (vocabulary-pair-bounded, far
     # smaller than the bigram stream) so the pass runs once; guide §5
     # persist-when-reused-and-expensive.
-    bigram_counts = (
+    bigram_counts = pin(
         bg.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        .localCheckpoint(eager=False)
     )
     follow = bigram_counts.groupBy("a").agg(
         F.sum("c_ab").alias("c_a"),
@@ -433,7 +435,7 @@ def dsir_importance(
     from openseizuredatabase_spark.functions.hashing import seeded_md5_long
 
     bg = d.select(id_col, "__t", *keep_cols, bigram.alias("w"))
-    bb = (
+    bb = pin(
         bg.select(
             id_col,
             "__t",
@@ -442,7 +444,6 @@ def dsir_importance(
         )
         .groupBy(id_col, "__t", *keep_cols, "b")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
     )
     model = bb.groupBy("b").agg(
         F.sum(F.when(F.col("__t"), F.col("n")).otherwise(0)).alias("tn"),
@@ -592,10 +593,10 @@ def hashed_classifier_scores(
     # nt is consumed three times (the xt feature join, the label frame,
     # and the final output's n_bigrams column); pin the one-row-per-doc
     # aggregate so the bigram explode+count subtree runs once
-    nt = nt.localCheckpoint(eager=False)
+    nt = pin(nt)
     # feature frame: per-doc bucket micro-ratios + a bias feature b=-1;
     # reused by every GD step and the final scoring pass
-    xt = (
+    xt = pin(
         bb.join(nt.select(id_col, "nb"), id_col)
         .select(
             id_col,
@@ -611,7 +612,6 @@ def hashed_classifier_scores(
                 F.lit(1000000).cast("long").alias("x"),
             )
         )
-        .localCheckpoint(eager=False)
     )
     # -- training (round-11 shape, guide §2.4 + §4.2): the model is only
     # n_buckets+1 int64 weights — metadata-sized — so it lives on the
@@ -651,7 +651,7 @@ def hashed_classifier_scores(
     )
     # one row per doc: flattened feature arrays + label; ONE shuffle,
     # pinned — every GD pass re-reads this frame shuffle-free
-    docfeat = (
+    docfeat = pin(
         xt.groupBy(id_col)
         .agg(
             F.collect_list("b").alias("bs"),
@@ -659,7 +659,6 @@ def hashed_classifier_scores(
         )
         .join(ydoc, id_col)
         .select("bs", "xs", "ym")
-        .localCheckpoint(eager=False)
     )
     nb1 = n_buckets + 1  # bucket b maps to index b+1 (bias b=-1 → 0)
     part_schema = T.StructType(

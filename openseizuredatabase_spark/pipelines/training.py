@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openseizuredatabase_spark.functions.features import extract_epoch_features
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.ml.inference import (
     LinearModel,
     iter_training_batches,
@@ -116,7 +117,8 @@ def run_training_pipeline(
 ) -> tuple[LinearModel, DataFrame]:
     """Full §3.2 chain; returns (model, per-event test metrics)."""
     cfg = cfg or TrainConfig()
-    epochs = prepare_epochs(events_dp, cfg).cache()
+    # the fit's epochs and the test scoring all read this frame
+    epochs = pin(prepare_epochs(events_dp, cfg))
     train = epochs.filter(F.col("fold") != cfg.test_fold)
     test = epochs.filter(F.col("fold") == cfg.test_fold)
     model = fit_logistic(train, cfg)

@@ -26,6 +26,7 @@ from openseizuredatabase_spark.functions.hashing import (
     seeded_md5_long,
     seeded_md5_long_sql,
 )
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
@@ -1282,8 +1283,8 @@ def d9_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("h") % 1000003).cast("long").alias(s_col),
         )
 
-    d1a = digest(a, "n_a", "s_a").localCheckpoint(eager=False)
-    d1b = digest(b, "n_b", "s_b").localCheckpoint(eager=False)
+    d1a = pin(digest(a, "n_a", "s_a"))
+    d1b = pin(digest(b, "n_b", "s_b"))
 
     def up(df, n_col, s_col):
         return df.groupBy(
@@ -1315,7 +1316,7 @@ def d9_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     l1b = d1b.withColumn("sup", fdiv(F.col("bkt"), F.lit(256))).join(
         sups, "sup"
     )
-    mism = (
+    mism = pin(
         l1a.drop("sup")
         .join(l1b.drop("sup"), "bkt", "full")
         .filter(
@@ -1333,7 +1334,6 @@ def d9_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_a", F.lit(0)).cast("long").alias("n_a"),
             F.coalesce("n_b", F.lit(0)).cast("long").alias("n_b"),
         )
-        .localCheckpoint(eager=False)
     )
     bkts = F.broadcast(mism.select("bkt"))
     ra = a.join(bkts, "bkt").select(
@@ -1572,12 +1572,14 @@ def d11_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("price_c"),
     )
-    pos = base.withColumn(
-        "pos",
-        F.row_number().over(
-            Window.partitionBy("file_id").orderBy("ok", "ln")
-        ),
-    ).localCheckpoint(eager=False)
+    pos = pin(
+        base.withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("file_id").orderBy("ok", "ln")
+            ),
+        )
+    )
     dv = pos.filter(
         md5_long(
             F.concat_ws(

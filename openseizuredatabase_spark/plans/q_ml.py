@@ -27,6 +27,7 @@ from openseizuredatabase_spark.functions.hashing import (
     seeded_md5_long,
     seeded_md5_long_sql,
 )
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
@@ -764,7 +765,7 @@ def m54_audio_clip_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _gen_spread(ev).mapInPandas(gen, "media_id long, content binary")
     # corpus and probe branches both replay this frame: pin the narrow
     # landmark table so WAV synth + FFT fingerprinting runs once
-    fps = audio_fingerprint(media, window=64).localCheckpoint(eager=True)
+    fps = pin(audio_fingerprint(media, window=64))
     corpus = fps.filter(F.col("media_id") < 100).select(
         F.col("media_id").alias("corpus_id"),
         F.col("k").alias("c_k"),
@@ -1404,13 +1405,15 @@ def m52_image_video_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["media_id", "media_type", "content"],
             )
 
-    media = _gen_spread(ev).mapInPandas(
-        gen, "media_id long, media_type string, content binary"
-        # the video branch and the image branch each replay their
-        # filter over this frame — without a pin the whole corpus is
-        # SYNTHESIZED twice (encode is the expensive half of the
-        # fixture codec path); the bytes are a bounded fixture corpus
-    ).localCheckpoint(eager=True)
+    # the video branch and the image branch each replay their
+    # filter over this frame — without a pin the whole corpus is
+    # SYNTHESIZED twice (encode is the expensive half of the
+    # fixture codec path); the bytes are a bounded fixture corpus
+    media = pin(
+        _gen_spread(ev).mapInPandas(
+            gen, "media_id long, media_type string, content binary"
+        )
+    )
     frames = mjpeg_frame_stats(
         media.filter(F.col("media_type") == "video")
     ).select("media_id", "frame_idx", "h0", "h1")
@@ -1573,9 +1576,9 @@ def m53_clip_offset_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus and probe branches both replay this frame: pin the narrow
     # per-frame fingerprints so synth+decode runs once (guide §8 —
     # decide with small rows)
-    frames = mjpeg_frame_stats(media).select(
-        "media_id", "frame_idx", "h0", "h1"
-    ).localCheckpoint(eager=True)
+    frames = pin(
+        mjpeg_frame_stats(media).select("media_id", "frame_idx", "h0", "h1")
+    )
     corpus = frames.filter(F.col("media_id") < 100)
     probes = frames.filter(F.col("media_id") >= 100).select(
         "media_id", F.col("frame_idx").alias("p_frame_idx"), "h0", "h1"
@@ -2837,7 +2840,7 @@ def m27_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = ev.agg(
         F.min(vmic).alias("vmin"), F.max(vmic).alias("vmax")
     )
-    state = (
+    state = pin(
         ev.select(
             F.col("event_id").alias("rid"),
             "event_type",
@@ -2859,7 +2862,6 @@ def m27_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("res"),
         )
-        .localCheckpoint(eager=False)
     )
     reports = []
     for r in range(1, 3):
@@ -2899,7 +2901,7 @@ def m27_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast(
             "double"
         )
-        sp = (
+        sp = pin(
             cand.crossJoin(F.broadcast(tot))
             .filter((F.col("nl") > 0) & (F.col("nl") < F.col("nt")))
             .select("feat", "b", "sl", "nl", "st", "nt", gain.alias("gain"))
@@ -2915,12 +2917,11 @@ def m27_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("st") - F.col("sl"), F.col("nt") - F.col("nl")
                 ).alias("pred_r"),
             )
-            .localCheckpoint(eager=False)
         )
         left = (
             (F.col("feat") == "v") & (F.col("f1b") <= F.col("b"))
         ) | ((F.col("feat") == "h") & (F.col("f2b") <= F.col("b")))
-        state = (
+        state = pin(
             state.crossJoin(F.broadcast(sp))
             .select(
                 "rid",
@@ -2934,7 +2935,6 @@ def m27_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
                 .alias("res"),
             )
-            .localCheckpoint(eager=False)
         )
         rk = fdiv(F.col("res"), F.lit(1000))
         rm = state.select(rk.alias("rk")).agg(
@@ -3520,7 +3520,7 @@ def _m32_oracle() -> str:
 )
 def m32_batch_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis, u0, u1, u2 = _m32_step()
-    base = (
+    base = pin(
         _t(spark, sf_dir, "lineitem")
         .select(
             F.when(F.col("l_returnflag") == "R", 1)
@@ -3529,7 +3529,6 @@ def m32_batch_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("l_quantity", 0).cast("long").alias("x1"),
             F.round(F.col("l_discount") * 100, 0).cast("long").alias("x2"),
         )
-        .localCheckpoint(eager=False)
     )
     w = spark.range(1).select(
         F.lit(0).cast("long").alias("a0"),
@@ -3762,11 +3761,10 @@ def _m33_oracle() -> str:
     "shared text. Emits per-item latent weight + exact SSE census.",
 )
 def m33_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = (
+    r = pin(
         _t(spark, sf_dir, "events")
         .groupBy("user_id", F.col("event_type").alias("item"))
         .agg(F.count(F.lit(1)).cast("long").alias("r"))
-        .localCheckpoint(eager=False)
     )
     v = (
         r.select("item")
@@ -3785,9 +3783,7 @@ def m33_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("item")
             .agg(F.expr(vv).alias("vm"))
         )
-        u, v = u.localCheckpoint(eager=False), v.localCheckpoint(
-            eager=False
-        )
+        u, v = pin(u), pin(v)
     err = (
         r.join(u, "user_id")
         .join(F.broadcast(v), "item")

@@ -27,6 +27,7 @@ from openseizuredatabase_spark.functions.hashing import (
     seeded_md5_long,
     seeded_md5_long_sql,
 )
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
@@ -1904,9 +1905,8 @@ def a18_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    toks = docs.select(
-        F.explode(text_fns.tokens(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)  # feeds the counters AND the top-10
+    # feeds the counters AND the top-10
+    toks = pin(docs.select(F.explode(text_fns.tokens(F.col("text"))).alias("t")))
     cm = sketches.countmin_counters(toks, "t")
     cnt = toks.groupBy("t").agg(F.count(F.lit(1)).alias("n_true"))
     top = cnt.orderBy(F.col("n_true").desc(), "t").limit(10)
@@ -1990,16 +1990,15 @@ def a19_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ev.filter(F.col("event_type") == "view")
     ta = sketches.kmv_topk(a.withColumn("g", F.lit(1)), ["g"], "user_id")
     tb = sketches.kmv_topk(b.withColumn("g", F.lit(1)), ["g"], "user_id")
-    ta = ta.select("h").localCheckpoint(eager=False)
-    tb = tb.select("h").localCheckpoint(eager=False)
+    ta = pin(ta.select("h"))
+    tb = pin(tb.select("h"))
     w = Window.orderBy("h")
-    tu = (
+    tu = pin(
         ta.union(tb)
         .distinct()
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("h")
-        .localCheckpoint(eager=False)
     )
     ua = tu.agg(F.count(F.lit(1)).alias("n_in"), F.max("h").alias("kth"))
     flags = (
@@ -2014,8 +2013,8 @@ def a19_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ha = a.select(md5_long(F.col("user_id").cast("string")).alias("h")).distinct()
     hb = b.select(md5_long(F.col("user_id").cast("string")).alias("h")).distinct()
-    ha = ha.localCheckpoint(eager=False)
-    hb = hb.localCheckpoint(eager=False)
+    ha = pin(ha)
+    hb = pin(hb)
     exact = (
         ha.agg(F.count(F.lit(1)).alias("n_a_exact"))
         .crossJoin(hb.agg(F.count(F.lit(1)).alias("n_b_exact")))
@@ -3367,7 +3366,7 @@ def a21_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n")
     )
     w = c.groupBy("src").agg(F.sum("n").cast("long").alias("wt"))
-    p = (
+    p = pin(
         c.join(w, "src")
         .select(
             "src",
@@ -3377,7 +3376,6 @@ def a21_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / CAST(wt AS DOUBLE)) AS BIGINT)"
             ).alias("p_micro"),
         )
-        .localCheckpoint(eager=False)
     )
     k = w.agg(F.count(F.lit(1)).cast("long").alias("k"))
     pi = w.crossJoin(F.broadcast(k)).select(
@@ -3452,8 +3450,6 @@ def _copart_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     salt/degree-cap refinement for degree-1e8 keys applies to both.
     The pin is LAZY with the width census as its first action (one
     materialization job, not eager-checkpoint + count = two)."""
-    from openseizuredatabase_spark.lineage import pin
-
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     )
@@ -3535,11 +3531,10 @@ def j13_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.join(edges, d.node == edges.u)
             .select(F.col("v").alias("node"), (F.col("hop") + 1).alias("hop"))
         )
-        d = (
+        d = pin(
             d.unionByName(nxt)
             .groupBy("node")
             .agg(F.min("hop").cast("long").alias("hop"))
-            .localCheckpoint(eager=False)
         )
     return d
 
@@ -3592,7 +3587,7 @@ def j14_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, edges = _copart_edges(spark, sf_dir)
     nodes = edges.select(F.col("u").alias("node")).distinct()
     for _ in range(_J14_ROUNDS):
-        nodes = (
+        nodes = pin(
             edges.join(nodes.withColumnRenamed("node", "u"), "u")
             .join(
                 nodes.withColumnRenamed("node", "v"),
@@ -3602,7 +3597,6 @@ def j14_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _J14_K)
             .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=False)
         )
     return (
         edges.join(nodes.withColumnRenamed("node", "u"), "u")
@@ -3667,7 +3661,7 @@ def j14_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "slope_micro*x).",
 )
 def a28_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
+    daily = pin(
         _t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
@@ -3680,7 +3674,6 @@ def a28_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x")
         .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .localCheckpoint(eager=False)
     )
     a = daily.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = daily.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
@@ -3801,7 +3794,7 @@ def a29_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     gmax = o.agg(
         F.max(F.unix_micros("o_orderdate")).cast("long").alias("gm")
     )
-    rfm = (
+    rfm = pin(
         o.crossJoin(F.broadcast(gmax))
         .groupBy(F.col("o_custkey").alias("c"), "gm")
         .agg(
@@ -3825,7 +3818,6 @@ def a29_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "f_cnt",
             "m_c",
         )
-        .localCheckpoint(eager=False)
     )
     nt = rfm.agg(F.count(F.lit(1)).cast("long").alias("nt"))
     cb = (
@@ -4132,14 +4124,13 @@ def j16_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("anc").alias("janc"),
             F.col("dist").alias("jdist"),
         )
-        st = (
+        st = pin(
             st.join(jump, st.anc == F.col("jnode"))
             .select(
                 "node",
                 F.col("janc").alias("anc"),
                 (F.col("dist") + F.col("jdist")).cast("long").alias("dist"),
             )
-            .localCheckpoint(eager=False)
         )
     return st.select(
         "node",
@@ -4472,8 +4463,6 @@ def s23_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross-checks the pair table (sum c == n_wedges).",
 )
 def j19_butterfly_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openseizuredatabase_spark.lineage import pin
-
     # Round-12: (a) the edge materialization is a lazy pin whose first
     # action is the width census (one job, not eager-checkpoint +
     # count = two); (b) the CPU-dense wedge self-join no longer runs

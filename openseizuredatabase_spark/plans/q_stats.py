@@ -19,7 +19,7 @@ from openseizuredatabase_spark.operators import joins as join_ops
 from openseizuredatabase_spark.operators import splits as split_ops
 from openseizuredatabase_spark.operators import windows as window_ops
 from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
-from openseizuredatabase_spark.lineage import bounded_collect
+from openseizuredatabase_spark.lineage import bounded_collect, pin
 from openseizuredatabase_spark.functions import text as text_fns
 from openseizuredatabase_spark.functions.text import bpe_token_count_sql
 from openseizuredatabase_spark.functions.hashing import (
@@ -1019,7 +1019,7 @@ def n23_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ~20-row contingency table feeds four downstream branches
     # (marginals, totals, terms) — pin it so the corpus aggregation
     # runs once instead of once per branch
-    obs = obs.localCheckpoint(eager=False)
+    obs = pin(obs)
     rt = obs.groupBy("r").agg(F.sum("o").cast("long").alias("nr"))
     ct = obs.groupBy("c").agg(F.sum("o").cast("long").alias("nc"))
     tot = obs.agg(
@@ -1097,13 +1097,13 @@ def n23_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact BIGINTs through one IEEE sqrt/divide.",
 )
 def n24_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
+    # feeds three branches below
+    daily = pin(
         _t(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.date_trunc("day", F.col("ts")).alias("day")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .localCheckpoint(eager=False)  # feeds three branches below
     )
     a = daily.select(
         "event_type", F.col("day").alias("da"), F.col("y").alias("ya")
@@ -1425,9 +1425,7 @@ def n10_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the duel-count matrix feeds every MM round (twice each, through
     # opp and the weight chain) — pin the k²-row frame so the window
     # pass over events runs exactly once
-    wl = duels.groupBy("win_t", "lose_t").agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    wl = pin(duels.groupBy("win_t", "lose_t").agg(F.count(F.lit(1)).alias("n")))
     # Round-12 (guide §1.2, the p10/v14/t34 driver-iterate pattern):
     # everything downstream of wl — opp/winsum/games and the 3 MM
     # rounds — is arithmetic over the k²-bounded duel-count matrix
@@ -2555,7 +2553,7 @@ _N19_Q = (
 )
 def n19_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    cell = (
+    cell = pin(
         ev.select(
             (
                 (F.unix_micros("ts") - F.unix_micros("ts") % 86400000000)
@@ -2567,7 +2565,6 @@ def n19_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("day", "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("val"))
-        .localCheckpoint(eager=False)
     )
     kk = ev.agg(
         F.countDistinct("event_type").cast("long").alias("k")

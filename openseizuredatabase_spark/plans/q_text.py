@@ -26,6 +26,7 @@ from openseizuredatabase_spark.functions.hashing import (
     seeded_md5_long,
     seeded_md5_long_sql,
 )
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
@@ -1918,7 +1919,7 @@ def t28_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    cnt = cnt.localCheckpoint(eager=False)  # feeds stats AND top-100
+    cnt = pin(cnt)  # feeds stats AND top-100
     stats = cnt.agg(
         F.count(F.lit(1)).alias("n_types"),
         F.sum("f").alias("n_tokens"),
@@ -2172,15 +2173,13 @@ def _t32_oracle() -> str:
 def t32_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents")
     sh = dedup_ops.shingles(docs, "text", "doc_id", 5)
-    sh = sh.localCheckpoint(eager=False)  # sigs + sizes + common reuse it
+    sh = pin(sh)  # sigs + sizes + common reuse it
     sigs = dedup_ops.minhash_signatures(sh, "doc_id", 8)
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = pin(sigs)
     # the candidate-pair frame feeds BOTH the estimate join and the
     # true-Jaccard verification join; pin it so the band self-join +
     # distinct runs once (same reuse rule as sh/sigs above)
-    pairs = dedup_ops.lsh_band_pairs(sigs, "doc_id", 8, 2).localCheckpoint(
-        eager=False
-    )
+    pairs = pin(dedup_ops.lsh_band_pairs(sigs, "doc_id", 8, 2))
     a = sigs.select(
         F.col("doc_id").alias("id_a"),
         *[F.col(f"mh_{j}").alias(f"a{j}") for j in range(8)],
@@ -3374,13 +3373,12 @@ def t41_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("blk"),
     )
     reps = c.groupBy("blk", "name").agg(F.min("id").alias("id"))
-    e = (
+    # the edge list feeds three join aliases; materialize it once
+    # (t5's shingle-frame pattern) instead of re-running the
+    # candidate join per alias
+    e = pin(
         _ham_candidates(reps.select("id", "name", "blk"), max_dist=1)
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        # the edge list feeds three join aliases; materialize it once
-        # (t5's shingle-frame pattern) instead of re-running the
-        # candidate join per alias
-        .localCheckpoint(eager=False)
     )
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
@@ -3489,7 +3487,11 @@ def t42_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", text_fns.tokens(F.col("text")).alias("t")
     ).filter(F.size("t") >= 5)
     idx = F.sequence(F.lit(0), F.size("t") - 5)
-    sh = (
+    # four consumers (the df census, the prefix ranking, and both
+    # sides of the verification join) each replayed the corpus
+    # tokenize+shingle explode+distinct; pin the distinct shingle
+    # stream so it materializes once (guide §5)
+    sh = pin(
         d.select(
             "doc_id",
             F.explode(
@@ -3502,11 +3504,6 @@ def t42_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shingle"),
         )
         .distinct()
-        # four consumers (the df census, the prefix ranking, and both
-        # sides of the verification join) each replayed the corpus
-        # tokenize+shingle explode+distinct; pin the distinct shingle
-        # stream so it materializes once (guide §5)
-        .localCheckpoint(eager=False)
     )
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     wr = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -3517,13 +3514,13 @@ def t42_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wr).alias("rk"),
         F.count(F.lit(1)).over(wn).cast("long").alias("n_sh"),
     )
-    pref = ranked.filter(
-        F.col("rk")
-        <= F.col("n_sh")
-        - F.ceil(F.col("n_sh") / 2.0).cast("long")
-        + 1
-        # both self-join sides replay the df join + window otherwise
-    ).localCheckpoint(eager=False)
+    # both self-join sides replay the df join + window otherwise
+    pref = pin(
+        ranked.filter(
+            F.col("rk")
+            <= F.col("n_sh") - F.ceil(F.col("n_sh") / 2.0).cast("long") + 1
+        )
+    )
     pa, pb = pref.alias("pa"), pref.alias("pb")
     cand = (
         pa.join(
@@ -3921,7 +3918,7 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _ts(spark, sf_dir, "documents")
-    state = (
+    state = pin(
         _init_symbols(word_vocab(docs))
         .select(
             "word",
@@ -3931,7 +3928,6 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "word", "freq", (F.col("pos0") + 1).alias("pos"), "sym"
         )
-        .localCheckpoint(eager=False)
     )
     reports = []
     for r in range(1, 3):
@@ -3944,13 +3940,12 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("sym").over(wv).alias("nxt"),
             F.lead("pos").over(wv).alias("npos"),
         )
-        top = (
+        top = pin(
             n.filter(F.col("nxt").isNotNull())
             .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
             .agg(F.sum("freq").cast("long").alias("n"))
             .orderBy(F.col("n").desc(), F.col("a"), F.col("b"))
             .limit(1)
-            .localCheckpoint(eager=False)
         )
         cand = (
             n.join(
@@ -3970,7 +3965,7 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(0)
             ).over(wv.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        merges = (
+        merges = pin(
             chain.withColumn(
                 "rnk",
                 F.row_number().over(
@@ -3979,9 +3974,8 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("rnk") % 2 == 1)
             .select("word", "freq", "pos", "npos")
-            .localCheckpoint(eager=False)
         )
-        state = (
+        state = pin(
             n.join(
                 merges.select("word", F.col("npos").alias("pos")),
                 ["word", "pos"],
@@ -4003,7 +3997,6 @@ def t44_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.col("sym"))
                 .alias("sym"),
             )
-            .localCheckpoint(eager=False)
         )
         rep = (
             top.crossJoin(
@@ -4150,7 +4143,7 @@ def t45_rouge1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    tc = (
+    tc = pin(
         docs.select(
             "doc_id",
             F.explode(text_fns.tokens(F.col("text"))).alias("tok"),
@@ -4158,7 +4151,6 @@ def t45_rouge1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower(F.col("tok")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     sz = tc.groupBy("doc_id").agg(F.sum("c").cast("long").alias("n"))
     pairs = (
@@ -4621,11 +4613,10 @@ def t49_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     firsts = toks.groupBy("doc_id", "tok").agg(F.min("idx").alias("fidx"))
     wdoc = Window.partitionBy("doc_id").orderBy("fidx", "tok")
-    capped = (
+    capped = pin(
         firsts.withColumn("rn", F.row_number().over(wdoc))
         .filter(F.col("rn") <= 32)
         .select("doc_id", "tok")
-        .localCheckpoint(eager=False)
     )
     df_ = capped.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
     nd = capped.agg(
@@ -4733,17 +4724,17 @@ def t53_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the transition table once: the 9-branch union below would
     # otherwise replay the full model aggregation per branch
     nxt = F.broadcast(
-        bigram_counts.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("a", "b")
-        .localCheckpoint(eager=False)
+        pin(
+            bigram_counts.withColumn("rn", F.row_number().over(wa))
+            .filter(F.col("rn") == 1)
+            .select("a", "b")
+        )
     )
     ws = Window.orderBy(F.desc("c_a"), "t")
-    seeds = (
+    seeds = pin(
         uni.withColumn("seed_rank", F.row_number().over(ws))
         .filter(F.col("seed_rank") <= 5)
         .select("seed_rank", F.col("t").alias("token"))
-        .localCheckpoint(eager=False)
     )
     out = seeds.select(
         "seed_rank", F.lit(0).alias("step"), "token"

@@ -19,7 +19,7 @@ from openseizuredatabase_spark.operators import joins as join_ops
 from openseizuredatabase_spark.operators import splits as split_ops
 from openseizuredatabase_spark.operators import windows as window_ops
 from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
-from openseizuredatabase_spark.lineage import bounded_collect
+from openseizuredatabase_spark.lineage import bounded_collect, pin
 from openseizuredatabase_spark.functions import text as text_fns
 from openseizuredatabase_spark.functions.text import bpe_token_count_sql
 from openseizuredatabase_spark.functions.hashing import (
@@ -1332,13 +1332,15 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openseizuredatabase_spark.functions.ann import _np_length_groups
 
     emb = _ts(spark, sf_dir, "embeddings")
-    qa = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * 1000, 0).cast("long"),
-        ).alias("__v"),
-    ).localCheckpoint(eager=False)
+    qa = pin(
+        emb.select(
+            "vec_id",
+            F.transform(
+                F.col("embedding").cast("array<double>"),
+                lambda x: F.round(x * 1000, 0).cast("long"),
+            ).alias("__v"),
+        )
+    )
     part_schema = T.StructType(
         [
             T.StructField("dim", T.IntegerType()),
@@ -1659,7 +1661,7 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
     # pairs the whole clustering runs on the driver, and otherwise the
     # collect has already computed the pin the joins below read, so
     # AQE's concurrent stage jobs never race on uncomputed blocks
-    pc = pc.localCheckpoint(eager=False)
+    pc = pin(pc)
     cap = dedup_ops._CC_DRIVER_EDGE_CAP
     tbl = bounded_collect(pc, cap)
     if tbl is not None:
@@ -1706,23 +1708,21 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
     )
     dx = F.col("xa") - F.col("xb")
     dy = F.col("ya") - F.col("yb")
-    half = (
+    # the forward-half pair set is referenced TWICE (itself and its
+    # mirror) and the eps-graph built from it feeds four consumers;
+    # materialize the expensive blocked join once. The four pins of
+    # this path are lazy: with the caps at -1 on Spark 4.1.2 (sf0.1,
+    # local[4]) they ran 53–55 jobs against eager pins' 56–57 and a
+    # warm median of 5.2 s against 6.5 s, though their jobs list more
+    # stages (93–113 against 86–87); the count below is this pin's
+    # first action
+    half = pin(
         a.join(b, ["kx", "ky"])
         .unionByName(
             same.join(b, ["kx", "ky"]).filter(F.col("ia") < F.col("ib"))
         )
         .filter(dx * dx + dy * dy <= F.lit(e2))
         .select("ia", "ib")
-        # the forward-half pair set is referenced TWICE (itself and its
-        # mirror) and the eps-graph built from it feeds four consumers;
-        # materialize the expensive blocked join exactly once, EAGERLY.
-        # Lazy checkpoints here let AQE's concurrent stage jobs race on
-        # the uncomputed blocks: measured at sf0.1, the 160-partition
-        # blocked-join stage ran FOUR times with 95 s of summed task
-        # time against 8.7 s of CPU — every extra run was tasks
-        # blocking on another stage's cache locks (guide §1.1: the
-        # stage was "slow" on wait, not compute)
-        .localCheckpoint(eager=True)
     )
     half = half.coalesce(rows_width(spark, half.count()))
     # nbr is now a cheap narrow union over the cached half + pc — no
@@ -1734,14 +1734,13 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
             F.col("vec_id").alias("ia"), F.col("vec_id").alias("ib")
         )
     )
-    core = (
+    # one row per core point; consumed by eg (twice), singles, and
+    # the border anti-join
+    core = pin(
         nbr.groupBy("ia")
         .agg(F.count(F.lit(1)).alias("n_nbr"))
         .filter(F.col("n_nbr") >= _V15_MINPTS)
         .select(F.col("ia").alias("vec_id"))
-        # one row per core point; consumed by eg (twice), singles, and
-        # the border anti-join — eager for the same no-race reason
-        .localCheckpoint(eager=True)
     )
     eg = (
         nbr.join(core.withColumnRenamed("vec_id", "ia"), "ia")
@@ -1758,9 +1757,9 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
     # comps feeds border adoption, the per-cluster census, and the
     # noise anti-join; cc is already a checkpointed label frame but the
     # union re-runs the singles anti-join per consumer — pin the union
-    # (eager: concurrent consumers must find computed blocks, see half)
-    comps = cc.unionByName(singles).localCheckpoint(eager=True)
-    border = (
+    comps = pin(cc.unionByName(singles))
+    # consumed by the border census and the noise anti-join
+    border = pin(
         nbr.join(core.withColumnRenamed("vec_id", "ia"), "ia", "left_anti")
         .join(
             comps.select(
@@ -1770,8 +1769,6 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
         )
         .groupBy("ia")
         .agg(F.min("comp").cast("long").alias("comp"))
-        # consumed by the border census and the noise anti-join
-        .localCheckpoint(eager=True)
     )
     core_per = comps.groupBy(F.col("comp").alias("cluster")).agg(
         F.count(F.lit(1)).cast("long").alias("n_core")

@@ -27,6 +27,7 @@ from openseizuredatabase_spark.functions.hashing import (
     seeded_md5_long,
     seeded_md5_long_sql,
 )
+from openseizuredatabase_spark.lineage import pin
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
@@ -2982,7 +2983,7 @@ def _w24_oracle() -> str:
     "to time-series monitoring.",
 )
 def w24_stl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stl = w19_stl_decompose(spark, sf_dir).localCheckpoint(eager=False)
+    stl = pin(w19_stl_decompose(spark, sf_dir))
     cnt = stl.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )

@@ -108,3 +108,12 @@ def test_training_pipeline_learns_separable_data(training_input):
     # the classes are linearly separable in the chosen features
     assert m.ntp + m.nfp + m.ntn + m.nfn == 2  # events 0 and 4 in fold 0
     assert m.nfp == 0 and m.nfn == 0
+
+
+def test_training_pipeline_leaves_no_cached_frame(spark, training_input):
+    spark.catalog.clearCache()
+    model, metrics = run_training_pipeline(
+        training_input, TrainConfig(test_fold=0, n_folds=4, epochs=2, lr=0.5)
+    )
+    metrics.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

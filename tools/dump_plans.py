@@ -20,6 +20,7 @@ def main() -> int:
     for a in sys.argv[2:]:
         if a.startswith("--sf="):
             sf_dir = a.split("=", 1)[1]
+    from openseizuredatabase_spark.lineage import drop_persisted
     from openseizuredatabase_spark.plans.registry import QUERIES
     from openseizuredatabase_spark.session import get_spark
 
@@ -38,8 +39,7 @@ def main() -> int:
         print(f"{name}: {txt.count('Exchange')} Exchange, "
               f"{txt.count('EvalPython')} EvalPython, "
               f"{len(txt.splitlines())} lines", flush=True)
-        for rdd in sc._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        drop_persisted(spark)
     return 0
 
 

@@ -32,6 +32,7 @@ def main() -> int:
     ap.add_argument("--explain-dir", default=None)
     args = ap.parse_args()
 
+    from openseizuredatabase_spark.lineage import drop_persisted
     from openseizuredatabase_spark.plans.registry import QUERIES
     from openseizuredatabase_spark.session import get_spark
 
@@ -69,17 +70,14 @@ def main() -> int:
                 best_jobs, best_stages = len(jobs), n_stages
             print(f"  run{r}: build {t1 - t0:7.3f}  exec {t3 - t2:7.3f}",
                   flush=True)
-            # hygiene between runs (bench.py discipline)
-            for rdd in sc._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+            drop_persisted(spark)  # hygiene between runs (bench.py discipline)
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             df = spec.fn(spark, args.sf)
             with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-            for rdd in sc._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+            drop_persisted(spark)
         print(f"{name:32s} {build_s:8.3f} {best_exec:8.3f} "
               f"{best_jobs:5d} {best_stages:7d}")
         sc.setJobDescription(None)

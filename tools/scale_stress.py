@@ -127,20 +127,8 @@ def build_replica(
         rep.drop("__copy").write.mode("overwrite").parquet(dst)
 
 
-def drop_persisted(spark) -> None:
-    """Between-query storage hygiene: a long-lived harness session
-    accumulates localCheckpoint blocks from COMPLETED queries — their
-    DataFrames are dead but the blocks only free on a driver GC cycle
-    (async ContextCleaner), and at 100x replica scale three
-    checkpoint-heavy queries in one JVM exhausted the heap before GC
-    ran. A production pipeline gets this cleanup for free at
-    job-process boundaries; a shared benchmark JVM must do it
-    explicitly."""
-    for r in spark.sparkContext._jsc.getPersistentRDDs().values():
-        r.unpersist()  # blocking: completes before the next timed pass
-
-
 def time_queries(spark, sf_dir: str, names) -> dict[str, float]:
+    from openseizuredatabase_spark.lineage import drop_persisted
     from openseizuredatabase_spark.plans.registry import QUERIES
 
     out: dict[str, float] = {}
@@ -153,7 +141,10 @@ def time_queries(spark, sf_dir: str, names) -> dict[str, float]:
             ).save()
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
-            drop_persisted(spark)  # untimed, blocking: frees dead checkpoint blocks
+            # untimed and blocking: completed queries' pinned blocks
+            # otherwise free only on a driver GC cycle, and at 100x three
+            # pin-heavy queries in one JVM exhausted the heap before it
+            drop_persisted(spark)
         out[name] = round(best, 3)
     return out
 
