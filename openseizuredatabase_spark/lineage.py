@@ -6,7 +6,7 @@ a narrow proxy read by several branches, an expensive decode read twice
 calls ``localCheckpoint``, ``persist`` or ``cache``
 (``tests/test_lineage.py`` scans the sources for it).
 
-``pin(df, eager=False)`` is ``df.localCheckpoint(eager)`` with one
+``pin(df)`` is the lazy ``df.localCheckpoint(False)`` with one
 statistics rule: the pinned frame keeps the size estimate the
 checkpoint carries when that estimate is at most
 ``spark.sql.defaultSizeInBytes``; otherwise it is rebuilt without
@@ -25,7 +25,7 @@ Why both halves matter:
   loop round 9's planning took 59 s. In a 24-round self-join loop on
   Spark 4.1.2 the raw estimate grew from 22 to 169, 1,344 and 10,745
   bits by round 9, and py4j raised ``ValueError`` converting it to a
-  Python ``int`` — so :func:`pin` reads it as JVM-formatted digits.
+  Python ``int`` — so :func:`pin` compares it as JVM-formatted digits.
   Above the default the estimate carries no information the default
   does not (the default is the planner's "unknown, huge"), so resetting
   it loses nothing and keeps every round's planning cost constant.
@@ -37,12 +37,10 @@ Why both halves matter:
   the static broadcast at the former stat-dropping sites (j13: 20 → 14
   jobs; t36: 19 → 14).
 
-Lazy (the default) versus eager: a lazy pin computes and stores its
-blocks in the first action that reads it, inside that action's own
-job; an eager pin runs one extra job at call time. Use eager only
-where a lazy pin is measured to re-run stages AND be slower. No site
-is: on Spark 4.1.2 (sf0.1, ``local[4]``) the twelve formerly eager
-pins, kept for an AQE cache-lock race seen on an older Spark, ran
+A pin is lazy: it computes and stores its blocks in the first action
+that reads it, inside that action's own job, and runs no job of its
+own. On Spark 4.1.2 (sf0.1, ``local[4]``) the twelve sites that once
+pinned eagerly, for an AQE cache-lock race seen on an older Spark, ran
 fewer jobs lazily at equal or lower median time — m46–m54's media
 fingerprints one job fewer each; with the caps at -1, v5/v6/v8 one
 fewer, v10 three and v15's distributed DBSCAN two or three.
@@ -57,15 +55,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def pin(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``df.localCheckpoint(eager)`` whose size estimate is kept when it
-    is at most ``spark.sql.defaultSizeInBytes`` and reset to that
-    default otherwise, so iterative loops cannot compound it."""
+def pin(df: DataFrame) -> DataFrame:
+    """The lazy ``df.localCheckpoint(False)`` whose size estimate is kept
+    when it is at most ``spark.sql.defaultSizeInBytes`` and reset to
+    that default otherwise, so iterative loops cannot compound it."""
     spark = df.sparkSession
-    ck = df.localCheckpoint(eager)
-    limit = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
-    digits = size_digits(ck)
-    if len(digits) <= len(str(limit)) and int(digits) <= limit:
+    ck = df.localCheckpoint(False)
+    if _fits_default(ck):
         return ck
     # rebuild from the checkpointed RDD: its LogicalRDD has no origin
     # stats. The RDD is Dataset.localCheckpoint's defensively copied one
@@ -77,13 +73,17 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return DataFrame(jdf, spark)
 
 
-def size_digits(df: DataFrame) -> str:
-    """The decimal digits of ``df``'s planner size estimate, formatted on
-    the JVM. ``stats().sizeInBytes()`` would hand the ``BigInt`` to
-    Python through ``int(str)``, which refuses more than 4,300 digits —
-    a compounded loop estimate passes that within ten rounds."""
+def _fits_default(df: DataFrame) -> bool:
+    """Whether ``df``'s planner size estimate is at most
+    ``spark.sql.defaultSizeInBytes``. The estimate is compared as the
+    decimal digits the JVM formats: ``stats().sizeInBytes()`` would hand
+    the ``BigInt`` to Python through ``int(str)``, which refuses more
+    than 4,300 digits — a compounded loop estimate passes that within
+    ten rounds."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
     stats = df._jdf.queryExecution().optimizedPlan().stats()
-    return stats.productIterator().take(1).mkString()  # sizeInBytes
+    digits = stats.productIterator().take(1).mkString()  # sizeInBytes
+    return len(digits) <= len(str(limit)) and int(digits) <= limit
 
 
 def drop_persisted(spark: SparkSession) -> None:

@@ -2,23 +2,18 @@
 the bounded collect."""
 
 import pathlib
+import threading
 import uuid
 
 from pyspark.sql import functions as F
 
 import openseizuredatabase_spark
 from openseizuredatabase_spark.lineage import (
+    _fits_default,
     bounded_collect,
     drop_persisted,
     pin,
-    size_digits,
 )
-
-
-def _at_most_default(spark, df) -> bool:
-    limit = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
-    digits = size_digits(df)
-    return len(digits) <= len(str(limit)) and int(digits) <= limit
 
 
 def test_small_pinned_frame_is_broadcast_statically(spark):
@@ -33,7 +28,7 @@ def test_self_join_loop_keeps_the_estimate_bounded(spark):
     for rnd in range(24):
         other = df.select("k", F.col("v").alias("w"))
         df = pin(df.join(other, "k").select("k", (F.col("v") + F.col("w")).alias("v")))
-        assert _at_most_default(spark, df), f"round {rnd}: {size_digits(df)}"
+        assert _fits_default(df), f"round {rnd}"
     assert df.count() == 40
 
 
@@ -48,16 +43,11 @@ def _jobs_of(spark, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
-def test_eager_pin_runs_its_job_at_call_time_and_lazy_runs_none(spark):
+def test_pin_runs_no_job_until_read(spark):
     src = spark.range(100).select((F.col("id") * 2).alias("x"))
-    lazy, jobs = _jobs_of(spark, lambda: pin(src))
+    pinned, jobs = _jobs_of(spark, lambda: pin(src))
     assert jobs == []
-    eager, jobs = _jobs_of(spark, lambda: pin(src, eager=True))
-    assert len(jobs) == 1
-    # the eager frame is already materialized: reading it runs only the
-    # read's own job, and both pins hold the same rows
-    assert sorted(r.x for r in eager.collect()) == list(range(0, 200, 2))
-    assert sorted(r.x for r in lazy.collect()) == list(range(0, 200, 2))
+    assert sorted(r.x for r in pinned.collect()) == list(range(0, 200, 2))
 
 
 def test_bounded_collect_at_and_over_the_cap(spark):
@@ -68,12 +58,28 @@ def test_bounded_collect_at_and_over_the_cap(spark):
     assert bounded_collect(df, -1) is None
 
 
-def test_drop_persisted_returns_after_the_blocks_are_gone(spark):
+def test_drop_persisted_waits_for_the_blocks_to_go(spark):
     pinned = pin(spark.range(1000).select((F.col("id") % 7).alias("x")))
     assert pinned.count() == 1000
-    drop_persisted(spark)
-    master = spark.sparkContext._jsc.sc().env().blockManager().master()
-    assert sum(st.rddBlocks().size() for st in master.getStorageStatus()) == 0
+    jvm = spark._jvm
+    blocks = spark.sparkContext._jsc.sc().env().blockManager()
+    rdd_ids = list(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    stored = [jvm.org.apache.spark.storage.RDDBlockId(int(i), 0) for i in rdd_ids]
+    held = next(b for b in stored if blocks.getStatus(b).isDefined())
+    # a read lock held on one stored block stalls its removal, so only a
+    # drop that waits for the removal is still running after two seconds
+    assert blocks.blockInfoManager().lockForReading(held, True).isDefined()
+    done = threading.Event()
+    worker = threading.Thread(target=lambda: (drop_persisted(spark), done.set()))
+    worker.start()
+    try:
+        assert not done.wait(2)
+    finally:
+        blocks.blockInfoManager().unlock(held, jvm.scala.Option.apply(None))
+        worker.join(60)
+    assert done.is_set()
+    assert blocks.getStatus(held).isEmpty()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 def test_no_module_outside_lineage_materializes():

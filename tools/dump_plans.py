@@ -1,6 +1,6 @@
 """Dump explain("formatted") for a list of queries WITHOUT executing
-the final noop write (plan-shape evidence; build-side eager checkpoints
-still run, exactly as bench.py charges them).
+the final noop write (plan-shape evidence; build-side jobs such as
+bounded collects still run, exactly as bench.py charges them).
 
 Usage: python tools/dump_plans.py DIR q1 q2 ... [--sf SF_DIR]
 """

@@ -10,8 +10,8 @@ For each query prints one line:
   name  build_s  exec_s(min of N)  jobs  stages  tasks
 
 ``build_s`` is the QUERIES[name].fn() call (plan construction; for
-iterative operators this includes any eager checkpoint jobs, exactly as
-bench.py charges them). ``exec_s`` is the noop write alone.
+iterative operators this includes their driver-loop jobs, such as
+bounded collects and census counts, exactly as bench.py charges them). ``exec_s`` is the noop write alone.
 """
 
 from __future__ import annotations
