@@ -104,32 +104,124 @@ def _np_argmin_cid(mat, book):
     return np.argmin(dists, axis=1)
 
 
-def _np_length_groups(pdf, vec_field):
-    """Yield (length, int64 matrix, positional index array) per distinct
-    vector length in an Arrow/pandas batch (rows are ragged lists)."""
-    vs = pdf[vec_field].to_numpy()
-    lens = np.fromiter((len(v) for v in vs), dtype=np.int64, count=len(vs))
+_TWO63 = 2.0**63
+_I64 = np.iinfo(np.int64)
+
+
+def _np_quantize(x, quant):
+    """``x`` scaled by ``quant`` and rounded half away from zero to
+    int64 — Spark's ``round(x * quant, 0)::long`` (:func:`quantize_col`)
+    for every finite value in range: ``round`` is BigDecimal HALF_UP on
+    the double, and ``k + 0.5`` is exact below 2^52, so the floor/frac
+    test reproduces it; above 2^52 every double is already an integer.
+    Where Spark's ANSI cast raises ``CAST_OVERFLOW`` — NaN, ±Inf, or a
+    rounded magnitude above 2^63 — this raises ``ArithmeticError``. Like
+    the cast it admits ±2^63 exactly, saturating +2^63 to the int64
+    maximum."""
+    v = np.asarray(x, dtype=np.float64) * float(quant)
+    a = np.abs(v)
+    f = np.floor(a)
+    with np.errstate(invalid="ignore"):  # inf - inf: raised below
+        r = np.copysign(f + (a - f >= 0.5), v)
+    bad = ~(np.abs(r) <= _TWO63)  # NaN compares false
+    if bad.any():
+        raise ArithmeticError(
+            f"[CAST_OVERFLOW] {v[bad][0]!r} cannot be cast to BIGINT"
+        )
+    out = np.minimum(r, np.nextafter(_TWO63, 0.0)).astype(np.int64)
+    out[r == _TWO63] = _I64.max
+    return out
+
+
+def quantize_col(vec, quant: int):
+    """Spark twin of :func:`_np_quantize` over an array column:
+    ``transform(cast(vec as array<double>), x -> round(x * quant, 0)
+    ::long)``. A null element stays null."""
+    return F.transform(
+        vec.cast("array<double>"),
+        lambda x: F.round(x * quant, 0).cast("long"),
+    )
+
+
+def _np_length_groups(batch, vec_field, quant=None):
+    """Yield (length, int64 matrix, row index array) per distinct
+    nonzero vector length of ``vec_field`` in a pyarrow RecordBatch or
+    Table (rows are ragged lists). With ``quant`` the lists hold doubles
+    and each coordinate goes through :func:`_np_quantize`; without it
+    they already hold quantized integers. A null coordinate becomes the
+    int64 minimum, the value the historical pandas path's NaN-to-int64
+    conversion gave it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = batch.column(vec_field)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+    vals = col.flatten()
+    if quant is None:
+        flat = vals.fill_null(0).to_numpy().astype(np.int64)
+    else:
+        flat = _np_quantize(vals.fill_null(0.0).to_numpy(), quant)
+    if vals.null_count:
+        flat[vals.is_null().to_numpy(zero_copy_only=False)] = _I64.min
+    starts = np.cumsum(lens) - lens
     for L in np.unique(lens):
         if L == 0:
             continue
         idx = np.nonzero(lens == L)[0]
-        mat = np.vstack([np.asarray(vs[i], dtype=np.int64) for i in idx])
-        yield int(L), mat, idx
+        yield int(L), flat[starts[idx, None] + np.arange(L)], idx
+
+
+def _np_book(tbl, id_col, quant):
+    """The codebook (id, int64 codeword) of every vector in the pyarrow
+    table ``tbl`` (``id_col``, double lists ``__v``), id-ascending."""
+    ids = tbl.column(id_col).to_pylist()
+    return sorted(
+        (ids[i], row)
+        for _L, mat, idx in _np_length_groups(tbl, "__v", quant)
+        for i, row in zip(idx.tolist(), mat)
+    )
+
+
+def _arrow_batch(rows, schema):
+    """One pyarrow RecordBatch of the Spark ``schema`` from row tuples
+    (a ``mapInArrow`` output batch)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
 
 
 # Row cap for training k-means on the driver: at or under this many
-# vectors, kmeans_exact collects the pinned quantized vectors once and
-# runs every Lloyd round and the final assignment in the driver process.
-# Measured crossover (tools/gate_crossover.py --gate kmeans: synthetic
-# 64-dim embeddings, k=8, iters=2, local[4] on a 4-core host, 4 GB
-# driver heap; build plus one action, median of 3), driver vs distributed
-# seconds: 2k 1.1 vs 2.6, 20k 2.5 vs 3.1, 60k 6.0 vs 6.6, 100k 11.0 vs
-# 10.4, 200k 18.8 vs 19.9, 600k 59.9 vs 45.2. The driver path wins up
-# to 60k, ties within noise to 200k and loses beyond, while its peak
-# RSS (Python plus JVM) is always higher: 2.4 vs 1.6 GB at 60k, 3.6 vs
-# 2.0 GB at 200k, 6.7 vs 4.0 GB at 600k. Above the cap the failed
-# gate costs about 0.7 s at 600k: its collect fills the pin the
-# distributed rounds then read.
+# vectors, kmeans_exact collects the raw vectors once and quantizes them
+# and runs every Lloyd round and the final assignment in the driver
+# process. Measured crossover (tools/gate_crossover.py --gate kmeans:
+# synthetic 64-dim embeddings, k=8, iters=2, local[4] on a 4-core host,
+# 4 GB driver heap; build plus one action, median of 3), driver vs
+# distributed seconds, with the failed gate's own collect (gate_s of
+# the default path) where the size is above the cap:
+#
+#     vectors   driver  distributed  failed gate
+#       2,000     1.05         1.23
+#      20,000     1.59         1.70
+#      60,000     2.15         2.39
+#     100,000     3.77         2.53
+#     140,000     4.94         2.93
+#     200,000     6.55         3.86         0.78
+#     600,000    17.73         7.60         0.68
+#
+# The driver path wins up to 60k and loses from 100k on, as it did when
+# both paths quantized in SQL (then 6.0 vs 6.6 s at 60k, 11.0 vs 10.4 s
+# at 100k, 59.9 vs 45.2 s at 600k), so the cap stays. Its peak RSS
+# (Python plus JVM) is lower at 60k (1.9 vs 2.0 GB) and higher beyond:
+# 2.7 vs 2.6 GB at 200k, 5.4 vs 4.0 GB at 600k. Above the cap the
+# default path ran 4.64 s at 200k and 8.90 s at 600k, against 17.26 s
+# and 46.85 s with the SQL quantizer.
 _KMEANS_DRIVER_ROW_CAP = 60_000
 
 
@@ -170,16 +262,17 @@ def _book_from_sums(rows):
     return book
 
 
-def _np_assign(pdf, groups, book, id_col):
-    """(ids, cids): each vector's nearest codeword in ``book``."""
-    ids, cids = [], []
+def _np_assign(ids, groups, book):
+    """(ids, cids): each vector's nearest codeword in ``book``; ``ids``
+    is the batch's id column as a numpy array."""
+    out_ids, cids = [], []
     if not book:
-        return ids, cids
+        return out_ids, cids
     for _L, mat, idx in groups:
         win = _np_argmin_cid(mat, book)
-        ids.extend(pdf[id_col].to_numpy()[idx].tolist())
+        out_ids.extend(ids[idx].tolist())
         cids.extend(book[j][0] for j in win)
-    return ids, cids
+    return out_ids, cids
 
 
 def kmeans_exact(
@@ -208,34 +301,30 @@ def kmeans_exact(
 
     Scale shape: the seeds are the vectors with ids 1..k, and the
     codebook (k·dim integers) always lives on the driver between rounds.
-    The quantized vectors are widened and pinned once, and one bounded
-    collect of them (:func:`lineage.bounded_collect`, at most
-    ``_KMEANS_DRIVER_ROW_CAP`` + 1 rows through Arrow) decides where the
-    rounds run. At or under the cap, that collect is the last Spark job:
-    every Lloyd round and the final assignment run on the driver with
-    the same numpy kernels the workers use, the length groups built
-    once, and the assignment comes back as a driver-held literal frame.
-    Above the cap the collect has already filled the pin, and the
-    rounds stay distributed: per round one vectorized ``mapInPandas``
-    argmin pass against the closure-shipped codebook that emits
-    per-batch partial (cid, dim) sums, plus one aggregation whose
-    shuffle carries at most k·dim rows per input partition; then a
-    final ``mapInPandas`` assignment pass.
+    The gate reads the raw vectors — ``cast(vec as array<double>)``, no
+    lambda, no spread — in one bounded collect
+    (:func:`lineage.bounded_collect`, at most ``_KMEANS_DRIVER_ROW_CAP``
+    + 1 rows through Arrow). At or under the cap, that collect is the
+    only Spark job: the driver quantizes with :func:`_np_quantize`,
+    builds the length groups once and runs every Lloyd round and the
+    final assignment with the same numpy kernels the workers use; the
+    assignment comes back as a driver-held literal frame. Above the cap
+    the raw vectors are widened (``spread_cpu_dense``) and pinned, and
+    the rounds stay distributed: per round one vectorized ``mapInArrow``
+    pass quantizes with the same function, argmins against the
+    closure-shipped codebook and emits per-batch partial (cid, dim)
+    sums, plus one aggregation whose shuffle carries at most k·dim rows
+    per input partition; then a final ``mapInArrow`` assignment pass.
 
     Returns (assignments (id, cid), centroids (cid, dim, c)).
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     spark = emb.sparkSession
     id_type = emb.schema[id_col].dataType
     id_ddl = id_type.simpleString()
-    vecs = emb.select(
-        F.col(id_col),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.round(x * quant, 0).cast("long"),
-        ).alias("__v"),
+    raw = emb.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     ).filter(F.size("__v") > 0)
 
     def cents_frame(book):
@@ -250,43 +339,34 @@ def kmeans_exact(
             return rows_frame(spark, rows, ddl)
         return literal_df(spark, rows, ddl)
 
-    # on the distributed path every Lloyd round and the final assignment
-    # are CPU-dense numpy map passes over vecs: widen a narrow source
-    # scan (results are layout-invariant by the integer-arithmetic
-    # contract)
-    vecs = spread_cpu_dense(vecs, spark)
-    # vecs feeds the gate, every Lloyd round and the final assignment;
-    # pin it so each pass reuses one materialized scan. The gate is the
-    # first action: above the cap it has already computed the pinned
-    # scan, so the failed gate costs only the cap + 1 shipped rows
-    vecs = pin(vecs)
-    tbl = bounded_collect(vecs, _KMEANS_DRIVER_ROW_CAP)
+    tbl = bounded_collect(raw, _KMEANS_DRIVER_ROW_CAP)
     if tbl is not None:
-        pdf = tbl.to_pandas()
         # seed codebook: the vectors with ids 1..k
-        idv, vs = pdf[id_col].to_numpy(), pdf["__v"].to_numpy()
-        book = sorted(
-            (idv[i].item(), np.asarray(vs[i], dtype=np.int64))
-            for i in np.nonzero((idv >= 1) & (idv <= k))[0]
-        )
-        groups = list(_np_length_groups(pdf, "__v"))
+        idv = tbl.column(id_col).to_numpy()
+        book = _np_book(tbl.filter((idv >= 1) & (idv <= k)), id_col, quant)
+        groups = list(_np_length_groups(tbl, "__v", quant))
         abook = book
         for _ in range(iters):
             abook = book
             book = _book_from_sums(_np_partial_sums(groups, book))
         # the last training assignment, as in the distributed path below
-        a_ids, a_cids = _np_assign(pdf, groups, abook, id_col)
+        a_ids, a_cids = _np_assign(idv, groups, abook)
         assign = rows_frame(
             spark, zip(a_ids, a_cids), f"{id_col} {id_ddl}, cid {id_ddl}"
         )
         return assign, cents_frame(book)
 
+    # every Lloyd round and the final assignment are CPU-dense numpy
+    # map passes over vecs: widen a narrow source scan (results are
+    # layout-invariant by the integer-arithmetic contract) and pin it
+    # so each pass reuses one materialized scan; the seed collect below
+    # is its first action
+    vecs = pin(spread_cpu_dense(raw, spark))
     # seed codebook: the vectors with ids 1..k (bounded: ≤ k rows)
-    book = sorted(
-        (r[0], np.asarray(r[1], dtype=np.int64))
-        for r in vecs.filter(
-            (F.col(id_col) >= 1) & (F.col(id_col) <= k)
-        ).collect()
+    book = _np_book(
+        vecs.filter((F.col(id_col) >= 1) & (F.col(id_col) <= k)).toArrow(),
+        id_col,
+        quant,
     )
     part_schema = T.StructType(
         [
@@ -301,14 +381,14 @@ def kmeans_exact(
         bk = abook = book
 
         def partial_sums(it):
-            for pdf in it:
-                yield pd.DataFrame(
-                    _np_partial_sums(_np_length_groups(pdf, "__v"), bk),
-                    columns=["cid", "dim", "s", "n"],
+            for batch in it:
+                yield _arrow_batch(
+                    _np_partial_sums(_np_length_groups(batch, "__v", quant), bk),
+                    part_schema,
                 )
 
         upd = (
-            vecs.mapInPandas(partial_sums, schema=part_schema)
+            vecs.mapInArrow(partial_sums, schema=part_schema)
             .groupBy("cid", "dim")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
@@ -319,24 +399,26 @@ def kmeans_exact(
     # historical loop's exact semantics; the returned centroids are the
     # post-update book
     fbook = abook
-
-    def assign_codes(it):
-        for pdf in it:
-            ids, cids = _np_assign(
-                pdf, _np_length_groups(pdf, "__v"), fbook, id_col
-            )
-            yield pd.DataFrame({id_col: ids, "cid": cids})
-
     out_schema = T.StructType(
         [T.StructField(id_col, id_type), T.StructField("cid", id_type)]
     )
+
+    def assign_codes(it):
+        for batch in it:
+            ids, cids = _np_assign(
+                batch.column(id_col).to_numpy(zero_copy_only=False),
+                _np_length_groups(batch, "__v", quant),
+                fbook,
+            )
+            yield _arrow_batch(zip(ids, cids), out_schema)
+
     # assign is one (id, cid) row per vector — the narrow proxy frame
     # the PQ/IVF callers read from several consumer subtrees. The pin
     # is lazy: with the k-means cap at -1 on Spark 4.1.2 (sf0.1,
     # local[4]) an eager one cost v5 and v6 one job each (12 → 11)
     # and was no faster; a caller that discards the assignment
     # (ivf_two_level) never materializes it
-    assign = pin(vecs.mapInPandas(assign_codes, schema=out_schema))
+    assign = pin(vecs.mapInArrow(assign_codes, schema=out_schema))
     return assign, cents_frame(book)
 
 
@@ -400,13 +482,7 @@ def ivf_probe_exact(
         .filter(F.col("__rn") <= n_probe)
         .select("cid")
     )
-    qv = emb.select(
-        id_col,
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.round(x * quant, 0).cast("long"),
-        ).alias("qvec"),
-    )
+    qv = emb.select(id_col, quantize_col(F.col(vec_col), quant).alias("qvec"))
     cands = (
         assign.join(F.broadcast(probe), "cid")
         .join(qv, id_col)
@@ -452,7 +528,7 @@ def pq_train_encode(
     kmeans_exact move, per subspace): the n_sub·k_sub·sub_dim-integer
     codebooks live on the DRIVER between rounds (metadata-sized bounded
     collect), assignment of all subspaces of a vector is ONE vectorized
-    numpy pass (mapInPandas) against the closure-shipped codebooks —
+    numpy pass (mapInArrow) against the closure-shipped codebooks —
     zero shuffles, no ×k_sub candidate explosion through a hash agg, no
     row_number sort (the historical shape shuffled n·n_sub·k_sub
     distance rows into a window per round) — emitting per-batch partial
@@ -470,7 +546,6 @@ def pq_train_encode(
     """
     import math
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     spark = emb.sparkSession
@@ -479,11 +554,7 @@ def pq_train_encode(
 
     def to_vecs(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col),
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: F.round(x * quant, 0).cast("long"),
-            ).alias("__v"),
+            F.col(id_col), quantize_col(F.col(vec_col), quant).alias("__v")
         ).filter(F.size("__v") > 0)
 
     # vecs feeds the final encode (and, default path, every Lloyd
@@ -529,9 +600,9 @@ def pq_train_encode(
         bks = books
 
         def partial_sums(it):
-            for pdf in it:
+            for batch in it:
                 cid_o, sub_o, dim_o, s_o, n_o = [], [], [], [], []
-                for L, mat, _ in _np_length_groups(pdf, "__v"):
+                for L, mat, _ in _np_length_groups(batch, "__v"):
                     for s in range(math.ceil(L / sub_dim)):
                         bk = bks.get(s)
                         if not bk:
@@ -552,18 +623,12 @@ def pq_train_encode(
                             )
                             s_o.extend(sums.tolist())
                             n_o.extend([m] * w)
-                yield pd.DataFrame(
-                    {
-                        "cid": cid_o,
-                        "sub": sub_o,
-                        "dim": dim_o,
-                        "s": s_o,
-                        "n": n_o,
-                    }
+                yield _arrow_batch(
+                    zip(cid_o, sub_o, dim_o, s_o, n_o), part_schema
                 )
 
         upd = (
-            vt.mapInPandas(partial_sums, schema=part_schema)
+            vt.mapInArrow(partial_sums, schema=part_schema)
             .groupBy("cid", "sub", "dim")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
@@ -590,10 +655,11 @@ def pq_train_encode(
     # and pq_train_encode(train_df=emb) would disagree with
     # pq_train_encode() on identical data.
     def encode(it):
-        for pdf in it:
+        for batch in it:
             ids, subs, cids = [], [], []
-            for L, mat, idx in _np_length_groups(pdf, "__v"):
-                bids = pdf[id_col].to_numpy()[idx]
+            bid_all = batch.column(id_col).to_numpy(zero_copy_only=False)
+            for L, mat, idx in _np_length_groups(batch, "__v"):
+                bids = bid_all[idx]
                 for s in range(math.ceil(L / sub_dim)):
                     bk = fbooks.get(s)
                     if not bk:
@@ -603,7 +669,7 @@ def pq_train_encode(
                     ids.extend(bids.tolist())
                     subs.extend([s] * len(bids))
                     cids.extend(bk[j][0] for j in win)
-            yield pd.DataFrame({id_col: ids, "sub": subs, "cid": cids})
+            yield _arrow_batch(zip(ids, subs, cids), codes_schema)
 
     codes_schema = T.StructType(
         [
@@ -615,7 +681,7 @@ def pq_train_encode(
     # the codes frame is consumed by the ADC scorer AND by candidate
     # filters (v8/v10 reference it more than once); pin the narrow
     # (id, sub, cid) result so the encode pass runs once
-    assign = pin(vecs.mapInPandas(encode, schema=codes_schema))
+    assign = pin(vecs.mapInArrow(encode, schema=codes_schema))
     # driver-held codebooks: a VALUES LocalRelation, not an RDD
     cents = literal_df(
         spark,
@@ -749,12 +815,7 @@ def ivf_pq_topk(
         .withColumnRenamed("cid", "coarse_cid")
     )
     qdims = emb.filter(F.col(id_col) == 0).select(
-        F.posexplode(
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: F.round(x * quant, 0).cast("long"),
-            )
-        ).alias("dim", "v")
+        F.posexplode(quantize_col(F.col(vec_col), quant)).alias("dim", "v")
     )
     codes_f = codes.join(cand.select(id_col), id_col)
     top = pq_adc_topk(codes_f, books, qdims, id_col=id_col, top_k=top_k)
@@ -829,10 +890,7 @@ def semantic_dedup(
             iters=iters,
             quant=quant,
         )
-    qv = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * quant, 0).cast("long"),
-    )
+    qv = quantize_col(F.col(vec_col), quant)
     m = emb.select(F.col(id_col), qv.alias("qv")).join(assign, id_col)
 
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -922,12 +980,7 @@ def hierarchical_assign(
     )
     q = emb.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: F.round(x * quant, 0).cast("long"),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(quantize_col(F.col(vec_col), quant)).alias("dim", "v"),
     )
     # cents is a VALUES LocalRelation from kmeans_exact — already a
     # driver literal, so the 4 consumers below share it for free (a

@@ -66,6 +66,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load + spread-for-map-work, sized from parquet footer metadata (a
-    local read, no Spark job — see ``tables.table_meta``)."""
+    local read, no Spark job — see ``tables.table_meta``). For scans
+    that feed CPU-heavy map work, not for scans a driver gate collects:
+    a bounded collect of a spread scan pays a round-robin shuffle job
+    for rows that all end on the driver (load those with ``_t``)."""
     _, nbytes = table_meta(sf_dir, name, spark)
     return spread_small_scan(load_table(spark, sf_dir, name), spark, nbytes)

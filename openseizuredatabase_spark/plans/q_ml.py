@@ -2180,7 +2180,11 @@ def m16_rf_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    emb = _ts(spark, sf_dir, "embeddings")
+    # no spread: the forest walk is a few vectorized compares per row,
+    # cheaper than a round-robin shuffle of the embedding table (x30,
+    # tools/scale_stress.py, two runs a side: 0.63/0.53 s spread,
+    # 0.31/0.59 s unspread)
+    emb = _t(spark, sf_dir, "embeddings")
     feats = emb.select(
         "vec_id",
         *[

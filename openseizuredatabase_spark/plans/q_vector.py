@@ -356,12 +356,13 @@ def v6_ivf_probe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "updates. MLlib KMeans is float/engine-specific (v4 stays "
     "rows-only); this variant makes the clustering itself "
     "value-hash-checkable. The k x dim codebook lives on the driver. "
-    "The quantized vectors are pinned once; up to "
-    "ann._KMEANS_DRIVER_ROW_CAP of them, one bounded Arrow collect "
-    "brings them to the driver, which runs the rounds and the "
-    "assignment and returns a literal frame. Above it, each round is "
-    "one vectorized mapInPandas argmin pass emitting partial sums plus "
-    "one small aggregation, and a final mapInPandas pass assigns.",
+    "Up to ann._KMEANS_DRIVER_ROW_CAP vectors, one bounded Arrow "
+    "collect of the raw double arrays brings them to the driver, which "
+    "quantizes them in numpy, runs the rounds and the assignment and "
+    "returns a literal frame. Above it, the raw vectors are spread and "
+    "pinned, each round is one vectorized mapInArrow pass (quantize, "
+    "argmin, partial sums) plus one small aggregation, and a final "
+    "mapInArrow pass assigns.",
 )
 def v5_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openseizuredatabase_spark.functions.ann import kmeans_exact
@@ -1326,20 +1327,17 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from openseizuredatabase_spark.functions.ann import _np_length_groups
+    from openseizuredatabase_spark.functions.ann import (
+        _arrow_batch,
+        _np_length_groups,
+        quantize_col,
+    )
 
     emb = _ts(spark, sf_dir, "embeddings")
     qa = pin(
-        emb.select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1000, 0).cast("long"),
-            ).alias("__v"),
-        )
+        emb.select("vec_id", quantize_col(F.col("embedding"), 1000).alias("__v"))
     )
     part_schema = T.StructType(
         [
@@ -1355,12 +1353,10 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ``warr`` None means the all-1000 initial vector."""
 
         def run(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
+            for batch in it:
                 max_l = 0
                 acc = None
-                for L, mat, _ in _np_length_groups(pdf, "__v"):
+                for L, mat, _ in _np_length_groups(batch, "__v"):
                     w = (
                         np.full(L, 1000, dtype=np.int64)
                         if warr is None
@@ -1378,15 +1374,12 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # dims are dense prefixes, so every dim < max_l is
                     # present in this batch — emit all of them (zeros
                     # included: presence defines the output dim set)
-                    yield pd.DataFrame(
-                        {
-                            "dim": np.arange(max_l, dtype=np.int32),
-                            "s": acc,
-                        }
+                    yield _arrow_batch(
+                        zip(range(max_l), acc.tolist()), part_schema
                     )
 
         return (
-            qa.mapInPandas(run, schema=part_schema)
+            qa.mapInArrow(run, schema=part_schema)
             .groupBy("dim")
             .agg(F.sum("s").alias("s"))
             .collect()
@@ -1499,19 +1492,21 @@ def _v15_oracle() -> str:
     "against a recursive-CTE closure over the naive quadratic join — "
     "the oracle deliberately takes the rewrite's replaced plan. "
     "Border points adopt the min cluster among their core neighbors; "
-    "noise is reported as cluster -1. Two paths, one cap: the pinned "
-    "points are collected once under dedup's connected-components "
+    "noise is reported as cluster -1. Two paths, one cap: the points "
+    "are collected once, straight off the scan, under dedup's "
+    "connected-components "
     "edge cap, and when the grid's candidate pairs (counted from the "
     "cell sizes) also fit under it, the whole clustering runs on the "
     "driver — vectorized pair expansion per cell pair, the same "
     "union-find as the components finisher — and returns a literal. "
-    "Otherwise the distributed plan runs: a blocked equi-join over "
+    "Otherwise the points are spread by the rows rule and pinned, and "
+    "the distributed plan runs: a blocked equi-join over "
     "the 5 offsets, then dedup.connected_components (driver "
     "union-find up to the same cap, star contraction above it). The "
     "cap at -1 forces both distributed steps.",
 )
 def v15_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _ts(spark, sf_dir, "embeddings").select(
+    p = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.round(F.element_at("embedding", 1).cast("double") * 1000000, 0)
         .cast("long")
@@ -1653,15 +1648,10 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
     # pair multiset (each ordered pair appeared exactly once before:
     # a-replica meets b in b's home cell only). 5n rows into the join
     # instead of 9n, half the distance tests, same nbr frame.
-    # the point table is consumed by FIVE plan branches (three join
-    # sides, the self-edge branch, and the noise anti-join); at any
-    # scale re-deriving it means five parquet scans. It is pinned, and
-    # the gate's bounded collect is its first action: at or under the
+    # the gate reads the points straight off the scan: at or under the
     # connected-components edge cap in points AND in grid candidate
-    # pairs the whole clustering runs on the driver, and otherwise the
-    # collect has already computed the pin the joins below read, so
-    # AQE's concurrent stage jobs never race on uncomputed blocks
-    pc = pin(pc)
+    # pairs the whole clustering runs on the driver, and the collect is
+    # the only job
     cap = dedup_ops._CC_DRIVER_EDGE_CAP
     tbl = bounded_collect(pc, cap)
     if tbl is not None:
@@ -1671,9 +1661,13 @@ def _v15_dbscan(p: DataFrame) -> DataFrame:
                 spark, rows,
                 "cluster long, n_core long, n_border long, n_total long",
             )
-    # the rows rule sizes the layout from the measured count
+    # the point table is consumed by FIVE plan branches (three join
+    # sides, the self-edge branch, and the noise anti-join); at any
+    # scale re-deriving it means five parquet scans, so it is pinned.
+    # The rows rule sizes it from the measured count: a repartition,
+    # since a coalesce cannot widen a one-split scan
     n = tbl.num_rows if tbl is not None else pc.count()
-    pc = pc.coalesce(rows_width(spark, n))
+    pc = pin(pc.repartition(rows_width(spark, n)))
     # a 4-row constant: a LocalRelation literal, NOT createDataFrame —
     # the RDD path schedules one Python-worker task per core to ship
     # four integers (measured 0.6 s of pure scheduling at sf0.1)

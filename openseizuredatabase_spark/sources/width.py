@@ -5,7 +5,8 @@ No other module reads ``spark.sql.shuffle.partitions``,
 (``rows_width``) sizes loops, census coalesces, writes and streaming
 state stores by measured rows; the map-spread rules
 (``spread_small_scan``, ``spread_cpu_dense``) widen scans narrower than
-the cores before CPU-heavy map work. Widths change layout only, never
+the cores before CPU-heavy map work, never before a driver gate's
+bounded collect. Widths change layout only, never
 result membership; the oracle sweep re-verifies every query under them.
 """
 
@@ -76,8 +77,11 @@ def spread_small_scan(df: DataFrame, spark: SparkSession, nbytes: int) -> DataFr
     than 4 splits, before CPU-heavy map work (tokenization, hashing,
     multi-format parsing). A local one-row-group table otherwise runs
     the whole map side on one core; a lake-scale scan is left as is.
-    Never size from ``df.rdd``: it forces a full physical planning and
-    RDD conversion per call."""
+    Not for a scan a driver gate collects (``lineage.bounded_collect``):
+    there the spread is a shuffle job whose rows all end on the driver;
+    spread only on the gate's distributed fallback. Never size from
+    ``df.rdd``: it forces a full physical planning and RDD conversion
+    per call."""
     target = cores(spark)
     if nbytes >= min(4, target) * max_partition_bytes(spark):
         return df
@@ -91,7 +95,8 @@ def spread_cpu_dense(df: DataFrame, spark: SparkSession) -> DataFrame:
     to v8/v10/v18/t24 at sf0.1 (near-empty Arrow tasks on every pass),
     while v8 at x100, where one 2.9 MB file fed every pass, went from
     37 s to 18 s. A scan that already plans a full-width split count is
-    left as is."""
+    left as is. Like ``spread_small_scan``, it belongs after a driver
+    gate, on the distributed fallback (``ann.kmeans_exact``)."""
     nbytes = scan_bytes(df)
     if nbytes is None:
         return df

@@ -497,3 +497,87 @@ def test_ivf_pq_routes_to_probed_cell_only(spark):
     # cluster-A members (row order after the provenance join is
     # unspecified; the driver compare is order-insensitive too)
     assert all(r.adc_dist >= 0 for r in out)
+
+
+def _adversarial(quant):
+    """Doubles whose ``x * quant`` lands on or next to a rounding tie,
+    near 2^52 and 2^53 (where the float spacing reaches 1 and 2), and
+    near the int64 cast limit, plus a seeded normal sample."""
+    tie = [n + 0.5 for n in range(-6, 6)] + [0.49999999999999994, -0.49999999999999994]
+    big = [2.0**52 + d for d in (-1.5, -1.0, -0.5, 0.0, 1.0, 2.0)]
+    big += [2.0**53 + d for d in (-2.0, -1.0, 0.0, 2.0, 4.0)]
+    big += [2.0**51 + 0.5, 2.0**51 + 1.5, 2.0**62, 2.0**63 - 1024.0]
+    out = []
+    for t in tie + big:
+        for v in (t, -t, np.nextafter(t, np.inf), np.nextafter(t, -np.inf)):
+            x = v / quant
+            out += [x, np.nextafter(x, np.inf), np.nextafter(x, -np.inf)]
+    out += list(np.random.default_rng(quant).normal(0.0, 3.0, 200))
+    return [float(x) for x in out if abs(x * quant) < 2.0**63 - 2048]
+
+
+@pytest.mark.parametrize("quant", [1, 1000, 10**6])
+def test_np_quantize_matches_spark_round_cast(spark, quant):
+    """``_np_quantize`` equals Spark's ``round(x * quant, 0)::long``
+    (``quantize_col``) on adversarial doubles and on float32 values
+    cast to double, and raises exactly where Spark's cast overflows."""
+    from openseizuredatabase_spark.functions.ann import _np_quantize, quantize_col
+
+    xs = _adversarial(quant)
+    x32 = [
+        float(v) for v in np.asarray(xs, dtype=np.float32)
+        if abs(float(v) * quant) < 2.0**63 - 2048
+    ]
+    df = spark.createDataFrame(
+        [(xs, x32)], "d array<double>, f array<float>"
+    )
+    got = df.select(
+        quantize_col(F.col("d"), quant).alias("d"),
+        quantize_col(F.col("f"), quant).alias("f"),
+    ).head()
+    assert _np_quantize(np.asarray(xs), quant).tolist() == got["d"]
+    assert _np_quantize(np.asarray(x32), quant).tolist() == got["f"]
+    # the cast limit: exactly ±2^63 passes (+2^63 saturates), the next
+    # double out raises; NaN and ±Inf raise
+    edge = [2.0**63, -(2.0**63)]
+    row = spark.createDataFrame([(edge,)], "d array<double>").select(
+        quantize_col(F.col("d"), 1).alias("d")
+    ).head()
+    assert _np_quantize(np.asarray(edge), 1).tolist() == row["d"]
+    for bad in (float("nan"), float("inf"), float("-inf"),
+                np.nextafter(2.0**63, np.inf) / quant, -1e300):
+        with pytest.raises(ArithmeticError):
+            _np_quantize(np.asarray([bad]), quant)
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            spark.createDataFrame([([float(bad)],)], "d array<double>").select(
+                quantize_col(F.col("d"), quant)
+            ).collect()
+
+
+def test_null_elements_become_int64_min_and_nan_raises(spark, monkeypatch):
+    """A null element stays null in ``quantize_col`` and becomes the
+    int64 minimum in the numpy groups — the value the pandas
+    NaN-to-int64 conversion gave it on the k-means driver path — on
+    both k-means paths; a NaN raises like Spark's cast."""
+    import pyarrow as pa
+
+    from openseizuredatabase_spark.functions.ann import (
+        _np_length_groups,
+        quantize_col,
+    )
+
+    df = spark.createDataFrame([([1.5, None],)], "d array<double>")
+    assert df.select(quantize_col(F.col("d"), 10)).head()[0] == [15, None]
+    lo = np.iinfo(np.int64).min
+    batch = pa.record_batch({"__v": pa.array([[0.0015, None], [2.0]])})
+    groups = {L: mat.tolist() for L, mat, _ in _np_length_groups(batch, "__v", 1000)}
+    assert groups == {1: [[2000]], 2: [[2, lo]]}
+    with pytest.raises(ArithmeticError):
+        list(_np_length_groups(
+            pa.record_batch({"__v": pa.array([[float("nan")]])}), "__v", 1000
+        ))
+    rows = [(1, [0.0, 1.0]), (2, [5.0, None]), (3, [1.0, 1.0]),
+            (4, [None, None]), (5, [4.0, 4.0])]
+    assign, cents = _kmeans_both_paths(spark, monkeypatch, rows, k=2, iters=2, quant=10)
+    assert assign == [(1, 2), (2, 2), (3, 2), (4, 1), (5, 2)]
+    assert cents == [(1, 0, lo), (1, 1, lo), (2, 0, 25), (2, 1, -2305843009213693937)]

@@ -171,3 +171,48 @@ def test_every_cap_constant_is_forced_by_a_test():
         c for c in caps if not re.search(rf'"{c}",\s*-1\)', tests)
     ]
     assert not unforced, unforced
+
+
+@pytest.mark.parametrize("name", ["v5_kmeans_exact", "v15_dbscan_grid"])
+def test_driver_path_build_is_one_unshuffled_job(spark, sf_dir, monkeypatch, name):
+    """Under the caps, building v5 or v15 runs exactly one job — the
+    gate's bounded collect — which writes no shuffle bytes, and the
+    frame the gate reads carries no lambda function (quantization runs
+    in numpy on the driver, not in an interpreted ``transform``) and
+    no pin (it reads the scan itself). The sf0.1 lake is the first
+    whose embeddings a spread would widen. A warm-up build first takes
+    the one-off parquet schema job of a fresh session's first read."""
+    import uuid
+
+    from openseizuredatabase_spark.functions import ann
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    lake = sf01 if os.path.isdir(sf01) else sf_dir
+    QUERIES[name].fn(spark, lake)
+    gated = []
+    for mod in (ann, q_vector):
+        real = mod.bounded_collect
+
+        def spy(df, cap, real=real):
+            gated.append(df)
+            return real(df, cap)
+
+        monkeypatch.setattr(mod, "bounded_collect", spy)
+    sc = spark.sparkContext
+    group = f"gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name].fn(spark, lake)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    store = jsc.statusStore()
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
+    assert len(gated) == 1
+    plan = gated[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan.lower(), plan
+    assert "LogicalRDD" not in plan, plan

@@ -29,9 +29,10 @@ Spark limit takes), ``distributed`` (cap = -1) and ``default`` (the
 module cap as committed, so above it the failed gate's bounded collect
 is paid too). Each run builds the query and runs one action on every
 output, as the callers do: one warm-up, then the median of ``--reps``.
-One JSON line per run: ``wall_s``, and VmHWM in MiB of the Python
-driver, the JVM and their sum (the benchmark ledger's
-``driver.peak_rss_mb``).
+One JSON line per run: ``wall_s``; ``gate_s``, the part of it spent in
+the gate's own bounded collect (above the cap on the ``default`` path,
+what the failed gate costs); and VmHWM in MiB of the Python driver, the
+JVM and their sum (the benchmark ledger's ``driver.peak_rss_mb``).
 """
 
 from __future__ import annotations
@@ -156,19 +157,34 @@ def _run(gate: str, path: str, size: int, mode: str, reps: int) -> dict:
     if mode != "default":
         driver_cap = SPARK_LIMIT_CAP if gate == "dbscan" else size
         setattr(mod, name, driver_cap if mode == "driver" else -1)
+    # time the gate's own bounded collect inside the module that calls it
+    gate_mod = {"kmeans": ann, "cc": dedup, "dbscan": q_vector}[gate]
+    real_collect, gate_t = gate_mod.bounded_collect, []
 
-    def once() -> float:
+    def timed_collect(frame, cap):
+        t0 = time.perf_counter()
+        try:
+            return real_collect(frame, cap)
+        finally:
+            gate_t[-1] += time.perf_counter() - t0
+
+    gate_mod.bounded_collect = timed_collect
+
+    def once() -> tuple[float, float]:
+        gate_t.append(0.0)
         t0 = time.perf_counter()
         for o in outputs():
             o.collect()
-        return time.perf_counter() - t0
+        return time.perf_counter() - t0, gate_t[-1]
 
     once()
-    wall = statistics.median(once() for _ in range(reps))
+    runs = [once() for _ in range(reps)]
+    wall = statistics.median(w for w, _ in runs)
+    gate_s = statistics.median(g for _, g in runs)
     py = _vmhwm_mb(os.getpid())
     jvm = _vmhwm_mb(spark.sparkContext._gateway.proc.pid)
     return {"gate": gate, "size": size, "path": mode, "wall_s": round(wall, 3),
-            "python_mb": round(py), "jvm_mb": round(jvm),
+            "gate_s": round(gate_s, 3), "python_mb": round(py), "jvm_mb": round(jvm),
             "peak_rss_mb": round(py + jvm)}
 
 
