@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.functions import array_to_vector
 
-from openseizuredatabase_spark.functions.literal import literal_df, rows_frame
+from openseizuredatabase_spark.functions.literal import rows_frame
 from openseizuredatabase_spark.functions.vectors import cosine
 from openseizuredatabase_spark.lineage import bounded_collect, pin
 from openseizuredatabase_spark.sources.width import spread_cpu_dense
@@ -148,9 +148,10 @@ def _np_length_groups(batch, vec_field, quant=None):
     nonzero vector length of ``vec_field`` in a pyarrow RecordBatch or
     Table (rows are ragged lists). With ``quant`` the lists hold doubles
     and each coordinate goes through :func:`_np_quantize`; without it
-    they already hold quantized integers. A null coordinate becomes the
-    int64 minimum, the value the historical pandas path's NaN-to-int64
-    conversion gave it."""
+    they already hold quantized integers. A null element raises
+    ``ArithmeticError``, as a NaN does in :func:`_np_quantize`: it has
+    no integer coordinate, and a sentinel such as the int64 minimum
+    would wrap ``(v - c)²`` in :func:`_np_argmin_cid`."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -159,12 +160,12 @@ def _np_length_groups(batch, vec_field, quant=None):
         col = col.combine_chunks()
     lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
     vals = col.flatten()
-    if quant is None:
-        flat = vals.fill_null(0).to_numpy().astype(np.int64)
-    else:
-        flat = _np_quantize(vals.fill_null(0.0).to_numpy(), quant)
     if vals.null_count:
-        flat[vals.is_null().to_numpy(zero_copy_only=False)] = _I64.min
+        raise ArithmeticError(f"a {vec_field} vector holds a null element")
+    if quant is None:
+        flat = vals.to_numpy().astype(np.int64)
+    else:
+        flat = _np_quantize(vals.to_numpy(), quant)
     starts = np.cumsum(lens) - lens
     for L in np.unique(lens):
         if L == 0:
@@ -173,15 +174,32 @@ def _np_length_groups(batch, vec_field, quant=None):
         yield int(L), flat[starts[idx, None] + np.arange(L)], idx
 
 
-def _np_book(tbl, id_col, quant):
-    """The codebook (id, int64 codeword) of every vector in the pyarrow
-    table ``tbl`` (``id_col``, double lists ``__v``), id-ascending."""
+def _np_subspaces(groups, width):
+    """Yield (sub, first dim, int64 matrix, row index array) for every
+    subspace of every length group from :func:`_np_length_groups`: the
+    dense slices [sub·width, (sub+1)·width) of its vectors. A ragged
+    tail slices short and a subspace the group does not reach does not
+    appear — the posexplode + ``dim div width`` grouping. ``width``
+    None is one subspace spanning the whole vector (k-means)."""
+    for L, mat, idx in groups:
+        w = width or L
+        for s in range(-(-L // w)):
+            yield s, s * w, mat[:, s * w : (s + 1) * w], idx
+
+
+def _np_book(tbl, id_col, quant, width):
+    """The seed codebook: every subspace slice of the vectors in the
+    pyarrow table ``tbl`` (``id_col``, double lists ``__v``), keyed
+    ``{sub: [(cid, int64 codeword), ...]}`` with the vector's id as its
+    cid, id-ascending within each subspace."""
     ids = tbl.column(id_col).to_pylist()
-    return sorted(
-        (ids[i], row)
-        for _L, mat, idx in _np_length_groups(tbl, "__v", quant)
-        for i, row in zip(idx.tolist(), mat)
-    )
+    book: dict = {}
+    groups = _np_length_groups(tbl, "__v", quant)
+    for s, _lo, mat, idx in _np_subspaces(groups, width):
+        book.setdefault(s, []).extend(zip((ids[i] for i in idx.tolist()), mat))
+    for cws in book.values():
+        cws.sort(key=lambda t: t[0])
+    return book
 
 
 def _arrow_batch(rows, schema):
@@ -197,82 +215,244 @@ def _arrow_batch(rows, schema):
     )
 
 
-# Row cap for training k-means on the driver: at or under this many
-# vectors, kmeans_exact collects the raw vectors once and quantizes them
-# and runs every Lloyd round and the final assignment in the driver
-# process. Measured crossover (tools/gate_crossover.py --gate kmeans:
-# synthetic 64-dim embeddings, k=8, iters=2, local[4] on a 4-core host,
-# 4 GB driver heap; build plus one action, median of 3), driver vs
-# distributed seconds, with the failed gate's own collect (gate_s of
-# the default path) where the size is above the cap:
+# Row cap for training on the driver (kmeans_exact and pq_train_encode,
+# through _lloyd_exact): at or under this many vectors divided by the
+# subspace count n_sub (1 for k-means), the core collects the raw
+# vectors once, quantizes them and runs every Lloyd round and, without
+# a train_df, the final assignment in the driver process. Measured
+# crossover (tools/gate_crossover.py --gate kmeans and --gate pq:
+# synthetic 64-dim embeddings; k-means k=8, PQ v8's n_sub=16, k_sub=32;
+# iters=2; local[4] on a 4-core host, 4 GB driver heap; build plus one
+# action, median of 3), driver vs distributed seconds, the failed
+# gate's own collect (gate_s of the default path) above the cap, and
+# driver.peak_rss_mb (Python plus JVM VmHWM, MiB) of both paths:
 #
-#     vectors   driver  distributed  failed gate
-#       2,000     1.05         1.23
-#      20,000     1.59         1.70
-#      60,000     2.15         2.39
-#     100,000     3.77         2.53
-#     140,000     4.94         2.93
-#     200,000     6.55         3.86         0.78
-#     600,000    17.73         7.60         0.68
+#             vectors   driver  distributed  failed gate  peak MiB (d/dist)
+#   k-means     2,000     0.66         1.23                    824 /   936
+#              20,000     1.75         1.41                  1,279 / 1,321
+#              60,000     2.10         2.01                  1,407 / 2,312
+#             100,000     3.41         2.53         0.60     2,314 / 2,227
+#             200,000     5.44         3.18         0.79     3,749 / 3,359
+#             600,000    16.25         7.86         0.74     6,912 / 5,095
+#   PQ          2,000     0.95         1.39                    819 / 1,145
+#               3,750     1.11         1.44                  1,023 / 1,419
+#              10,000     1.94         1.83         0.11     1,051 / 1,439
+#              20,000     3.90         2.25                  1,228 / 1,637
+#              60,000     8.80         3.65                  2,010 / 2,094
+#             200,000        -         8.75         0.36         - / 3,839
+#             600,000        -        25.53         0.25         - / 5,079
 #
-# The driver path wins up to 60k and loses from 100k on, as it did when
-# both paths quantized in SQL (then 6.0 vs 6.6 s at 60k, 11.0 vs 10.4 s
-# at 100k, 59.9 vs 45.2 s at 600k), so the cap stays. Its peak RSS
-# (Python plus JVM) is lower at 60k (1.9 vs 2.0 GB) and higher beyond:
-# 2.7 vs 2.6 GB at 200k, 5.4 vs 4.0 GB at 600k. Above the cap the
-# default path ran 4.64 s at 200k and 8.90 s at 600k, against 17.26 s
-# and 46.85 s with the SQL quantizer.
+# k-means: the driver path holds up to 60k and loses from 100k on, as
+# it did when both paths quantized in SQL (then 6.0 vs 6.6 s at 60k,
+# 11.0 vs 10.4 s at 100k, 59.9 vs 45.2 s at 600k), so the cap stays;
+# an earlier run of the same cells read 1.59 vs 1.70 s at 20k and
+# 2.15 vs 2.39 s at 60k. Above the cap the default path ran 4.60 s at
+# 200k and 8.52 s at 600k, against 17.26 s and 46.85 s with the SQL
+# quantizer. PQ crosses over near 10k vectors, not 60k: each vector
+# meets n_sub·k_sub = 512 codewords (k-means: 8) and leaves n_sub code
+# rows in the driver-held codes frame. Its gate is therefore this cap
+# divided by n_sub (3,750 for v8), where the driver still wins; the
+# codes frame then holds at most this cap's rows, as k-means'
+# assignment does. The driver path was not run above 60k, where it
+# already took 2.4x the distributed time. Above its gate PQ quantizes
+# in numpy too, which cut its default path from 17.9 s to 10.1 s at
+# 200k and from 51.7 s to 24.1 s at 600k against the SQL quantizer.
 _KMEANS_DRIVER_ROW_CAP = 60_000
 
 
-def _np_partial_sums(groups, book):
-    """Per-(cid, dim) member sums and counts of one batch against
-    ``book``: ``(cid, dim, s, n)`` rows, ``s`` an exact Python int.
+def _np_partial_sums(groups, book, width):
+    """Per-(cid, sub, dim) member sums and counts of one batch against
+    ``book``: ``(cid, sub, dim, s, n)`` rows, ``s`` an exact Python int.
     ``groups`` comes from :func:`_np_length_groups`."""
     out = []
-    if not book:
-        return out
-    for L, mat, _ in groups:
-        win = _np_argmin_cid(mat, book)
-        for j, (cid, _cw) in enumerate(book):
+    for s, lo, mat, _ in _np_subspaces(groups, width):
+        cws = book.get(s)
+        if not cws:
+            continue
+        win = _np_argmin_cid(mat, cws)
+        for j, (cid, _cw) in enumerate(cws):
             sel = win == j
             m = int(sel.sum())
             if m:
                 sums = mat[sel].sum(axis=0).tolist()
-                out.extend((cid, d, sums[d], m) for d in range(L))
+                out.extend((cid, s, lo + d, x, m) for d, x in enumerate(sums))
     return out
 
 
 def _book_from_sums(rows):
-    """The updated codebook from per-(cid, dim) partial sums and counts
-    ``(cid, dim, s, n)``, totalled here as Python ints, which are exact
-    at any magnitude; Python ``//`` is floor division == the portable
-    (s - (((s%n)+n)%n)) / n."""
+    """The updated codebook from per-(cid, sub, dim) partial sums and
+    counts ``(cid, sub, dim, s, n)``, totalled here as Python ints, which
+    are exact at any magnitude; Python ``//`` is floor division == the
+    portable (s - (((s%n)+n)%n)) / n. A codeword's dims are a dense
+    range from its subspace's first dim (vector dims are dense
+    prefixes), so sorting them places every coordinate."""
     tot: dict = {}
-    for cid, d, s, n in rows:
-        t = tot.setdefault(cid, {}).setdefault(d, [0, 0])
-        t[0] += s
+    for cid, s, d, x, n in rows:
+        t = tot.setdefault((s, cid), {}).setdefault(d, [0, 0])
+        t[0] += x
         t[1] += n
-    book = []
-    for cid in sorted(tot):
-        arr = np.empty(len(tot[cid]), dtype=np.int64)
-        for d, (s, n) in tot[cid].items():
-            arr[d] = s // n
-        book.append((cid, arr))
+    book: dict = {}
+    for s, cid in sorted(tot):
+        cw = [x // n for _d, (x, n) in sorted(tot[s, cid].items())]
+        book.setdefault(s, []).append((cid, np.array(cw, dtype=np.int64)))
     return book
 
 
-def _np_assign(ids, groups, book):
-    """(ids, cids): each vector's nearest codeword in ``book``; ``ids``
-    is the batch's id column as a numpy array."""
-    out_ids, cids = [], []
-    if not book:
-        return out_ids, cids
-    for _L, mat, idx in groups:
-        win = _np_argmin_cid(mat, book)
-        out_ids.extend(ids[idx].tolist())
-        cids.extend(book[j][0] for j in win)
-    return out_ids, cids
+def _np_assign(ids, groups, book, width):
+    """Each vector's nearest codeword in ``book`` per subspace: (id, sub,
+    cid) rows, or (id, cid) when ``width`` is None (one subspace).
+    ``ids`` is the batch's id column as a numpy array."""
+    out = []
+    for s, _lo, mat, idx in _np_subspaces(groups, width):
+        cws = book.get(s)
+        if not cws:
+            continue
+        cids = [cws[j][0] for j in _np_argmin_cid(mat, cws)]
+        if width is None:
+            out.extend(zip(ids[idx].tolist(), cids))
+        else:
+            out.extend(zip(ids[idx].tolist(), [s] * len(cids), cids))
+    return out
+
+
+def _book_frame(spark, book, id_type, width):
+    """A codebook as (cid, dim, c) rows, with ``sub`` after ``cid`` when
+    ``width`` is set. The codebook is driver-held: up to rows_frame's
+    limit a VALUES LocalRelation (no RDD job, folds/broadcasts as a
+    literal)."""
+    sub = width is not None
+    rows = [
+        (cid, *((s,) if sub else ()), s * (width or 0) + p, c)
+        for s in sorted(book)
+        for cid, cw in book[s]
+        for p, c in enumerate(cw.tolist())
+    ]
+    ddl = f"cid {id_type.simpleString()}, {'sub long, ' if sub else ''}dim int, c long"
+    return rows_frame(spark, rows, ddl)
+
+
+def _lloyd_exact(
+    emb, vec_col, id_col, k, iters, quant, n_sub=1, width=None, train_df=None
+):
+    """The exact Lloyd core of :func:`kmeans_exact` (``width`` None: one
+    subspace spanning the whole vector) and :func:`pq_train_encode`
+    (``n_sub`` subspaces of ``width`` dims, each clustered on its own;
+    a vector longer than n_sub·width has more). Seeds are the
+    vectors with ids 1..k of the training frame (``train_df``, else
+    ``emb``); each of the ``iters`` rounds assigns every training vector
+    to its nearest codeword per subspace and floor-divides the member
+    sums into the next codebook.
+
+    The gate reads the raw training vectors — ``cast(vec as
+    array<double>)``, no lambda, no spread — in one bounded collect
+    (:func:`lineage.bounded_collect`, at most ``_KMEANS_DRIVER_ROW_CAP
+    // n_sub`` + 1 rows through Arrow: the driver-held codes frame then
+    holds at most the cap's rows). At or under that, the collect is the
+    only training job: the driver quantizes with :func:`_np_quantize`,
+    builds the length groups once and runs every round with the same
+    numpy kernels the workers use. Above it the raw vectors are widened
+    (``spread_cpu_dense``) and pinned, and each round is one vectorized
+    ``mapInArrow`` pass (quantize, argmin against the closure-shipped
+    codebook, per-batch partial (cid, sub, dim) sums) plus one
+    aggregation whose shuffle carries at most k·dim rows per input
+    partition — REPOSE's partition-local work plus a driver merge.
+
+    Returns (entered, left, encode): the codebooks ``{sub: [(cid, int64
+    codeword), ...]}`` (cid-ascending) that entered and left the last
+    round, and ``encode(book)``, the frame of every ``emb`` vector's
+    nearest codeword in ``book`` per subspace — (id, sub, cid), or
+    (id, cid) with one subspace. It is a driver-held literal frame when
+    the driver trained on ``emb`` itself, else one pinned ``mapInArrow``
+    pass over the pinned training vectors or the ``train_df`` corpus.
+    """
+    from pyspark.sql import types as T
+
+    spark = emb.sparkSession
+    id_type = emb.schema[id_col].dataType
+
+    def raw(df):
+        return df.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+        ).filter(F.size("__v") > 0)
+
+    train = raw(emb if train_df is None else train_df)
+    tbl = bounded_collect(train, _KMEANS_DRIVER_ROW_CAP // n_sub)
+    if tbl is not None:
+        idv = tbl.column(id_col).to_numpy()
+        seeds = tbl.filter((idv >= 1) & (idv <= k))
+        groups = list(_np_length_groups(tbl, "__v", quant))
+
+        def round_sums(cws):
+            return _np_partial_sums(groups, cws, width)
+
+    else:
+        # every Lloyd round and the encode are CPU-dense numpy map
+        # passes over vecs: widen a narrow source scan (results are
+        # layout-invariant by the integer-arithmetic contract) and pin it
+        # so each pass reuses one materialized scan; the seed collect
+        # below is its first action
+        vecs = pin(spread_cpu_dense(train, spark))
+        seeds = vecs.filter((F.col(id_col) >= 1) & (F.col(id_col) <= k)).toArrow()
+        part_schema = T.StructType(
+            [
+                T.StructField("cid", id_type),
+                T.StructField("sub", T.LongType()),
+                T.StructField("dim", T.IntegerType()),
+                T.StructField("s", T.LongType()),
+                T.StructField("n", T.LongType()),
+            ]
+        )
+
+        def round_sums(cws):
+            def partial_sums(it):
+                for batch in it:
+                    groups = _np_length_groups(batch, "__v", quant)
+                    yield _arrow_batch(
+                        _np_partial_sums(groups, cws, width), part_schema
+                    )
+
+            return (
+                vecs.mapInArrow(partial_sums, schema=part_schema)
+                .groupBy("cid", "sub", "dim")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                .collect()
+            )
+
+    book = entered = _np_book(seeds, id_col, quant, width)
+    for _ in range(iters):
+        entered = book
+        book = _book_from_sums(round_sums(book))
+
+    out_schema = T.StructType(
+        [T.StructField(id_col, id_type)]
+        + ([] if width is None else [T.StructField("sub", T.LongType())])
+        + [T.StructField("cid", id_type)]
+    )
+
+    def encode(cws):
+        if tbl is not None and train_df is None:
+            ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_schema)
+            return rows_frame(spark, _np_assign(idv, groups, cws, width), ddl)
+        # a train_df corpus is read by this one pass only, so it is
+        # neither spread nor pinned: under AQE a pin over the spread's
+        # exchange runs that shuffle at build time, one more job (v18)
+        corpus = vecs if train_df is None else raw(emb)
+
+        def assign_codes(it):
+            for batch in it:
+                ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+                groups = _np_length_groups(batch, "__v", quant)
+                yield _arrow_batch(_np_assign(ids, groups, cws, width), out_schema)
+
+        # the codes are the narrow proxy frame the PQ/IVF callers read
+        # from several consumer subtrees. The pin is lazy: with the
+        # k-means cap at -1 on Spark 4.1.2 (sf0.1, local[4]) an eager
+        # one cost v5 and v6 one job each (12 → 11) and was no faster;
+        # a caller that discards the assignment (ivf_two_level) never
+        # materializes it
+        return pin(corpus.mapInArrow(assign_codes, schema=out_schema))
+
+    return entered, book, encode
 
 
 def kmeans_exact(
@@ -299,127 +479,48 @@ def kmeans_exact(
     lowest-cid ties); pinned by tests/test_ann.py and the v5/v7/v10
     oracle twins.
 
-    Scale shape: the seeds are the vectors with ids 1..k, and the
-    codebook (k·dim integers) always lives on the driver between rounds.
-    The gate reads the raw vectors — ``cast(vec as array<double>)``, no
-    lambda, no spread — in one bounded collect
-    (:func:`lineage.bounded_collect`, at most ``_KMEANS_DRIVER_ROW_CAP``
-    + 1 rows through Arrow). At or under the cap, that collect is the
-    only Spark job: the driver quantizes with :func:`_np_quantize`,
-    builds the length groups once and runs every Lloyd round and the
-    final assignment with the same numpy kernels the workers use; the
-    assignment comes back as a driver-held literal frame. Above the cap
-    the raw vectors are widened (``spread_cpu_dense``) and pinned, and
-    the rounds stay distributed: per round one vectorized ``mapInArrow``
-    pass quantizes with the same function, argmins against the
-    closure-shipped codebook and emits per-batch partial (cid, dim)
-    sums, plus one aggregation whose shuffle carries at most k·dim rows
-    per input partition; then a final ``mapInArrow`` assignment pass.
+    Scale shape: k-means is :func:`_lloyd_exact` with one subspace. The
+    seeds are the vectors with ids 1..k, and the codebook (k·dim
+    integers) always lives on the driver between rounds. At or under
+    ``_KMEANS_DRIVER_ROW_CAP`` vectors one bounded Arrow collect is the
+    only Spark job and the assignment comes back as a driver-held
+    literal frame; above it each round is one ``mapInArrow`` pass plus
+    one small aggregation, then a final ``mapInArrow`` assignment pass.
 
     Returns (assignments (id, cid), centroids (cid, dim, c)).
     """
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    id_type = emb.schema[id_col].dataType
-    id_ddl = id_type.simpleString()
-    raw = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).filter(F.size("__v") > 0)
-
-    def cents_frame(book):
-        # the codebook is driver-held k·dim rows — a VALUES
-        # LocalRelation (no RDD job, folds/broadcasts as a literal);
-        # with no seeds it is empty, which VALUES cannot express
-        rows = [
-            (cid, d, c) for cid, cw in book for d, c in enumerate(cw.tolist())
-        ]
-        ddl = f"cid {id_ddl}, dim int, c long"
-        if not rows:
-            return rows_frame(spark, rows, ddl)
-        return literal_df(spark, rows, ddl)
-
-    tbl = bounded_collect(raw, _KMEANS_DRIVER_ROW_CAP)
-    if tbl is not None:
-        # seed codebook: the vectors with ids 1..k
-        idv = tbl.column(id_col).to_numpy()
-        book = _np_book(tbl.filter((idv >= 1) & (idv <= k)), id_col, quant)
-        groups = list(_np_length_groups(tbl, "__v", quant))
-        abook = book
-        for _ in range(iters):
-            abook = book
-            book = _book_from_sums(_np_partial_sums(groups, book))
-        # the last training assignment, as in the distributed path below
-        a_ids, a_cids = _np_assign(idv, groups, abook)
-        assign = rows_frame(
-            spark, zip(a_ids, a_cids), f"{id_col} {id_ddl}, cid {id_ddl}"
-        )
-        return assign, cents_frame(book)
-
-    # every Lloyd round and the final assignment are CPU-dense numpy
-    # map passes over vecs: widen a narrow source scan (results are
-    # layout-invariant by the integer-arithmetic contract) and pin it
-    # so each pass reuses one materialized scan; the seed collect below
-    # is its first action
-    vecs = pin(spread_cpu_dense(raw, spark))
-    # seed codebook: the vectors with ids 1..k (bounded: ≤ k rows)
-    book = _np_book(
-        vecs.filter((F.col(id_col) >= 1) & (F.col(id_col) <= k)).toArrow(),
-        id_col,
-        quant,
+    assign, book = _kmeans(emb, vec_col, id_col, k, iters, quant)
+    return assign, _book_frame(
+        emb.sparkSession, book, emb.schema[id_col].dataType, None
     )
-    part_schema = T.StructType(
-        [
-            T.StructField("cid", id_type),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    abook = book
-    for _ in range(iters):
-        bk = abook = book
 
-        def partial_sums(it):
-            for batch in it:
-                yield _arrow_batch(
-                    _np_partial_sums(_np_length_groups(batch, "__v", quant), bk),
-                    part_schema,
-                )
 
-        upd = (
-            vecs.mapInArrow(partial_sums, schema=part_schema)
-            .groupBy("cid", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        book = _book_from_sums(upd)
+def _kmeans(emb, vec_col, id_col, k, iters, quant):
+    """:func:`kmeans_exact`'s assignment frame and its driver-held
+    codebook ``{0: [(cid, int64 centroid), ...]}``."""
+    entered, book, encode = _lloyd_exact(emb, vec_col, id_col, k, iters, quant)
     # the returned assignment is the LAST TRAINING assignment — argmin
     # against the book that ENTERED the final round (pre-update), the
     # historical loop's exact semantics; the returned centroids are the
     # post-update book
-    fbook = abook
-    out_schema = T.StructType(
-        [T.StructField(id_col, id_type), T.StructField("cid", id_type)]
-    )
+    return encode(entered), book
 
-    def assign_codes(it):
-        for batch in it:
-            ids, cids = _np_assign(
-                batch.column(id_col).to_numpy(zero_copy_only=False),
-                _np_length_groups(batch, "__v", quant),
-                fbook,
-            )
-            yield _arrow_batch(zip(ids, cids), out_schema)
 
-    # assign is one (id, cid) row per vector — the narrow proxy frame
-    # the PQ/IVF callers read from several consumer subtrees. The pin
-    # is lazy: with the k-means cap at -1 on Spark 4.1.2 (sf0.1,
-    # local[4]) an eager one cost v5 and v6 one job each (12 → 11)
-    # and was no faster; a caller that discards the assignment
-    # (ivf_two_level) never materializes it
-    assign = pin(vecs.mapInArrow(assign_codes, schema=out_schema))
-    return assign, cents_frame(book)
+def _probe_cids(book, q, n_probe):
+    """The ids of the ``n_probe`` centroids of a one-subspace ``book``
+    nearest the quantized query ``q`` by integer squared distance,
+    lowest id first among equals — the driver twin of ranking the
+    centroid table with ``zip_with`` and ``row_number`` over (dist,
+    cid): a centroid of another length than the query has a null
+    distance there, which sorts first."""
+
+    def rank(item):
+        cid, cw = item
+        if cw.shape[0] != q.shape[0]:
+            return (0, 0, cid)
+        return (1, int(((cw - q) ** 2).sum()), cid)
+
+    return [cid for cid, _cw in sorted(book.get(0, []), key=rank)[:n_probe]]
 
 
 def ivf_probe_exact(
@@ -440,51 +541,19 @@ def ivf_probe_exact(
     results end to end (v4's MLlib variant stays rows-only; this one is
     oracle-checkable).
 
-    Scale shape: the centroid ranking is k rows on the driver-free plan
-    (a window over the broadcast centroid table crossed with the 1-row
-    query); at lake scale cluster_id is the partition key, so the probe
-    filter IS partition pruning — the scan touches n_probe/k of the
-    corpus. Rerank cost: candidates × dim integer ops, one TakeOrdered.
+    Scale shape: the centroid ranking is k integer distances on the
+    driver, which holds the codebook; at lake scale cluster_id is the
+    partition key, so the probe filter IS partition pruning — the scan
+    touches n_probe/k of the corpus. Rerank cost: candidates × dim
+    integer ops, one TakeOrdered.
     """
-    from pyspark.sql import Window
-
-    assign, cents = kmeans_exact(
-        emb, vec_col=vec_col, id_col=id_col, k=k, iters=iters, quant=quant
-    )
-    qlit = F.expr(
-        "array("
-        + ", ".join(
-            str(int(round(float(x) * quant))) + "L" for x in query_vec
-        )
-        + ")"
-    )
-    # centroid ranking: centroids pivot to arrays, distance to the query
-    carr = cents.groupBy("cid").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("dim"), F.col("c")))
-        ).alias("cs")
-    )
-    cdist = carr.select(
-        "cid",
-        F.aggregate(
-            F.zip_with(
-                F.transform(F.col("cs"), lambda s: s["c"]),
-                qlit,
-                lambda c, qv: (c - qv) * (c - qv),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("cdist"),
-    )
-    wc = Window.orderBy("cdist", "cid")
-    probe = (
-        cdist.withColumn("__rn", F.row_number().over(wc))
-        .filter(F.col("__rn") <= n_probe)
-        .select("cid")
-    )
+    assign, book = _kmeans(emb, vec_col, id_col, k, iters, quant)
+    q = _np_quantize(query_vec, quant)
+    qlit = F.expr("array(" + ", ".join(f"{x}L" for x in q.tolist()) + ")")
+    probe = _probe_cids(book, q, n_probe)
     qv = emb.select(id_col, quantize_col(F.col(vec_col), quant).alias("qvec"))
     cands = (
-        assign.join(F.broadcast(probe), "cid")
+        assign.filter(F.col("cid").isin(probe))
         .join(qv, id_col)
         .filter(F.col(id_col) != 0)
     )
@@ -519,21 +588,18 @@ def pq_train_encode(
     a vector compresses to n_sub small codes (here 4×3 bits vs 64
     floats), and distances are computed from a tiny lookup table.
 
-    Training is the kmeans_exact recipe run per-subspace in ONE set of
-    relational ops (the subspace id rides along as a group key): integer
-    coordinates, integer distances, lowest-cid tie-breaks, portable
-    floor-division centroid updates — bit-equal on any engine.
-
-    Scale shape per iteration (round-11, guide §2.4 + §4.2 — the
-    kmeans_exact move, per subspace): the n_sub·k_sub·sub_dim-integer
-    codebooks live on the DRIVER between rounds (metadata-sized bounded
-    collect), assignment of all subspaces of a vector is ONE vectorized
-    numpy pass (mapInArrow) against the closure-shipped codebooks —
-    zero shuffles, no ×k_sub candidate explosion through a hash agg, no
-    row_number sort (the historical shape shuffled n·n_sub·k_sub
-    distance rows into a window per round) — emitting per-batch partial
-    (cid, sub, dim) sums so the update is one tiny aggregation. One
-    Spark job per Lloyd round plus the lazy final encode.
+    Training is :func:`_lloyd_exact`, the kmeans_exact core, with
+    ``dim // n_sub``-dim subspaces: integer coordinates, integer
+    distances, lowest-cid tie-breaks, portable floor-division centroid
+    updates — bit-equal on any engine. The n_sub·k_sub·sub_dim-integer
+    codebooks live on the driver between rounds, and every subspace of
+    a vector is assigned in ONE vectorized numpy pass — no ×k_sub
+    candidate explosion through a hash agg, no row_number sort (the
+    historical shape shuffled n·n_sub·k_sub distance rows into a window
+    per round). At or under ``_KMEANS_DRIVER_ROW_CAP // n_sub`` training
+    vectors (the cap comment has the measured crossover) the core's one
+    bounded collect is the only training job; above it each round is
+    one ``mapInArrow`` pass plus one small aggregation.
     Subspace alignment soundness: every vector covering sub s at all
     covers it from dim s·sub_dim (vector dim lists are dense prefixes),
     so a sub-s codeword's dim set is a dense range starting at
@@ -542,158 +608,23 @@ def pq_train_encode(
     contribution semantics exactly (pinned by tests/test_ann.py and the
     v8/v18 oracle twins, which replay the historical shape in SQL).
 
+    The codes assign EVERY corpus vector to the POST-update codebooks
+    (same argmin semantics as the training assignment), so they are
+    consistent with the returned books and
+    ``pq_train_encode(train_df=emb)`` equals ``pq_train_encode()`` on
+    identical data. With ``train_df`` (the t24 sampled-train
+    discipline: codebook training is the n·k_sub·d term, bounded to a
+    sample) the corpus pays only the single distributed encode pass.
+
     Returns (codes (id, sub, cid), codebooks (cid, sub, dim, c)).
     """
-    import math
-
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    id_type = emb.schema[id_col].dataType
-    sub_dim = dim // n_sub
-
-    def to_vecs(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col), quantize_col(F.col(vec_col), quant).alias("__v")
-        ).filter(F.size("__v") > 0)
-
-    # vecs feeds the final encode (and, default path, every Lloyd
-    # round); pin it so each pass reuses one materialized scan, widened
-    # as in kmeans_exact for the CPU-dense encode/training passes.
-    vecs = pin(spread_cpu_dense(to_vecs(emb), spark))
-    if train_df is None:
-        vt = vecs
-    else:
-        # production scale path (the t24 sampled-train discipline):
-        # codebook training is the n·k_sub·d term — bound it to a
-        # sample; the full corpus pays only the single encode pass below
-        vt = pin(spread_cpu_dense(to_vecs(train_df), spark))
-
-    def split_subs(v: np.ndarray):
-        # dense subspace slices of a quantized vector; ragged tails
-        # slice short, absent subs don't appear — exactly the
-        # posexplode + `dim div sub_dim` dim grouping
-        for s in range(math.ceil(v.shape[0] / sub_dim)):
-            yield s, v[s * sub_dim : (s + 1) * sub_dim]
-
-    # seed codebooks: subspace slices of the vectors with ids 1..k_sub
-    books: dict[int, list] = {}
-    for r in vt.filter(
-        (F.col(id_col) >= 1) & (F.col(id_col) <= k_sub)
-    ).collect():
-        v = np.asarray(r[1], dtype=np.int64)
-        for s, sl in split_subs(v):
-            books.setdefault(s, []).append((r[0], sl))
-    for s in books:
-        books[s].sort(key=lambda t: t[0])
-
-    part_schema = T.StructType(
-        [
-            T.StructField("cid", id_type),
-            T.StructField("sub", T.LongType()),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
+    width = dim // n_sub
+    _entered, book, encode = _lloyd_exact(
+        emb, vec_col, id_col, k_sub, iters, quant, n_sub, width, train_df
     )
-    for _ in range(iters):
-        bks = books
-
-        def partial_sums(it):
-            for batch in it:
-                cid_o, sub_o, dim_o, s_o, n_o = [], [], [], [], []
-                for L, mat, _ in _np_length_groups(batch, "__v"):
-                    for s in range(math.ceil(L / sub_dim)):
-                        bk = bks.get(s)
-                        if not bk:
-                            continue
-                        smat = mat[:, s * sub_dim : (s + 1) * sub_dim]
-                        win = _np_argmin_cid(smat, bk)
-                        w = smat.shape[1]
-                        for j, (cid, _cw) in enumerate(bk):
-                            sel = win == j
-                            m = int(sel.sum())
-                            if not m:
-                                continue
-                            sums = smat[sel].sum(axis=0)
-                            cid_o.extend([cid] * w)
-                            sub_o.extend([s] * w)
-                            dim_o.extend(
-                                range(s * sub_dim, s * sub_dim + w)
-                            )
-                            s_o.extend(sums.tolist())
-                            n_o.extend([m] * w)
-                yield _arrow_batch(
-                    zip(cid_o, sub_o, dim_o, s_o, n_o), part_schema
-                )
-
-        upd = (
-            vt.mapInArrow(partial_sums, schema=part_schema)
-            .groupBy("cid", "sub", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        by_key: dict = {}
-        for r in upd:
-            by_key.setdefault((r["sub"], r["cid"]), {})[r["dim"]] = (
-                r["s"] // r["n"]
-            )
-        books = {}
-        for (s, cid), dims in sorted(by_key.items()):
-            arr = np.empty(len(dims), dtype=np.int64)
-            for d, c in dims.items():
-                arr[d - s * sub_dim] = c
-            books.setdefault(s, []).append((cid, arr))
-
-    fbooks = books
-
-    # single encode pass for BOTH paths: assign EVERY corpus vector to
-    # the POST-update codebooks (same argmin semantics as the training
-    # assignment). Without this the default path would return the last
-    # TRAINING assignment — computed against the second-to-last
-    # codebooks — leaving codes inconsistent with the returned books,
-    # and pq_train_encode(train_df=emb) would disagree with
-    # pq_train_encode() on identical data.
-    def encode(it):
-        for batch in it:
-            ids, subs, cids = [], [], []
-            bid_all = batch.column(id_col).to_numpy(zero_copy_only=False)
-            for L, mat, idx in _np_length_groups(batch, "__v"):
-                bids = bid_all[idx]
-                for s in range(math.ceil(L / sub_dim)):
-                    bk = fbooks.get(s)
-                    if not bk:
-                        continue
-                    smat = mat[:, s * sub_dim : (s + 1) * sub_dim]
-                    win = _np_argmin_cid(smat, bk)
-                    ids.extend(bids.tolist())
-                    subs.extend([s] * len(bids))
-                    cids.extend(bk[j][0] for j in win)
-            yield _arrow_batch(zip(ids, subs, cids), codes_schema)
-
-    codes_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("sub", T.LongType()),
-            T.StructField("cid", id_type),
-        ]
+    return encode(book), _book_frame(
+        emb.sparkSession, book, emb.schema[id_col].dataType, width
     )
-    # the codes frame is consumed by the ADC scorer AND by candidate
-    # filters (v8/v10 reference it more than once); pin the narrow
-    # (id, sub, cid) result so the encode pass runs once
-    assign = pin(vecs.mapInArrow(encode, schema=codes_schema))
-    # driver-held codebooks: a VALUES LocalRelation, not an RDD
-    cents = literal_df(
-        spark,
-        [
-            (cid, s, s * sub_dim + p, int(cw[p]))
-            for s in sorted(fbooks)
-            for cid, cw in fbooks[s]
-            for p in range(cw.shape[0])
-        ],
-        f"cid {id_type.simpleString()}, sub long, dim int, c long",
-    )
-    return assign, cents
 
 
 def pq_adc_topk(
@@ -762,41 +693,8 @@ def ivf_pq_topk(
 
     Returns (vec_id, cid, adc_dist) for the top_k candidates.
     """
-    from pyspark.sql import Window
-
-    assign, cents = kmeans_exact(
-        emb, vec_col=vec_col, id_col=id_col, k=k, iters=iters, quant=quant
-    )
-    qlit = F.expr(
-        "array("
-        + ", ".join(
-            str(int(round(float(x) * quant))) + "L" for x in query_vec
-        )
-        + ")"
-    )
-    carr = cents.groupBy("cid").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("dim"), F.col("c")))
-        ).alias("cs")
-    )
-    cdist = carr.select(
-        "cid",
-        F.aggregate(
-            F.zip_with(
-                F.transform(F.col("cs"), lambda s: s["c"]),
-                qlit,
-                lambda c, qv: (c - qv) * (c - qv),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("cdist"),
-    )
-    wc = Window.orderBy("cdist", "cid")
-    probe = (
-        cdist.withColumn("__rn", F.row_number().over(wc))
-        .filter(F.col("__rn") <= n_probe)
-        .select("cid")
-    )
+    assign, book = _kmeans(emb, vec_col, id_col, k, iters, quant)
+    probe = _probe_cids(book, _np_quantize(query_vec, quant), n_probe)
     codes, books = pq_train_encode(
         emb,
         vec_col=vec_col,
@@ -810,7 +708,7 @@ def ivf_pq_topk(
     # cand gates the codes scan AND re-attaches coarse_cid to the final
     # top-k: two consumers, one narrow frame — pin it
     cand = pin(
-        assign.join(F.broadcast(probe), "cid")
+        assign.filter(F.col("cid").isin(probe))
         .filter(F.col(id_col) != 0)
         .withColumnRenamed("cid", "coarse_cid")
     )

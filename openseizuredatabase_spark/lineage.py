@@ -39,7 +39,10 @@ Why both halves matter:
 
 A pin is lazy: it computes and stores its blocks in the first action
 that reads it, inside that action's own job, and runs no job of its
-own. On Spark 4.1.2 (sf0.1, ``local[4]``) the twelve sites that once
+own — unless its plan holds an exchange: under AQE, building the
+checkpoint's RDD runs the adaptive plan's query stages, so a pinned
+``repartition`` costs one job when the pin is built. On Spark 4.1.2
+(sf0.1, ``local[4]``) the twelve sites that once
 pinned eagerly, for an AQE cache-lock race seen on an older Spark, ran
 fewer jobs lazily at equal or lower median time — m46–m54's media
 fingerprints one job fewer each; with the caps at -1, v5/v6/v8 one

@@ -461,8 +461,10 @@ def _v18_oracle() -> str:
     "(ann.pq_train_encode with train_df — the path real corpora use): "
     "codebooks train on a ~2000-row deterministic hash sample (Lloyd "
     "training is n_train*k_sub*d per round; the full-corpus term is "
-    "the single encode pass only), then EVERY corpus vector encodes "
-    "against the post-update codebooks. Output packs each vector's "
+    "the single encode pass only): the sample trains on the driver "
+    "after one bounded Arrow collect, then EVERY corpus vector encodes "
+    "against the post-update codebooks in one mapInArrow pass over the "
+    "scan. Output packs each vector's "
     "n_sub codes into one integer (4 bits per subspace). The oracle "
     "replays the data-adaptive sample IN SQL — keep rate from "
     "count(*), the portable seeded-md5 slice, sampled Lloyd rounds, "
@@ -706,8 +708,12 @@ def _v8_oracle() -> str:
     _v8_oracle(),
     "Product-quantization ANN (Jégou et al. 2011) with asymmetric "
     "distance computation, cross-engine exact end to end: 16 subspaces "
-    "× 32 integer codewords trained by the per-subspace kmeans_exact "
-    "recipe (functions/ann.py pq_train_encode), then dist(q,x) ≈ "
+    "× 32 integer codewords trained per subspace by kmeans_exact's "
+    "Lloyd core (functions/ann.py pq_train_encode): up to "
+    "ann._KMEANS_DRIVER_ROW_CAP vectors one bounded Arrow collect is "
+    "the whole training and the codes return as a driver-held frame; "
+    "above it each round is one mapInArrow pass plus one small "
+    "aggregation. Then dist(q,x) ≈ "
     "Σ_sub table[sub, code(x,sub)] where the 512-cell query table "
     "broadcasts and the ADC pass is one equi-join + one sum over the "
     "CODES column — the original vectors are never rescanned, which at "
@@ -727,12 +733,9 @@ def v8_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, books = ann.pq_train_encode(emb, n_sub=16, k_sub=32, dim=_EMB_DIM)
     q = emb.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1000, 0).cast("long"),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(ann.quantize_col(F.col("embedding"), 1000)).alias(
+            "dim", "v"
+        ),
     )
     qv = q.filter(F.col("vec_id") == 0).select("dim", "v")
     top = ann.pq_adc_topk(
@@ -976,8 +979,10 @@ def _v10_oracle() -> str:
     _v10_oracle(),
     "IVF-PQ search (IVFADC, Jégou et al. 2011 §IV — FAISS's "
     "``IVFx,PQy``, the production ANN index): v6's coarse quantizer "
-    "routes the query to its 2 nearest cells and v8's PQ/ADC scores "
-    "ONLY those cells' members from their codes — the two "
+    "routes the query to its 2 nearest cells, ranked on the driver "
+    "from the driver-held codebook, and v8's PQ/ADC scores "
+    "ONLY those cells' members from their codes (both trained by "
+    "one Lloyd core, each behind one bounded collect) — the two "
     "compressions multiply, so at 100 TB the scan touches n_probe/k "
     "of the corpus (partition pruning when cluster_id keys the lake "
     "layout) AND reads the ~20x narrower codes column. The oracle "
@@ -1000,12 +1005,9 @@ def v10_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = emb.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1000, 0).cast("long"),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(ann.quantize_col(F.col("embedding"), 1000)).alias(
+            "dim", "v"
+        ),
     )
     qv = q.filter(F.col("vec_id") == 0).select(
         "dim", F.col("v").alias("qv")
@@ -1082,16 +1084,15 @@ def v10_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(vec, label) aggregation.",
 )
 def v12_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from openseizuredatabase_spark.functions import ann
+
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.select(
         F.col("label").cast("long").alias("label"),
         "vec_id",
-        F.posexplode(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1000, 0).cast("long"),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(ann.quantize_col(F.col("embedding"), 1000)).alias(
+            "dim", "v"
+        ),
     )
 
     def _floordiv(s: F.Column, n: F.Column) -> F.Column:
@@ -1206,15 +1207,14 @@ def _v13_oracle() -> str:
     "quantized int64 coordinates make both engines' sums bit-equal.",
 )
 def v13_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from openseizuredatabase_spark.functions import ann
+
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1000, 0).cast("long"),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(ann.quantize_col(F.col("embedding"), 1000)).alias(
+            "dim", "v"
+        ),
     )
     qv = q.filter(F.col("vec_id") == 0).select(
         "dim", F.col("v").alias("qv")
@@ -1322,8 +1322,8 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by numpy or a hash aggregate; the floor-division, the exact
     # int64 norm, and the one IEEE multiply-divide-HALF_UP-round per
     # dim run on the driver with the same operation sequence the JVM
-    # expressions used (k+0.5 is representable, so the floor/frac tie
-    # test reproduces BigDecimal HALF_UP bit-for-bit).
+    # expressions used; the round is ann._np_quantize, bit-equal to
+    # Spark's BigDecimal HALF_UP.
     import math
 
     import numpy as np
@@ -1332,6 +1332,7 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openseizuredatabase_spark.functions.ann import (
         _arrow_batch,
         _np_length_groups,
+        _np_quantize,
         quantize_col,
     )
 
@@ -1385,12 +1386,6 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    def _round_half_up(v: float) -> int:
-        a = abs(v)
-        fl = math.floor(a)
-        r = fl + (1 if a - fl >= 0.5 else 0)
-        return -r if v < 0.0 else r
-
     def _truncdiv(x: int, dd: int) -> int:
         # Spark/DuckDB (x - x % dd) / dd with C-style remainder ==
         # integer division truncating toward zero
@@ -1402,10 +1397,9 @@ def v14_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals = xtxv_pass(warr)
         sq = {r["dim"]: _truncdiv(r["s"], 100_000_000) for r in totals}
         nrm = math.sqrt(float(sum(v * v for v in sq.values())))
-        vm_rows = [
-            (d, _round_half_up(float(v * 8000) / nrm))
-            for d, v in sorted(sq.items())
-        ]
+        dims = sorted(sq)
+        vms = _np_quantize([float(sq[d] * 8000) / nrm for d in dims], 1)
+        vm_rows = list(zip(dims, vms.tolist()))
         warr = np.zeros(len(vm_rows), dtype=np.int64)
         for d, vm in vm_rows:
             warr[d] = vm
@@ -2175,10 +2169,10 @@ def _v20_oracle() -> str:
 def v20_ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from openseizuredatabase_spark.functions.ann import kmeans_exact
+    from openseizuredatabase_spark.functions import ann
 
     emb = _t(spark, sf_dir, "embeddings")
-    assign, cents = kmeans_exact(emb, k=8, iters=2, quant=1000)
+    assign, book = ann._kmeans(emb, "embedding", "vec_id", 8, 2, 1000)
     base = tempfile.mkdtemp(prefix="v20_ivf_lake_")
     (
         assign.join(emb, "vec_id")
@@ -2190,35 +2184,13 @@ def v20_ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake = spark.read.parquet(base)
     total_files = len(lake.inputFiles())
 
-    # planner-side routing: rank the 8-row centroid table against the
-    # query vector and take the n_probe cell ids (metadata-sized — the
-    # step every IVF index performs at plan time)
+    # planner-side routing: rank the 8 driver-held centroids against
+    # the query vector and take the n_probe cell ids (metadata-sized —
+    # the step every IVF index performs at plan time)
     qvec = tables.lookup_param_row(
         sf_dir, "embeddings", "vec_id", 0, "embedding"
     )
-    qq = [int(round(float(x) * 1000)) for x in qvec]
-    carr = cents.groupBy("cid").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("dim"), F.col("c")))
-        ).alias("cs")
-    )
-    qlit = F.expr("array(" + ", ".join(f"{v}L" for v in qq) + ")")
-    cdist = carr.select(
-        "cid",
-        F.aggregate(
-            F.zip_with(
-                F.transform(F.col("cs"), lambda s: s["c"]),
-                qlit,
-                lambda c, qv: (c - qv) * (c - qv),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("cdist"),
-    )
-    probe_ids = [
-        r["cid"]
-        for r in cdist.orderBy("cdist", "cid").limit(2).collect()
-    ]
+    probe_ids = ann._probe_cids(book, ann._np_quantize(qvec, 1000), 2)
     pruned = lake.filter(F.col("cid").isin(probe_ids)).withColumn(
         "_file", F.input_file_name()
     )
@@ -2267,11 +2239,10 @@ def v20_ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast, corpus side scanned once.",
 )
 def v21_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from openseizuredatabase_spark.functions import ann
+
     emb = _t(spark, sf_dir, "embeddings")
-    qa = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * 1000, 0).cast("long"),
-    )
+    qa = ann.quantize_col(F.col("embedding"), 1000)
     queries = (
         emb.filter(F.col("vec_id") < 10)
         .select(F.col("vec_id").alias("qid"), qa.alias("qv"))
@@ -2453,11 +2424,10 @@ def _v23_oracle() -> str:
     "physically; here its SIZE is the measured cost column.",
 )
 def v23_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from openseizuredatabase_spark.functions import ann
+
     emb = _t(spark, sf_dir, "embeddings")
-    qa = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * 1000, 0).cast("long"),
-    )
+    qa = ann.quantize_col(F.col("embedding"), 1000)
     qry = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), qa.alias("qv")
     )

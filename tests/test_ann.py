@@ -86,53 +86,99 @@ def test_kmeans_exact_invariants(spark, sf_dir):
     assert len(dims) == 64 and all(isinstance(r["c"], int) for r in c)
 
 
-def _kmeans_both_paths(spark, monkeypatch, rows, **kw):
-    """kmeans_exact's (assign, cents) rows on the driver path (default
-    cap) and the distributed path (cap -1); they must be equal."""
+def _both_paths(spark, monkeypatch, fn, rows, train=None, **kw):
+    """``fn``'s (kmeans_exact or pq_train_encode) two output frames as
+    sorted rows on the driver path (default cap) and the distributed
+    path (cap -1); they must be equal. ``train`` rows, when given, are
+    the ``train_df``."""
     from openseizuredatabase_spark.functions import ann
 
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ddl = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame(rows, ddl)
+    if train is not None:
+        kw["train_df"] = spark.createDataFrame(train, ddl)
     out = []
     for cap in (ann._KMEANS_DRIVER_ROW_CAP, -1):
         monkeypatch.setattr(ann, "_KMEANS_DRIVER_ROW_CAP", cap)
-        assign, cents = ann.kmeans_exact(emb, **kw)
-        out.append(
-            (
-                sorted(map(tuple, assign.collect())),
-                sorted(map(tuple, cents.collect())),
-            )
-        )
+        frames = getattr(ann, fn)(emb, **kw)
+        out.append(tuple(sorted(map(tuple, f.collect())) for f in frames))
     assert out[0] == out[1]
     return out[0]
+
+
+def _ragged():
+    """Odd ids are 3-dim near +10, even ids 5-dim near -10, so the
+    codebook keeps codewords of several lengths and the negative sums
+    need floor, not truncating, division."""
+    rows = []
+    for i in range(1, 25):
+        base, dim = (10.0, 3) if i % 2 else (-10.0, 5)
+        rows.append((i, [base + (i * 7 + d) % 5 for d in range(dim)]))
+    return rows
 
 
 def test_kmeans_exact_driver_path_matches_distributed(spark, monkeypatch):
     """The driver path (at or under _KMEANS_DRIVER_ROW_CAP) and the
     distributed Lloyd rounds give the same assignments and centroids on
     ragged vectors, on a corpus with no seed ids, and on exact ties."""
-    # ragged: odd ids are 3-dim near +10, even ids 5-dim near -10, so
-    # the codebook keeps centroids of both lengths
-    ragged = []
-    for i in range(1, 25):
-        base, dim = (10.0, 3) if i % 2 else (-10.0, 5)
-        ragged.append((i, [base + (i * 7 + d) % 5 for d in range(dim)]))
-    assign, cents = _kmeans_both_paths(
-        spark, monkeypatch, ragged, k=3, iters=2, quant=10
+    assign, cents = _both_paths(
+        spark, monkeypatch, "kmeans_exact", _ragged(), k=3, iters=2, quant=10
     )
     assert len(assign) == 24
     assert collections.Counter(c[0] for c in cents) == {1: 3, 2: 5, 3: 3}
     # no id in 1..k: no seeds, so nothing is assigned and no centroid
     unseeded = [(i, [float(i), 1.0]) for i in range(10, 20)]
-    assert _kmeans_both_paths(
-        spark, monkeypatch, unseeded, k=3, iters=2, quant=10
+    assert _both_paths(
+        spark, monkeypatch, "kmeans_exact", unseeded, k=3, iters=2, quant=10
     ) == ([], [])
     # ties: ids 3 and 4 are each equidistant from seeds 1 and 2; the
     # lowest cid wins
     ties = [(1, [0.0, 0.0]), (2, [2.0, 0.0]), (3, [1.0, 0.0]), (4, [1.0, 1.0])]
-    assign, _ = _kmeans_both_paths(
-        spark, monkeypatch, ties, k=2, iters=1, quant=1
+    assign, _ = _both_paths(
+        spark, monkeypatch, "kmeans_exact", ties, k=2, iters=1, quant=1
     )
     assert assign == [(1, 1), (2, 2), (3, 1), (4, 1)]
+
+
+def test_pq_train_encode_driver_path_matches_distributed(spark, monkeypatch):
+    """pq_train_encode's driver path and its distributed Lloyd rounds
+    give the same codes and codebooks on ragged vectors, on a corpus
+    with no seed ids, on exact ties, and with a ``train_df`` that is
+    not the corpus."""
+    pq = dict(n_sub=2, k_sub=3, iters=2, quant=10, dim=4)
+    codes, books = _both_paths(
+        spark, monkeypatch, "pq_train_encode", _ragged(), **pq
+    )
+    # 2-dim subspaces: a 3-dim vector has subs 0 and 1 (one dim), a
+    # 5-dim one also sub 2 (its fifth dim, past ``dim``)
+    assert collections.Counter(c[1] for c in codes) == {0: 24, 1: 24, 2: 12}
+    assert collections.Counter((b[0], b[1]) for b in books) == {
+        (1, 0): 2, (1, 1): 1, (2, 0): 2, (2, 1): 2, (2, 2): 1,
+        (3, 0): 2, (3, 1): 1,
+    }
+    unseeded = [(i, [float(i), 1.0]) for i in range(10, 20)]
+    assert _both_paths(
+        spark, monkeypatch, "pq_train_encode", unseeded, **pq
+    ) == ([], [])
+    # ties, 1-dim subspaces: in sub 0 ids 3 and 4 sit halfway between
+    # seeds 1 and 2, in sub 1 the two seeds coincide; the lowest cid
+    # wins, and sub 1's codeword 2 has no members left
+    ties = [(1, [0.0, 0.0]), (2, [2.0, 0.0]), (3, [1.0, 0.0]), (4, [1.0, 1.0])]
+    codes, books = _both_paths(
+        spark, monkeypatch, "pq_train_encode", ties,
+        n_sub=2, k_sub=2, iters=1, quant=1, dim=2,
+    )
+    assert codes == [
+        (1, 0, 1), (1, 1, 1), (2, 0, 2), (2, 1, 1),
+        (3, 0, 1), (3, 1, 1), (4, 0, 1), (4, 1, 1),
+    ]
+    assert books == [(1, 0, 0, 0), (1, 1, 1, 0), (2, 0, 0, 2)]
+    # train on ids 1..12 (seeds included), encode all 24
+    codes, _ = _both_paths(
+        spark, monkeypatch, "pq_train_encode", _ragged(),
+        train=_ragged()[:12], **pq,
+    )
+    assert len({c[0] for c in codes}) == 24
 
 
 @pytest.mark.parametrize(
@@ -141,7 +187,9 @@ def test_kmeans_exact_driver_path_matches_distributed(spark, monkeypatch):
         "v5_kmeans_exact",
         "v6_ivf_probe_exact",
         "v7_hierarchical_assign",
+        "v8_pq_adc",
         "v10_ivf_pq",
+        "v18_pq_sampled_train",
         "v19_hier_assign_scaled",
         "v20_ivf_partition_pruning",
         "t24_semantic_dedup",
@@ -151,8 +199,9 @@ def test_kmeans_exact_driver_path_matches_distributed(spark, monkeypatch):
 def test_kmeans_callers_forced_distributed_match_oracle(
     spark, sf_dir, monkeypatch, name
 ):
-    """Every kmeans_exact caller, with the distributed Lloyd rounds
-    forced (cap -1), still matches its DuckDB oracle at sf0.01."""
+    """Every caller of the exact Lloyd core (kmeans_exact and
+    pq_train_encode), with the distributed Lloyd rounds forced (cap
+    -1), still matches its DuckDB oracle at sf0.01."""
     import os
 
     from openseizuredatabase_spark.functions import ann
@@ -554,30 +603,35 @@ def test_np_quantize_matches_spark_round_cast(spark, quant):
             ).collect()
 
 
-def test_null_elements_become_int64_min_and_nan_raises(spark, monkeypatch):
-    """A null element stays null in ``quantize_col`` and becomes the
-    int64 minimum in the numpy groups — the value the pandas
-    NaN-to-int64 conversion gave it on the k-means driver path — on
-    both k-means paths; a NaN raises like Spark's cast."""
+def test_null_elements_and_nan_raise(spark, monkeypatch):
+    """A null element stays null in ``quantize_col`` and raises
+    ``ArithmeticError`` in the numpy groups every kernel reads, as a NaN
+    does (Spark's cast raises on NaN): k-means and PQ each raise on
+    both the driver path and the distributed one."""
     import pyarrow as pa
 
-    from openseizuredatabase_spark.functions.ann import (
-        _np_length_groups,
-        quantize_col,
-    )
+    from openseizuredatabase_spark.functions import ann
 
     df = spark.createDataFrame([([1.5, None],)], "d array<double>")
-    assert df.select(quantize_col(F.col("d"), 10)).head()[0] == [15, None]
-    lo = np.iinfo(np.int64).min
-    batch = pa.record_batch({"__v": pa.array([[0.0015, None], [2.0]])})
-    groups = {L: mat.tolist() for L, mat, _ in _np_length_groups(batch, "__v", 1000)}
-    assert groups == {1: [[2000]], 2: [[2, lo]]}
-    with pytest.raises(ArithmeticError):
-        list(_np_length_groups(
-            pa.record_batch({"__v": pa.array([[float("nan")]])}), "__v", 1000
-        ))
-    rows = [(1, [0.0, 1.0]), (2, [5.0, None]), (3, [1.0, 1.0]),
-            (4, [None, None]), (5, [4.0, 4.0])]
-    assign, cents = _kmeans_both_paths(spark, monkeypatch, rows, k=2, iters=2, quant=10)
-    assert assign == [(1, 2), (2, 2), (3, 2), (4, 1), (5, 2)]
-    assert cents == [(1, 0, lo), (1, 1, lo), (2, 0, 25), (2, 1, -2305843009213693937)]
+    assert df.select(ann.quantize_col(F.col("d"), 10)).head()[0] == [15, None]
+    for vals, quant in (([[0.0015, None], [2.0]], 1000), ([[1, None]], None),
+                        ([[float("nan")]], 1000)):
+        with pytest.raises(ArithmeticError):
+            list(ann._np_length_groups(
+                pa.record_batch({"__v": pa.array(vals)}), "__v", quant
+            ))
+    emb = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [5.0, None]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for cap in (ann._KMEANS_DRIVER_ROW_CAP, -1):
+        monkeypatch.setattr(ann, "_KMEANS_DRIVER_ROW_CAP", cap)
+        for frames in (
+            lambda: ann.kmeans_exact(emb, k=2, iters=2, quant=10),
+            lambda: ann.pq_train_encode(emb, n_sub=2, k_sub=2, quant=10, dim=2),
+        ):
+            # the driver path raises ArithmeticError itself; a worker's
+            # reaches the driver wrapped in a PythonException
+            with pytest.raises(Exception, match="null element"):
+                for f in frames():
+                    f.collect()

@@ -173,9 +173,12 @@ def test_every_cap_constant_is_forced_by_a_test():
     assert not unforced, unforced
 
 
-@pytest.mark.parametrize("name", ["v5_kmeans_exact", "v15_dbscan_grid"])
+@pytest.mark.parametrize(
+    "name",
+    ["v5_kmeans_exact", "v8_pq_adc", "v15_dbscan_grid", "v18_pq_sampled_train"],
+)
 def test_driver_path_build_is_one_unshuffled_job(spark, sf_dir, monkeypatch, name):
-    """Under the caps, building v5 or v15 runs exactly one job — the
+    """Under the caps, building v5, v8, v15 or v18 runs exactly one job — the
     gate's bounded collect — which writes no shuffle bytes, and the
     frame the gate reads carries no lambda function (quantization runs
     in numpy on the driver, not in an interpreted ``transform``) and

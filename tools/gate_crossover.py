@@ -4,6 +4,8 @@ per (gate, size, shape, path) cell, and report peak memory.
 
     SPARK_DRIVER_MEMORY=4g python tools/gate_crossover.py --gate kmeans \\
         --dir /tmp/crossover --sizes 2000 20000 60000 200000 600000
+    SPARK_DRIVER_MEMORY=4g python tools/gate_crossover.py --gate pq \\
+        --dir /tmp/crossover --sizes 2000 3750 20000 60000 200000 600000
     python tools/gate_crossover.py --gate cc --dir /tmp/crossover \\
         --sizes 10000 100000 1000000 2000000 --shapes chain forest
     python tools/gate_crossover.py --gate dbscan --dir /tmp/crossover \\
@@ -14,6 +16,9 @@ Gates, the size they count and what runs:
 - ``kmeans``: vectors; ``functions/ann.kmeans_exact`` (k=8, iters=2, as
   v5 calls it) on 64-dim normal embeddings; the cap is
   ``ann._KMEANS_DRIVER_ROW_CAP``.
+- ``pq``: vectors; ``functions/ann.pq_train_encode`` in v8's shape
+  (``n_sub=16``, ``k_sub=32``, iters=2) on the same embeddings; its
+  gate is the k-means cap divided by ``n_sub``.
 - ``cc``: edges; ``operators/dedup.connected_components`` on a
   ``chain`` (one path through randomly numbered nodes, the eps-chain
   shape) or a ``forest`` (random trees of 100 nodes); the cap is
@@ -24,10 +29,10 @@ Gates, the size they count and what runs:
   both its point collect and its grid candidate pairs (reported as
   ``candidates``).
 
-Paths: ``driver`` (cap at the input size; for dbscan the largest cap a
-Spark limit takes), ``distributed`` (cap = -1) and ``default`` (the
-module cap as committed, so above it the failed gate's bounded collect
-is paid too). Each run builds the query and runs one action on every
+Paths: ``driver`` (cap at the input size, times n_sub for pq; for dbscan
+the largest cap a Spark limit takes), ``distributed`` (cap = -1) and
+``default`` (the module cap as committed, so above it the failed gate's
+bounded collect is paid too). Each run builds the query and runs one action on every
 output, as the callers do: one warm-up, then the median of ``--reps``.
 One JSON line per run: ``wall_s``; ``gate_s``, the part of it spent in
 the gate's own bounded collect (above the cap on the ``default`` path,
@@ -50,6 +55,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIM = 64
 # the largest cap bounded_collect can pass to a Spark limit (an int)
 SPARK_LIMIT_CAP = 2**31 - 2
+PQ_SUBS = 16  # v8's n_sub
 
 
 def _vmhwm_mb(pid: int) -> float:
@@ -130,7 +136,12 @@ def _candidates(path: str) -> int:
     return qv._v15_candidates(*qv._v15_cells(cx, cy)[2:])
 
 
-WRITERS = {"kmeans": _write_embeddings, "cc": _write_edges, "dbscan": _write_points}
+WRITERS = {
+    "kmeans": _write_embeddings,
+    "pq": _write_embeddings,
+    "cc": _write_edges,
+    "dbscan": _write_points,
+}
 
 
 def _run(gate: str, path: str, size: int, mode: str, reps: int) -> dict:
@@ -144,21 +155,25 @@ def _run(gate: str, path: str, size: int, mode: str, reps: int) -> dict:
 
     spark = get_spark("gate_crossover")
     df = spark.read.parquet(path)
-    if gate == "kmeans":
+    if gate in ("kmeans", "pq"):
         mod, name = ann, "_KMEANS_DRIVER_ROW_CAP"
         outputs = lambda: [
             o.agg(F.count(F.lit(1)))
-            for o in ann.kmeans_exact(df, k=8, iters=2, quant=1000)
+            for o in (
+                ann.kmeans_exact(df, k=8, iters=2, quant=1000)
+                if gate == "kmeans"
+                else ann.pq_train_encode(df, n_sub=PQ_SUBS, k_sub=32, dim=DIM)
+            )
         ]
     else:
         mod, name = dedup, "_CC_DRIVER_EDGE_CAP"
         op = dedup.connected_components if gate == "cc" else q_vector._v15_dbscan
         outputs = lambda: [op(df).agg(F.count(F.lit(1)))]
     if mode != "default":
-        driver_cap = SPARK_LIMIT_CAP if gate == "dbscan" else size
+        driver_cap = {"dbscan": SPARK_LIMIT_CAP, "pq": size * PQ_SUBS}.get(gate, size)
         setattr(mod, name, driver_cap if mode == "driver" else -1)
     # time the gate's own bounded collect inside the module that calls it
-    gate_mod = {"kmeans": ann, "cc": dedup, "dbscan": q_vector}[gate]
+    gate_mod = {"kmeans": ann, "pq": ann, "cc": dedup, "dbscan": q_vector}[gate]
     real_collect, gate_t = gate_mod.bounded_collect, []
 
     def timed_collect(frame, cap):

@@ -1,5 +1,5 @@
 """Per-query profiler: separate plan-build/planning cost from execution
-cost, count the Spark jobs+stages one noop-sink run schedules, and dump
+cost, count the Spark jobs and stages each side schedules, and dump
 ``explain("formatted")`` for plan-diff evidence.
 
 Usage:
@@ -7,11 +7,15 @@ Usage:
       [--explain-dir DIR]
 
 For each query prints one line:
-  name  build_s  exec_s(min of N)  jobs  stages  tasks
+  name  build_s  exec_s  build_jobs  build_stages  exec_jobs  exec_stages
 
 ``build_s`` is the QUERIES[name].fn() call (plan construction; for
 iterative operators this includes their driver-loop jobs, such as
-bounded collects and census counts, exactly as bench.py charges them). ``exec_s`` is the noop write alone.
+bounded collects and census counts, exactly as bench.py charges them).
+``exec_s`` is the noop write alone. The build and the write each run
+under their own job group, so ``build_*`` counts the build's jobs and
+``exec_*`` the write's. Times are the minimum over ``--runs``, counts
+the minimum too: the first run may add a fresh read's schema job.
 """
 
 from __future__ import annotations
@@ -42,34 +46,34 @@ def main() -> int:
     sc = spark.sparkContext
     st = sc.statusTracker()
 
-    print(f"{'query':32s} {'build_s':>8s} {'exec_s':>8s} {'jobs':>5s} "
-          f"{'stages':>7s}")
+    def grouped(group, fn):
+        """Run ``fn`` under job group ``group``: (seconds, jobs, stages)."""
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.time()
+            out = fn()
+            secs = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = st.getJobIdsForGroup(group) or []
+        stages = sum(len(ji.stageIds) for ji in map(st.getJobInfo, jobs) if ji)
+        return out, (secs, len(jobs), stages)
+
+    print(f"{'query':32s} {'build_s':>8s} {'exec_s':>8s} {'build_jobs':>10s} "
+          f"{'build_stages':>12s} {'exec_jobs':>9s} {'exec_stages':>11s}")
     for name in args.queries:
         spec = QUERIES[name]
         sc.setJobDescription(f"profile:{name}")
-        best_exec = None
-        build_s = None
+        build, exe = [], []
         for r in range(args.runs):
-            t0 = time.time()
-            df = spec.fn(spark, args.sf)
-            t1 = time.time()
-            sc.setJobGroup(f"prof-{name}-{r}", name)
-            t2 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            t3 = time.time()
-            jobs = st.getJobIdsForGroup(f"prof-{name}-{r}") or []
-            n_stages = 0
-            for j in jobs:
-                ji = st.getJobInfo(j)
-                if ji is not None:
-                    n_stages += len(ji.stageIds)
-            if build_s is None or (t1 - t0) < build_s:
-                build_s = t1 - t0
-            if best_exec is None or (t3 - t2) < best_exec:
-                best_exec = t3 - t2
-                best_jobs, best_stages = len(jobs), n_stages
-            print(f"  run{r}: build {t1 - t0:7.3f}  exec {t3 - t2:7.3f}",
-                  flush=True)
+            df, b = grouped(f"prof-{name}-{r}-build", lambda: spec.fn(spark, args.sf))
+            _, e = grouped(f"prof-{name}-{r}-exec",
+                           lambda: df.write.format("noop").mode("overwrite").save())
+            build.append(b)
+            exe.append(e)
+            print(f"  run{r}: build {b[0]:7.3f} ({b[1]} jobs)  "
+                  f"exec {e[0]:7.3f} ({e[1]} jobs)", flush=True)
             drop_persisted(spark)  # hygiene between runs (bench.py discipline)
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
@@ -78,8 +82,10 @@ def main() -> int:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
             drop_persisted(spark)
-        print(f"{name:32s} {build_s:8.3f} {best_exec:8.3f} "
-              f"{best_jobs:5d} {best_stages:7d}")
+        (bs, bj, bst), (es, ej, est) = (
+            [min(col) for col in zip(*runs)] for runs in (build, exe)
+        )
+        print(f"{name:32s} {bs:8.3f} {es:8.3f} {bj:10d} {bst:12d} {ej:9d} {est:11d}")
         sc.setJobDescription(None)
     return 0
 
