@@ -620,9 +620,14 @@ def validation_rule_tags(
             if invalid_ids
             else F.lit(False)
         )
+    # an OR of isNull (never NULL itself) fires exactly when ``missing``
+    # is non-empty, without a per-row interpreted lambda in the stage
+    any_missing = F.lit(False)
+    for f in required_fields:
+        any_missing = any_missing | F.col(f).isNull()
     reason = F.when(invalid_flag, "marked_invalid_in_config")
     reason = (
-        reason.when(F.size(missing) > 0, "Missing required fields")
+        reason.when(any_missing, "Missing required fields")
         .when(dp.isNull(), "Event has no datapoints field")
         .when(~dp.startswith("["), "Event datapoints is not a list")
         .when(dp_count < min_datapoints, "Event has insufficient datapoints")

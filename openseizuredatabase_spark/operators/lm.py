@@ -626,20 +626,19 @@ def hashed_classifier_scores(
     # single rounding point per step, so the fit is byte-identical to
     # the historical relational loop (pinned by tests/test_lm.py and the
     # t34 oracle): z is an exact order-free int64 dot product whether
-    # summed by np.add.reduceat or a hash aggregate; p replicates
-    # Spark's HALF_UP round(double, 0) via the exact floor/frac
-    # comparison (k+0.5 is representable, so the binary value and the
-    # shortest-decimal BigDecimal.valueOf see the same side of every
-    # tie boundary); the weight update runs the identical IEEE-754
-    # double expression lr·g/(ndocs·1e6) on the driver. The only
+    # summed by np.add.reduceat or a hash aggregate; p and the weight
+    # delta replicate Spark's HALF_UP round(double, 0) through
+    # ann._np_quantize, the package's one copy of that rule; the weight
+    # update runs the identical IEEE-754 double expression
+    # lr·g/(ndocs·1e6) on the driver. The only
     # engine change is TRAINING-p's exp() moving JVM→libm, which can
     # differ on a measure-zero boundary the docstring already carves
     # out (and libm is what the DuckDB oracle twin uses). Final SCORES
     # are still computed in-plan by the JVM exactly as before.
-    import math
-
     import numpy as np
     from pyspark.sql import types as T
+
+    from openseizuredatabase_spark.functions.ann import _np_quantize
 
     spark = docs.sparkSession
     ydoc = nt.select(
@@ -706,8 +705,7 @@ def hashed_classifier_scores(
                     v = 1000000.0 / (
                         1.0 + np.exp(-(z.astype(np.float64) / 1.0e12))
                     )
-                    fl = np.floor(v)
-                    p = (fl + (v - fl >= 0.5)).astype(np.int64)
+                    p = _np_quantize(v, 1)
                 acc = np.zeros(nb1, dtype=np.int64)
                 np.add.at(acc, idx, np.repeat(p - ym, lens) * xs)
                 seen = np.unique(idx)
@@ -726,15 +724,6 @@ def hashed_classifier_scores(
             .collect()
         )
 
-    def _round_half_up(v: float) -> int:
-        """BigDecimal HALF_UP at scale 0 (ties away from zero) on the
-        double's exact value — matches Spark round(double, 0) for every
-        |v| < 2^52 (see the tie-boundary argument above)."""
-        a = abs(v)
-        fl = math.floor(a)
-        r = fl + (1 if a - fl >= 0.5 else 0)
-        return -r if v < 0.0 else r
-
     wd: dict[int, int] = {}
     ndocs = 0
     for it in range(iters):
@@ -743,10 +732,9 @@ def hashed_classifier_scores(
             ndocs = sum(r["nd"] for r in rows)
             if ndocs == 0:
                 break
-        for r in rows:
-            delta = _round_half_up(
-                lr * float(r["g"]) / (float(ndocs) * 1000000.0)
-            )
+        g = np.array([float(r["g"]) for r in rows], dtype=np.float64)
+        deltas = _np_quantize(lr * g / (float(ndocs) * 1000000.0), 1)
+        for r, delta in zip(rows, deltas.tolist()):
             wd[r["b"]] = wd.get(r["b"], 0) - delta
     from openseizuredatabase_spark.functions.literal import literal_df
 

@@ -32,6 +32,7 @@ from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
 from openseizuredatabase_spark.sources.width import cores, rows_width, session_width, stream_width
+from openseizuredatabase_spark.streaming.replay import replay_to_memory
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -775,29 +776,18 @@ def _stream_events(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
         pqs.column(i).name: pqs.column(i).physical_type
         for i in range(len(pqs))
     }
-    if getattr(arrow_ts, "unit", None) == "ns" and phys.get("ts") == "INT64":
-        raw_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name, T.LongType() if f.name == "ts" else f.dataType
-                )
-                for f in ev.schema.fields
-            ]
-        )
-        return (
-            spark.readStream.schema(raw_schema)
-            .parquet(stream_dir)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    ts_schema = T.StructType(
+    raw_ns = getattr(arrow_ts, "unit", None) == "ns" and phys.get("ts") == "INT64"
+    ts_type = T.LongType() if raw_ns else T.TimestampType()
+    schema = T.StructType(
         [
-            T.StructField(
-                f.name, T.TimestampType() if f.name == "ts" else f.dataType
-            )
+            T.StructField(f.name, ts_type if f.name == "ts" else f.dataType)
             for f in ev.schema.fields
         ]
     )
-    return spark.readStream.schema(ts_schema).parquet(stream_dir)
+    stream = spark.readStream.schema(schema).parquet(stream_dir)
+    if raw_ns:
+        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return stream
 
 
 @query(
@@ -835,25 +825,12 @@ def _stream_events(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
     "the streaming operator itself is what the cross-check pins.",
 )
 def s10_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import session_clusters
 
     stream = _stream_events(spark, sf_dir, "s10_events_")
     out = session_clusters(stream, "ts", ["user_id"], gap="30 minutes")
-    name = f"s10_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
-        spark.table(name)
+        replay_to_memory(spark, sf_dir, out, "complete")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -1095,24 +1072,11 @@ def a15_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "date_trunc buckets (emitted as integer yyyymmdd keys).",
 )
 def s11_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import windowed_counts
 
     stream = _stream_events(spark, sf_dir, "s11_events_")
     out = windowed_counts(stream, "ts", ["event_type"], window_duration="1 day")
-    name = f"s11_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, out, "complete").select(
         F.date_format("bucket_start", "yyyyMMdd").cast("long").alias("day_num"),
         "event_type",
         "n",
@@ -1133,26 +1097,15 @@ def s11_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "so the emission equals batch DISTINCT and carries a full oracle.",
 )
 def s13_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import (
         streaming_distinct,
     )
 
     stream = _stream_events(spark, sf_dir, "s13_events_")
     out = streaming_distinct(stream, "ts", ["user_id", "event_type"])
-    name = f"s13_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select("user_id", "event_type")
+    return replay_to_memory(spark, sf_dir, out, "append").select(
+        "user_id", "event_type"
+    )
 
 
 @query(
@@ -1225,7 +1178,6 @@ def f9_flag_requirements(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s12_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1288,21 +1240,10 @@ def s12_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_duration="1 hour",
         watermark="30 minutes",
     )
-    name = f"s12_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     # expected: on-time 02:00 window (n=30) + transient late 00:00 window
     # (n=10); the still-open 03:00 window is withheld by the watermark.
     # bucket as epoch seconds so the oracle compares integers.
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, out, "append").select(
         F.unix_timestamp("bucket_start").alias("bucket_s"),
         "event_type",
         "n",
@@ -1471,8 +1412,6 @@ def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming path the same value-hash gate as its batch twin.",
 )
 def s15_streaming_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.detection.osd_alg import OsdSettings
     from openseizuredatabase_spark.streaming.sessionize import (
         streaming_alarm_machine,
@@ -1490,19 +1429,8 @@ def s15_streaming_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flag",
         OsdSettings(sample_period=5, warn_time=5, alarm_time=10),
     )
-    name = f"s15_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
-        spark.table(name)
+        replay_to_memory(spark, sf_dir, out, "append")
         .groupBy("user_id")
         .agg(
             F.count(F.when(F.col("alarmState") == 2, 1)).alias(
@@ -1708,8 +1636,6 @@ def j8_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "same pairs, computed with bounded state instead of a sort.",
 )
 def s16_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import (
         stream_interval_join,
     )
@@ -1740,18 +1666,7 @@ def s16_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.key").alias("user_id"),
         (F.unix_micros("err_ts") - F.unix_micros("clk_ts")).alias("gap_us"),
     )
-    name = f"s16_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name)
+    return replay_to_memory(spark, sf_dir, out, "append")
 
 
 def _a16_oracle() -> str:
@@ -2201,26 +2116,13 @@ def j9_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tumbling's, still constant and watermark-evicted.",
 )
 def s17_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import sliding_counts
 
     stream = _stream_events(spark, sf_dir, "s17_events_")
     out = sliding_counts(
         stream, "ts", ["event_type"], window_duration="2 days", slide="1 day"
     )
-    name = f"s17_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, out, "complete").select(
         F.date_format("bucket_start", "yyyyMMdd").cast("long").alias(
             "win_start"
         ),
@@ -2269,8 +2171,6 @@ def s17_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "harness.",
 )
 def s20_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     stream = _stream_events(spark, sf_dir, "s20_events_")
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -2282,18 +2182,7 @@ def s20_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    name = f"s20_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, agg, "complete").select(
         "user_id",
         F.col("session_window.start").cast("long").alias("session_start"),
         F.col("session_window.end").cast("long").alias("session_end"),
@@ -2332,7 +2221,6 @@ def s20_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s22_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-    import uuid
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -2379,10 +2267,7 @@ def s22_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with stream_width(spark, sf_dir):
         q = (
             stream.writeStream.foreachBatch(upsert)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix=f"s22_ckpt_{uuid.uuid4().hex[:6]}_"),
-            )
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="s22_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2539,8 +2424,6 @@ def a22_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle-free however wide the stream fans out.",
 )
 def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import (
         enriched_counts,
     )
@@ -2553,18 +2436,7 @@ def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = enriched_counts(
         stream, dim, "ts", "user_id", ["segment"], window_duration="1 day"
     )
-    name = f"s18_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, out, "complete").select(
         F.date_format("bucket_start", "yyyyMMdd").cast("long").alias(
             "win_start"
         ),
@@ -2849,8 +2721,6 @@ def a25_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical history build + containment join.",
 )
 def s19_streaming_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     ev = _t(spark, sf_dir, "events")
     wl = Window.partitionBy("user_id").orderBy("ts", "event_id")
     log = ev.filter(F.col("event_type") != "purchase").select(
@@ -2888,18 +2758,7 @@ def s19_streaming_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window(F.col("ts"), "1 day"), F.col("state"))
         .agg(F.count(F.lit(1)).alias("n_purchases"))
     )
-    name = f"s19_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            joined.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    return replay_to_memory(spark, sf_dir, joined, "complete").select(
         F.date_format(F.col("window.start"), "yyyyMMdd")
         .cast("long")
         .alias("day_key"),
@@ -4371,8 +4230,6 @@ def a30_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "post-sink per-lid rollup is batch-side.",
 )
 def s23_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.streaming.sessionize import (
         stream_interval_join,
     )
@@ -4405,19 +4262,8 @@ def s23_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
         how="leftOuter",
     )
-    name = f"s23_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            j.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
-        spark.table(name)
+        replay_to_memory(spark, sf_dir, j, "append")
         .groupBy("lid")
         .agg(
             F.count("rid").cast("long").alias("n_match"),
@@ -4926,8 +4772,6 @@ _S25_WALK = tolerance_walk_sql("user_id, sid")
 def s25_streaming_merge_grouping(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from openseizuredatabase_spark.operators import curator as cur
 
     stream = _stream_events(spark, sf_dir, "s25_events_")
@@ -4980,18 +4824,7 @@ def s25_streaming_merge_grouping(
             ),
         )
     )
-    name = f"s25_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    out = spark.table(name)
+    out = replay_to_memory(spark, sf_dir, agg, "complete")
     merged = F.when(
         F.col("n_members") > 1,
         cur.tolerance_dedup_fold(F.col("all_dps"), "t", 100),

@@ -31,7 +31,7 @@ from openseizuredatabase_spark.functions.hashing import (
 from openseizuredatabase_spark.sources.lake import morton_sql
 from openseizuredatabase_spark.sources import tables
 from openseizuredatabase_spark.sources.tables import load_table, table_meta
-from openseizuredatabase_spark.sources.width import stream_width
+from openseizuredatabase_spark.streaming.replay import replay_to_memory
 
 from openseizuredatabase_spark.plans._core import (  # noqa: F401
     QUERIES,
@@ -542,8 +542,6 @@ def _s24_oracle() -> str:
     "machine equals the batch walk row for row.",
 )
 def s24_streaming_osd_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     import numpy as np
 
     from openseizuredatabase_spark.detection.osd_alg import OsdSettings
@@ -601,19 +599,8 @@ def s24_streaming_osd_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flag",
         OsdSettings(sample_period=5.0, warn_time=5.0, alarm_time=10.0),
     )
-    name = f"s24_{uuid.uuid4().hex[:8]}"
-    with stream_width(spark, sf_dir):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
-        spark.table(name)
+        replay_to_memory(spark, sf_dir, out, "append")
         .groupBy("event_id")
         .agg(
             F.count(F.lit(1)).alias("n_dps"),

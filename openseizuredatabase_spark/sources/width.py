@@ -8,12 +8,17 @@ state stores by measured rows; the map-spread rules
 the cores before CPU-heavy map work, never before a driver gate's
 bounded collect. Widths change layout only, never
 result membership; the oracle sweep re-verifies every query under them.
+
+``stream_width`` owns every session conf a finite streaming replay
+changes: the rows-rule shuffle width and, for a local checkpoint, the
+checkpoint file manager.
 """
 
 from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -107,34 +112,61 @@ def spread_cpu_dense(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df.repartition(want) if want > 1 else df
 
 
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _local_checkpoint(spark: SparkSession) -> bool:
+    """Whether a replay's checkpoint lands on the local file system: the
+    session's ``checkpointLocation`` (or, unset, the temp dir Spark
+    picks) resolved against ``fs.defaultFS`` when it has no scheme."""
+    loc = spark.conf.get("spark.sql.streaming.checkpointLocation", None) or "/"
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = hadoop.get("fs.defaultFS", "file:///")
+    return (urlparse(loc).scheme or urlparse(default_fs).scheme) == "file"
+
+
 @contextmanager
 def stream_width(spark: SparkSession, sf_dir: str, table: str = "events"):
-    """Set the shuffle width, and so the streaming state-store count, by
-    the rows rule over ``table``'s parquet footers for the duration of
-    one availableNow run; the session conf is restored on exit, unset
-    again if it was unset on entry.
+    """Set every session conf a finite availableNow replay changes, for
+    the duration of one run; each is restored on exit, unset again if it
+    was unset on entry.
 
-    Every stateful operator commits one store per shuffle partition per
-    micro-batch: at the session width a small replay paid 32 commits x
-    N operators of pure file latency per batch (s23: 58-95 s of summed
-    commit time against ~66k state rows). A non-local table keeps the
-    session width, the conf-driven production value."""
+    - ``spark.sql.shuffle.partitions``, and so the streaming state-store
+      count, by the rows rule over ``table``'s parquet footers. Every
+      stateful operator commits one store per shuffle partition per
+      micro-batch: at the session width a small replay paid 32 commits
+      x N operators of pure file latency per batch (s23: 58-95 s of
+      summed commit time against ~66k state rows). A non-local table
+      keeps the session width, the conf-driven production value.
+    - ``spark.sql.streaming.checkpointFileManagerClass`` to
+      ``FileSystemBasedCheckpointFileManager``, only when the checkpoint
+      is local (``_local_checkpoint``): the default FileContext manager
+      forks ``readlink`` on each checkpoint rename where the JVM has no
+      libhadoop (``streaming.replay.replay_to_memory`` has the counts),
+      and on a shared store its atomic rename keeps the checkpoint safe."""
     import pyarrow.parquet as pq
 
+    confs = {}
     files = local_parquet_files(os.path.join(sf_dir, f"{table}.parquet"))
-    if files is None:
-        yield
-        return
-    n = _sampled_sum(files, lambda f: pq.ParquetFile(f).metadata.num_rows)
-    key = "spark.sql.shuffle.partitions"
-    # None when the conf was never set: a vanilla session gets it unset
-    # again, not an explicit "32"
-    sess = spark.conf.get(key, None)
-    spark.conf.set(key, str(rows_width(spark, n)))
+    if files is not None:
+        n = _sampled_sum(files, lambda f: pq.ParquetFile(f).metadata.num_rows)
+        confs["spark.sql.shuffle.partitions"] = str(rows_width(spark, n))
+    if _local_checkpoint(spark):
+        confs[_CKPT_MANAGER] = _FS_CKPT_MANAGER
+    # None when a conf was never set: a vanilla session gets it unset
+    # again, not an explicit default
+    before = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        if sess is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, sess)
+        for key, value in before.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

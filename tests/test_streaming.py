@@ -513,3 +513,60 @@ def test_session_window_matches_gap_islands(spark, tmp_path_factory):
         (2, base + td(seconds=10), base + td(seconds=130), 1),
         (2, base + td(seconds=500), base + td(seconds=620), 1),
     ]
+
+
+STREAMING_QUERIES = [
+    "s10_streaming_sessionize",
+    "s11_streaming_tumbling",
+    "s12_streaming_late_data",
+    "s13_streaming_dedup",
+    "s15_streaming_detector",
+    "s16_streaming_interval_join",
+    "s17_streaming_sliding",
+    "s18_streaming_enrichment",
+    "s19_streaming_temporal_join",
+    "s20_streaming_session_window",
+    "s22_stream_upsert",
+    "s23_stream_outer_join",
+    "s24_streaming_osd_detector",
+    "s25_streaming_merge_grouping",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    from openseizuredatabase_spark.plans.oracle_check import _duckdb_conn
+
+    return _duckdb_conn(sf_dir)
+
+
+@pytest.mark.parametrize("confs", ["replay_context", "session_defaults"])
+@pytest.mark.parametrize("name", STREAMING_QUERIES)
+def test_streaming_oracle_with_and_without_replay_context(
+    spark, sf_dir, oracle_con, monkeypatch, name, confs
+):
+    """The replay context changes layout and checkpoint I/O only: every
+    streaming query matches its oracle under it and under the session's
+    own confs. Either way the replay leaves no temp view behind (the
+    returned frame is collected after its sink's view is dropped) and no
+    session conf changed."""
+    import contextlib
+
+    from openseizuredatabase_spark.plans import q_relational
+    from openseizuredatabase_spark.plans.oracle_check import compare_query
+    from openseizuredatabase_spark.plans.registry import QUERIES
+    from openseizuredatabase_spark.sources import width
+    from openseizuredatabase_spark.streaming import replay
+
+    if confs == "session_defaults":
+        for mod in (replay, q_relational):
+            monkeypatch.setattr(
+                mod, "stream_width", lambda *a, **k: contextlib.nullcontext()
+            )
+    keys = ("spark.sql.shuffle.partitions", width._CKPT_MANAGER)
+    conf_before = {k: spark.conf.get(k, None) for k in keys}
+    views_before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    ok, msg = compare_query(spark, oracle_con, QUERIES[name], sf_dir)
+    assert ok, f"{name} ({confs}): {msg}"
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views_before
+    assert {k: spark.conf.get(k, None) for k in keys} == conf_before

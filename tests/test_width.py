@@ -116,9 +116,42 @@ def test_size_string_max_partition_bytes(
     assert ok, f"{name} with maxPartitionBytes={value}: {msg}"
 
 
-def test_stream_width_leaves_an_unset_conf_unset(spark, sf_dir):
-    key = "spark.sql.shuffle.partitions"
-    with _conf(spark, key, None):
+_CKPT_LOC = "spark.sql.streaming.checkpointLocation"
+
+
+@pytest.mark.parametrize(
+    "key, preset",
+    [
+        ("spark.sql.shuffle.partitions", "7"),
+        (width._CKPT_MANAGER, "org.example.PresetCheckpointFileManager"),
+    ],
+    ids=["shuffle", "ckpt_manager"],
+)
+@pytest.mark.parametrize("state", ["unset", "set"])
+def test_stream_width_restores_each_conf(spark, sf_dir, key, preset, state):
+    before = None if state == "unset" else preset
+    with _conf(spark, _CKPT_LOC, None), _conf(spark, key, before):
         with width.stream_width(spark, sf_dir):
-            assert spark.conf.get(key, None) is not None
+            inside = spark.conf.get(key, None)
+            assert inside is not None and inside != preset
+            if key == width._CKPT_MANAGER:
+                assert inside == width._FS_CKPT_MANAGER
+        assert spark.conf.get(key, None) == before
+
+
+@pytest.mark.parametrize(
+    "loc, local",
+    [(None, True), ("file:/tmp/ckpt", True), ("/tmp/ckpt", True),
+     ("hdfs://nn/ckpt", False), ("s3a://bucket/ckpt", False)],
+)
+def test_checkpoint_manager_only_for_a_local_checkpoint(spark, sf_dir, loc, local):
+    # the location is only set, never used: no stream starts here
+    key = width._CKPT_MANAGER
+    with _conf(spark, _CKPT_LOC, loc), _conf(spark, key, None):
+        assert width._local_checkpoint(spark) is local
+        with width.stream_width(spark, sf_dir):
+            got = spark.conf.get(key, None)
+            # the shuffle width is set either way
+            assert spark.conf.get("spark.sql.shuffle.partitions", None) is not None
         assert spark.conf.get(key, None) is None
+    assert got == (width._FS_CKPT_MANAGER if local else None)
